@@ -284,7 +284,7 @@ object SparkEntry {
     // doubled form genuinely differs (r13 review) — the invariant is
     // vacuous there, so such docs (and null texts) gate ok=1 to match the
     // mirror's stated constant. Measured 0 violations at sf0.01 and sf0.1
-    // before gating (GateProbe r13).
+    // before gating (BASELINE.md round-13 second wave).
     "q_minhash_sig_prod" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       // shingle width threaded EXPLICITLY to both signature calls AND the
@@ -316,7 +316,8 @@ object SparkEntry {
     // the PARITY count — two winnowings of the same text under different
     // hash functions select at the same ~2/(w+1) density, so the counts
     // track; measured ratio range [0.667, 1.5] across both sf corpora
-    // (GateProbe r13), so the 2x band has >= 33% relative margin. The
+    // (BASELINE.md round-13 second wave), so the 2x band has >= 33%
+    // relative margin. The
     // parity count doubles as the oracle-checked column (the mirror
     // recomputes it exactly).
     "q_winnow_fp_prod" -> ((s, dir) => {
@@ -457,7 +458,7 @@ object SparkEntry {
     // margin (cosine over the mean of both k=4 neighborhoods), which
     // cancels hubness where a raw cosine threshold miscalibrates. The
     // 1.25 floor sits at the measured sf0.01 margin median
-    // (tools/MarginProbe: range 1.07-1.52), so the filter is a real
+    // (range 1.07-1.52; 15 of 25 sources clear it), so the filter is a real
     // split, not a pass-through.
     "q_margin_mine" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
@@ -472,7 +473,7 @@ object SparkEntry {
     // from the probe (2 cells, ADC pool 30) and are exactly re-ranked by
     // quantized-integer cosine; backward neighborhoods stay brute over
     // the batch (bounded). The 1.4 floor sits at the measured sf0.01
-    // stored-margin median (tools/MarginProbe: range 1.15-1.53).
+    // stored-margin median (range 1.15-1.53; 6 of 10 sources clear it).
     "q_margin_mine_stored" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       operators.AnnIndexStore.marginMine(e.filter(col("vec_id") < 10),
@@ -1184,16 +1185,11 @@ object SparkEntry {
       // Replay input is a per-sf-dir cached fixture (same discipline as
       // the multimodal fixtures): the bench times the streaming replay —
       // the operator under test — not a per-invocation fixture write.
-      val in = s"/tmp/graft_cache/${new java.io.File(dir).getName}/srj_in"
-      withPathLock(in) {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$in/_SUCCESS")))
-          Tables.events(s, dir)
-            .select(col("user_id").as("k0"), col("ts"),
-              col("event_id").as("id0"))
-            .repartition(4)
-            .write.mode("overwrite").parquet(in)
-      }
+      val in = maintained(dir, "srj_in")(hasSuccess)(in =>
+        Tables.events(s, dir)
+          .select(col("user_id").as("k0"), col("ts"), col("event_id").as("id0"))
+          .repartition(4)
+          .write.mode("overwrite").parquet(in))
       val work = java.nio.file.Files.createTempDirectory("graft_srj_q")
       // The streaming query runs in a FRESH session (shared SparkContext,
       // private SQLConf rebuilt from builder/SparkConf defaults —
@@ -1247,25 +1243,8 @@ object SparkEntry {
     // upsert-changelog contract. Fresh session with batch-sized shuffle
     // partitions (the q_stream_range_join deployment knob).
     "q_stream_sttm" -> ((s, dir) => {
-      val in = s"/tmp/graft_cache/${new java.io.File(dir).getName}/sttm_stream_in"
-      withPathLock(in) {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$in/_SUCCESS")))
-          Tables.events(s, dir)
-            .withColumn("part", pmod(col("event_id"), lit(5)))
-            .write.partitionBy("part").mode("overwrite").parquet(in)
-      }
+      val (s2, source) = sttmStream(s, dir)
       val work = java.nio.file.Files.createTempDirectory("graft_sttm_q")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      // micro-batch jobs are small and uniform: AQE's per-job re-planning
-      // costs more than it saves here (CommitFloorProbe: -16% addBatch);
-      // deployments with mixed/backfill batch sizes keep it on
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
-      val source = s2.readStream
-        .schema(s.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
       val cust = Tables.customer(s2, dir)
       def view(b: DataFrame): DataFrame =
         b.filter(col("event_type") === "purchase").select(
@@ -1285,15 +1264,21 @@ object SparkEntry {
         v.join(cust.filter(col("c_acctbal") >= 0),
             v("USER_ID") === col("c_custkey"), "left_anti")
           .select(col("USER_ID"), col("EVENT_ID"))
-      // buckets sized to the TABLE's volume, not the default (the
-      // CommitFloorProbe knob): the replay's xref is batch-scale
-      val q = streaming.StreamingPipeline.run(
-        source, view,
-        streaming.StreamingPipeline.XrefConfig(Seq("USER_ID"),
-          Seq("TS", "EVENT_ID"), nBuckets = 8),
-        enrich, quarantine, work.toString)
+      import streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDef}
+      // buckets sized to the TABLE's volume, not the default: the replay's
+      // xref is batch-scale (BASELINE.md round-12 third wave)
+      val set = StatementSet(
+        views = Seq(ViewDef("view", view)),
+        xrefs = Seq(XrefDef("xref", "view", Seq("USER_ID"),
+          Seq("TS", "EVENT_ID"), nBuckets = 8)),
+        sinks = Seq(
+          SinkDef("fgac_out", (v, d) => enrich(v("view"), d("xref"))),
+          SinkDef("quarantine_out", (v, d) => quarantine(v("view"), d("xref")))))
+      val q = streaming.StreamingPipeline.runSet(source, set, work.toString)
       q.awaitTermination()
-      val res = new streaming.SnapshotStore(s"$work/xref_snapshot").read(s2).get
+      val res = new streaming.SnapshotStore(
+          streaming.StreamingPipeline.xrefStorePath(work.toString, "xref"))
+        .read(s2).get
         .select(col("USER_ID"), col("EVENT_ID"),
           unix_micros(col("TS")).as("TS_US"), col("K"), col("VALUE"))
         .orderBy("USER_ID")
@@ -1313,22 +1298,8 @@ object SparkEntry {
     // straight sink's accumulated changelog row count (effectively-once:
     // every event delivered exactly once across the 5-batch replay).
     "q_stream_sttm_multi" -> ((s, dir) => {
-      val in = s"/tmp/graft_cache/${new java.io.File(dir).getName}/sttm_stream_in"
-      withPathLock(in) {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$in/_SUCCESS")))
-          Tables.events(s, dir)
-            .withColumn("part", pmod(col("event_id"), lit(5)))
-            .write.partitionBy("part").mode("overwrite").parquet(in)
-      }
+      val (s2, source) = sttmStream(s, dir)
       val work = java.nio.file.Files.createTempDirectory("graft_sttm_multi")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.conf.set("spark.sql.adaptive.enabled", "false") // see q_stream_sttm
-      val source = s2.readStream
-        .schema(s.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
       import streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDef}
       def entity(t: String)(b: DataFrame): DataFrame =
         b.filter(col("event_type") === t).select(
@@ -1395,27 +1366,13 @@ object SparkEntry {
     // Oracle: the final XREF snapshot equals the batch latest-by-key —
     // compiled-streamed == compiled-batch == oracle.
     "q_stream_sttm_compiled" -> ((s, dir) => {
-      val in = s"/tmp/graft_cache/${new java.io.File(dir).getName}/sttm_stream_in"
-      withPathLock(in) {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$in/_SUCCESS")))
-          Tables.events(s, dir)
-            .withColumn("part", pmod(col("event_id"), lit(5)))
-            .write.partitionBy("part").mode("overwrite").parquet(in)
-      }
+      val (s2, source) = sttmStream(s, dir)
       val work = java.nio.file.Files.createTempDirectory("graft_sttm_comp")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.conf.set("spark.sql.adaptive.enabled", "false") // see q_stream_sttm
       Tables.customer(s2, dir).createOrReplaceTempView("customer")
       val pipeline = compile.PipelineCompiler.compile(
         compile.DemoSpecs.jsonPipeline, compile.DemoSpecs.jsonOptions)
       val set = compile.StreamingBridge.toStatementSet(
         pipeline, streamTable = "events", s2, nBuckets = 8)
-      val source = s2.readStream
-        .schema(s.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
       val q = streaming.StreamingPipeline.runSet(source, set, work.toString)
       q.awaitTermination()
       val res = new streaming.SnapshotStore(
@@ -1762,7 +1719,8 @@ object SparkEntry {
     // the language-agnostic repetition/gibberish filter. No SQL engine
     // mirrors deflate, so the query emits a consistency-gate row per doc
     // (r14, the last no_oracle entry — VERDICT r13 #3) on deflate's
-    // statable invariants, each margin MEASURED before gating (GateProbe):
+    // statable invariants, each margin MEASURED before gating (BASELINE.md
+    // round-14 first wave):
     //   ceiling — deflate_bytes <= zlib's documented compressBound(raw)
     //     = raw + raw>>12 + raw>>14 + raw>>25 + 13 (measured margin >= 7B);
     //   floor — deflate_bytes >= 7 for non-empty input (2B zlib header +
@@ -2453,8 +2411,9 @@ object SparkEntry {
     // ranking (which the mirror recomputes exactly) with a per-rank
     // rank-agreement gate against the production ranking (VERDICT r12 #4):
     // ok = the parity-rank-r doc appears in the production top-25 within
-    // +-2 ranks. Measured before gating (GateProbe r13): the two rankings
-    // agree EXACTLY (20/20 identical ranks) at sf0.01 and sf0.1, so the
+    // +-2 ranks. Measured before gating (BASELINE.md round-13 second
+    // wave): the two rankings agree EXACTLY (20/20 identical ranks) at
+    // sf0.01 and sf0.1, so the
     // +-2 band is pure safety margin for near-ties. The production scoring
     // still runs in full.
     "q_bm25_prod" -> ((s, dir) => {
@@ -3096,8 +3055,9 @@ object SparkEntry {
     // consistency gate: deflate has no SQL-engine mirror, so the flag
     // conjoins zlib's compressBound ceiling, the 7-byte wrapper floor, the
     // ratio_bp projection identity, and the sub-window self-concatenation
-    // back-reference bound (margins measured, GateProbe r14); the mirror
-    // states the flag and recomputes the raw byte length exactly
+    // back-reference bound (margins measured, BASELINE.md round-14 first
+    // wave); the mirror states the flag and recomputes the raw byte length
+    // exactly
     "q_compress_ratio" ->
       """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS raw_bytes,
            CAST(1 AS INT) AS ok
@@ -5314,6 +5274,63 @@ object SparkEntry {
   private def withPathLock[T](path: String)(body: => T): T =
     pathLocks.computeIfAbsent(path, _ => new Object).synchronized(body)
 
+  /** Root of the maintained artifact `name` for sf dir `dir`:
+    * `/tmp/graft_cache/<dir basename>/<name>`. The one place the cache key
+    * is decided. */
+  private def cacheRoot(dir: String, name: String): String =
+    s"/tmp/graft_cache/${new java.io.File(dir).getName}/$name"
+
+  /** The maintained artifact `name` for `dir`: built at its [[cacheRoot]]
+    * under that path's lock unless `complete(root)` already holds.
+    * Returns the root. */
+  private def maintained(dir: String, name: String)(
+      complete: String => Boolean)(build: String => Unit): String = {
+    val root = cacheRoot(dir, name)
+    withPathLock(root) { if (!complete(root)) build(root) }
+    root
+  }
+
+  private def hasSuccess(root: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/_SUCCESS"))
+
+  /** A maintained artifact composed of several store writes (build, then
+    * appends — the per-ingestion-batch production discipline). The
+    * `_FIXTURE_DONE` sentinel is written only after the full sequence, so
+    * a crash mid-composition rebuilds rather than serving a half-grown
+    * store; the store's own marker is re-validated too, since a layout
+    * change can orphan the sentinel while the store reads absent. */
+  private def composed(dir: String, name: String)(
+      storeExists: String => Boolean)(compose: String => Unit): String = {
+    def done(root: String) = java.nio.file.Paths.get(s"$root/_FIXTURE_DONE")
+    maintained(dir, name)(root =>
+        java.nio.file.Files.exists(done(root)) && storeExists(root)) { root =>
+      java.nio.file.Files.deleteIfExists(done(root))
+      compose(root)
+      java.nio.file.Files.writeString(done(root), "ok")
+    }
+  }
+
+  /** The STTM streaming replays' shared input: the sf dir's events as a
+    * maintained 5-file fixture (event_id mod 5), streamed one file per
+    * trigger into a fresh session with batch-sized shuffle partitions.
+    * Micro-batch jobs are small and uniform, so AQE's per-job re-planning
+    * costs more than it saves (-16% addBatch, BASELINE.md round-12 third
+    * wave); deployments with mixed/backfill batch sizes keep it on.
+    * Returns (session, streaming source). */
+  private def sttmStream(s: SparkSession, dir: String): (SparkSession, DataFrame) = {
+    val in = maintained(dir, "sttm_stream_in")(hasSuccess)(in =>
+      Tables.events(s, dir)
+        .withColumn("part", pmod(col("event_id"), lit(5)))
+        .write.partitionBy("part").mode("overwrite").parquet(in))
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    (s2, s2.readStream
+      .schema(s.read.parquet(in).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(in))
+  }
+
   /** Materialize the session-scoped shared intermediates (near-dup verified
     * pairs + cluster labels) ONCE, serially, before a caller fans queries
     * out across threads. Without this, concurrent first consumers of the
@@ -5385,16 +5402,10 @@ object SparkEntry {
     * the generators are deterministic in doc_id, so the cache cannot go
     * stale. Returns (idCol, <kind> binary). */
   private def fixtureTable(s: SparkSession, dir: String, kind: String)(
-      make: DataFrame => DataFrame): DataFrame = {
-    val path =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/fixtures/$kind"
-    withPathLock(path) {
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/_SUCCESS")))
-        make(Tables.documents(s, dir).select(col("doc_id")))
-          .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+      make: DataFrame => DataFrame): DataFrame =
+    s.read.parquet(maintained(dir, s"fixtures/$kind")(hasSuccess)(path =>
+      make(Tables.documents(s, dir).select(col("doc_id")))
+        .write.mode("overwrite").parquet(path)))
 
   /** On-disk DedupIndex for q_incr_dedup's existing-corpus side (docs with
     * doc_id % 5 != 0), built once per sf dir under /tmp and reused across
@@ -5404,30 +5415,25 @@ object SparkEntry {
     * one-time corpus indexing (testdata is immutable per TESTDATA.md, so
     * the cache cannot go stale). */
   private def dedupIndexDir(s: SparkSession, dir: String, label: String)(
-      existing: => DataFrame): String = {
-    val root = s"/tmp/graft_cache/${new java.io.File(dir).getName}/$label"
-    withPathLock(root) {
-      if (!operators.DedupIndex.exists(root))
-        operators.DedupIndex.build(existing, "doc_id", "text", root)
-    }
-    root
-  }
+      existing: => DataFrame): String =
+    maintained(dir, label)(operators.DedupIndex.exists)(
+      operators.DedupIndex.build(existing, "doc_id", "text", _))
 
   /** On-disk AnnIndexStore for q_ann_stored, built once per sf dir — the
     * trained ANN index is a maintained artifact like the DedupIndex: the
     * bench times SERVING from the stored index, not the one-time codebook
     * training (testdata immutable per TESTDATA.md; training deterministic
     * in the corpus, so the cache cannot go stale). */
-  private def annIndexDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/ann_ivfpq_index"
-    withPathLock(root) {
-      if (!operators.AnnIndexStore.exists(root))
-        operators.AnnIndexStore.build(Tables.embeddings(s, dir),
-          "vec_id", "embedding", root, dim = 64)
-    }
-    root
-  }
+  private def annIndexDir(s: SparkSession, dir: String): String =
+    annStoreDir(s, dir, "ann_ivfpq_index")(identity)
+
+  /** The stored ANN indexes' one builder: an AnnIndexStore over `slice`
+    * of the sf dir's embeddings at [[cacheRoot]]`(dir, name)`. */
+  private def annStoreDir(s: SparkSession, dir: String, name: String)(
+      slice: DataFrame => DataFrame): String =
+    maintained(dir, name)(operators.AnnIndexStore.exists)(
+      operators.AnnIndexStore.build(slice(Tables.embeddings(s, dir)),
+        "vec_id", "embedding", _, dim = 64))
 
   private def incrDedupIndexDir(s: SparkSession, dir: String): String =
     dedupIndexDir(s, dir, "incr_dedup_index")(
@@ -5439,69 +5445,40 @@ object SparkEntry {
     * not the one-time training (testdata immutable per TESTDATA.md;
     * training deterministic in the corpus, so the cache cannot go
     * stale). */
-  private def classifierWeightsDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/classifier_weights"
-    withPathLock(root) {
-      if (!operators.Classify.weightsExist(root))
-        operators.Classify.saveWeights(
-          operators.Classify.trainLinear(
-            Tables.documents(s, dir).filter(col("doc_id") % 5 === 0),
-            col("lang") === "en", "text"), root)
-    }
-    root
-  }
+  private def classifierWeightsDir(s: SparkSession, dir: String): String =
+    maintained(dir, "classifier_weights")(operators.Classify.weightsExist)(
+      operators.Classify.saveWeights(
+        operators.Classify.trainLinear(
+          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0),
+          col("lang") === "en", "text"), _))
 
   /** On-disk AnnIndexStore over the vec_id % 20 != 0 corpus slice — the
     * stored side of the embedding near-dup ingest gate (q_ann_gate), so
     * the timed cost is the per-batch match, not the one-time training. */
-  private def annGateIndexDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/ann_gate_index"
-    withPathLock(root) {
-      if (!operators.AnnIndexStore.exists(root))
-        operators.AnnIndexStore.build(
-          Tables.embeddings(s, dir).filter(col("vec_id") % 20 =!= 0),
-          "vec_id", "embedding", root, dim = 64)
-    }
-    root
-  }
+  private def annGateIndexDir(s: SparkSession, dir: String): String =
+    annStoreDir(s, dir, "ann_gate_index")(_.filter(col("vec_id") % 20 =!= 0))
 
   /** Stored ANN index of the held-out EVAL slice (vec_id % 20 == 0) —
     * the embedding twin of evalSliceIndexDir: the eval registry is
     * indexed once and every corpus sweep (q_semantic_decontam) pays only
     * its own probe pass against it. */
-  private def annEvalIndexDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/ann_eval_index"
-    withPathLock(root) {
-      if (!operators.AnnIndexStore.exists(root))
-        operators.AnnIndexStore.build(
-          Tables.embeddings(s, dir).filter(col("vec_id") % 20 === 0),
-          "vec_id", "embedding", root, dim = 64)
-    }
-    root
-  }
+  private def annEvalIndexDir(s: SparkSession, dir: String): String =
+    annStoreDir(s, dir, "ann_eval_index")(_.filter(col("vec_id") % 20 === 0))
 
   /** On-disk IncrStats store for q_incr_stats, built once per sf dir from
     * 5 simulated ingest batches (doc_id mod 5) — a maintained artifact
     * like the DedupIndex: the bench times the report-from-partials read,
     * the production steady state (testdata immutable per TESTDATA.md). */
-  private def incrStatsDir(s: SparkSession, dir: String): String = {
-    val root = s"/tmp/graft_cache/${new java.io.File(dir).getName}/incr_stats"
-    withPathLock(root) {
-      if (!operators.IncrStats.exists(root)) {
-        val docs = Tables.documents(s, dir)
-        operators.IncrStats.build(docs.filter(col("doc_id") % 5 === 0), root)
-        (1 to 4).foreach(i =>
-          operators.IncrStats.append(docs.filter(col("doc_id") % 5 === i), root))
-        // Marker AFTER the final append: a crash mid-composition must not
-        // leave a store that later sessions mistake for complete (ADVICE r6).
-        operators.IncrStats.markComplete(root)
-      }
+  private def incrStatsDir(s: SparkSession, dir: String): String =
+    maintained(dir, "incr_stats")(operators.IncrStats.exists) { root =>
+      val docs = Tables.documents(s, dir)
+      operators.IncrStats.build(docs.filter(col("doc_id") % 5 === 0), root)
+      (1 to 4).foreach(i =>
+        operators.IncrStats.append(docs.filter(col("doc_id") % 5 === i), root))
+      // Marker AFTER the final append: a crash mid-composition must not
+      // leave a store that later sessions mistake for complete (ADVICE r6).
+      operators.IncrStats.markComplete(root)
     }
-    root
-  }
 
   /** Stored band index of the held-out eval slice (source='src0') — the
     * decontamination reference set is indexed once, exactly like a
@@ -5523,16 +5500,9 @@ object SparkEntry {
     * testdata is immutable so the cache cannot go stale. The stored set
     * is exactly nearDuplicatePairs(full corpus), so every consumer oracle
     * is unchanged. */
-  private def pairStoreDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/near_dup_pairs"
-    withPathLock(root) {
-      if (!operators.PairStore.exists(root))
-        operators.PairStore.build(Tables.documents(s, dir), "doc_id", "text",
-          root)
-    }
-    root
-  }
+  private def pairStoreDir(s: SparkSession, dir: String): String =
+    maintained(dir, "near_dup_pairs")(operators.PairStore.exists)(
+      operators.PairStore.build(Tables.documents(s, dir), "doc_id", "text", _))
 
   /** Floor-threshold PairStore for contrastive mining: the same maintained
     * pair-graph artifact as [[pairStoreDir]] but verified down to the
@@ -5556,68 +5526,35 @@ object SparkEntry {
     * (strictly cheaper than two stores; the two-store shape here keeps
     * the dup-graph consumers' inputs byte-stable while the floor
     * artifact evolves). */
-  private def pairStoreFloorDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/near_miss_pairs"
-    withPathLock(root) {
-      if (!operators.PairStore.exists(root))
-        operators.PairStore.build(Tables.documents(s, dir), "doc_id", "text",
-          root, minJaccard = 0.25)
-    }
-    root
-  }
+  private def pairStoreFloorDir(s: SparkSession, dir: String): String =
+    maintained(dir, "near_miss_pairs")(operators.PairStore.exists)(
+      operators.PairStore.build(Tables.documents(s, dir), "doc_id", "text",
+        _, minJaccard = 0.25))
 
   /** Incrementally-composed PairStore fixture for q_pair_store: built
     * from the 3/4 corpus slice, grown by ONE appended batch (doc_id % 4
-    * == 3) — the build+append sequence is the per-ingestion-batch
-    * production discipline, and the oracle recomputes the same union from
-    * scratch. The sentinel is written only after the full sequence, so a
-    * crash mid-composition rebuilds rather than serving a half-grown
-    * graph (the incrStatsDir discipline). */
-  private def pairStoreIncrDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/pair_store_incr"
-    withPathLock(root) {
-      val done = java.nio.file.Paths.get(s"$root/_FIXTURE_DONE")
-      // the store's own marker is re-validated too: a layout change can
-      // orphan the sentinel while the store reads absent (or unreadable)
-      if (!java.nio.file.Files.exists(done) || !operators.PairStore.exists(root)) {
-        java.nio.file.Files.deleteIfExists(done)
-        val docs = Tables.documents(s, dir)
-        operators.PairStore.build(docs.filter(col("doc_id") % 4 =!= 3),
-          "doc_id", "text", root)
-        operators.PairStore.append(docs.filter(col("doc_id") % 4 === 3),
-          "doc_id", "text", root)
-        java.nio.file.Files.writeString(done, "ok")
-      }
+    * == 3); the oracle recomputes the same union from scratch. */
+  private def pairStoreIncrDir(s: SparkSession, dir: String): String =
+    composed(dir, "pair_store_incr")(operators.PairStore.exists) { root =>
+      val docs = Tables.documents(s, dir)
+      operators.PairStore.build(docs.filter(col("doc_id") % 4 =!= 3),
+        "doc_id", "text", root)
+      operators.PairStore.append(docs.filter(col("doc_id") % 4 === 3),
+        "doc_id", "text", root)
     }
-    root
-  }
 
   /** Incrementally-composed NoveltyIndex fixture for q_novelty: grams of
-    * the doc_id % 5 ∉ {0, 4} slice at build, the % 5 == 4 slice appended —
-    * the build+append sequence is the production discipline; the oracle
-    * recomputes the same distinct-gram union from scratch. Sentinel after
-    * the full sequence (pairStoreIncrDir discipline). */
-  private def noveltyIndexDir(s: SparkSession, dir: String): String = {
-    val root =
-      s"/tmp/graft_cache/${new java.io.File(dir).getName}/novelty_index"
-    withPathLock(root) {
-      val done = java.nio.file.Paths.get(s"$root/_FIXTURE_DONE")
-      if (!java.nio.file.Files.exists(done) ||
-          !operators.NoveltyIndex.exists(root)) {
-        java.nio.file.Files.deleteIfExists(done)
-        val docs = Tables.documents(s, dir)
-        operators.NoveltyIndex.build(
-          docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4),
-          "doc_id", "text", root)
-        operators.NoveltyIndex.append(docs.filter(col("doc_id") % 5 === 4),
-          "doc_id", "text", root)
-        java.nio.file.Files.writeString(done, "ok")
-      }
+    * the doc_id % 5 ∉ {0, 4} slice at build, the % 5 == 4 slice appended;
+    * the oracle recomputes the same distinct-gram union from scratch. */
+  private def noveltyIndexDir(s: SparkSession, dir: String): String =
+    composed(dir, "novelty_index")(operators.NoveltyIndex.exists) { root =>
+      val docs = Tables.documents(s, dir)
+      operators.NoveltyIndex.build(
+        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4),
+        "doc_id", "text", root)
+      operators.NoveltyIndex.append(docs.filter(col("doc_id") % 5 === 4),
+        "doc_id", "text", root)
     }
-    root
-  }
 
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, s"pairs:$dir")(
@@ -5651,10 +5588,9 @@ object SparkEntry {
         expr("CAST(_ns AS BIGINT) * 10000 div _nt").as("q_bp"))
   }
 
-  /** The synthesized 32-field JSON payload shared by q_view_parse_wide,
-    * q_sttm_wide, and tools.MixedPathProbe: string-concat so the oracle
-    * sees identical bytes; a NULL event_type nulls the whole payload in
-    * both engines. */
+  /** The synthesized 32-field JSON payload shared by q_view_parse_wide
+    * and q_sttm_wide: string-concat so the oracle sees identical bytes; a
+    * NULL event_type nulls the whole payload in both engines. */
   private[graft] def widePayload: org.apache.spark.sql.Column = {
     val parts: Seq[org.apache.spark.sql.Column] =
       (lit("{\"typ\":\"") +: col("event_type") +: lit("\"") +:

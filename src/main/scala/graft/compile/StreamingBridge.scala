@@ -27,7 +27,7 @@ import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDe
   *
   * Per-trigger statement compilation is deliberately NOT cached: re-running
   * `session.sql` for every view/xref/sink costs 1.5-3.7 ms/statement
-  * (CommitFloorProbe sqlcompile rows, BASELINE.md r13 first wave) — ~25-35
+  * (sqlcompile rows, BASELINE.md round-13 first wave) — ~25-35
   * ms/trigger at reference arity vs a ~1.2 s addBatch median, i.e. 2-3%,
   * while a parse-once/re-bind cache would have to thread analyzed plans
   * across the per-batch session-clone boundary the registration contract

@@ -188,7 +188,7 @@ case class MinHashSigText(child: Expression, n: Int, parity: Boolean,
   * pmod(hash(token), div) == 0, running-boundary-count segment ids, one
   * (token count, hash of the space-joined segment) pair per segment) as
   * ONE per-document loop returning array<struct<seg_tok int, seg_hash
-  * bigint>> in segment order (r15). The declarative formulation paid a
+  * bigint>> (r15). The declarative formulation paid a
   * token posexplode, a per-doc prefix-sum WINDOW (token-stream exchange +
   * per-doc sort), and a groupBy(doc, seg) with collect_list + array_sort
   * + an interpreted transform, all corpus-scale. Bit-identical by

@@ -144,29 +144,38 @@ object AnnIndexStore {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$g/cells")
 
     // r15: fused subspace training (one scan per round for all m
-    // subspaces, one shared quantized table instead of m sliced copies)
-    // and one exploded projection for all subspaces' codes instead of an
-    // m-way union. Centroids/codes are bit-identical to the sequential
-    // form (ClusteringSpec), so stored indexes are unchanged.
+    // subspaces, one shared quantized table instead of m sliced copies).
+    // Centroids are bit-identical to the sequential form (ClusteringSpec),
+    // so stored indexes are unchanged.
     val offsets = (0 until m).map(_ * subDim)
     val subCents = Clustering.trainSubspaces(pts, offsets, subDim, k, iters)
     (0 until m).flatMap(s => subCents(s).map { case (j, c) => (s, j, c.toSeq) })
       .toDF("sub", "j", "q")
       .coalesce(1).write.mode("overwrite").parquet(s"$g/pqcents")
-    pts.select(explode(array((0 until m).map { s =>
-        struct(lit(s).as("sub"), col("id").as("id"),
-          Clustering.nearest(subCents(s),
-            slice(col("q"), offsets(s) + 1, subDim)).getField("j").as("code"))
-      }: _*)).as("e"))
-      .select(col("e.sub").as("sub"), col("e.id").as("id"),
-        col("e.code").as("code"))
-      .withColumn("pfx", idPfx(nPfx))
+    pqCodes(pts, subCents, subDim, nPfx)
       .write.mode("overwrite").partitionBy("pfx").parquet(s"$g/codes")
 
     GenStore.init(dir, GenStore.State(0, Vector(GenStore.BaseSeg),
       Map("dim" -> dim, "nCells" -> nCells, "m" -> m, "k" -> k,
         "scale" -> scale, "nPfx" -> nPfx)))
   }
+
+  /** The (sub, id, code, pfx) code table of quantized points `pts` under
+    * the per-subspace codebooks `cents(s)` (subspace s covers elements
+    * [s*subDim, (s+1)*subDim)): ONE exploded projection for all
+    * subspaces, never an m-way union (r15: `q_pq_codes` 8 -> 2
+    * Exchanges). [[build]] codes the corpus with the codebooks it just
+    * trained, [[append]] a batch with the stored ones. */
+  private def pqCodes(pts: DataFrame, cents: Seq[Seq[(Int, Array[Long])]],
+                      subDim: Int, nPfx: Int): DataFrame =
+    pts.select(explode(array(cents.indices.map { s =>
+        struct(lit(s).as("sub"), col("id").as("id"),
+          Clustering.nearest(cents(s),
+            slice(col("q"), s * subDim + 1, subDim)).getField("j").as("code"))
+      }: _*)).as("e"))
+      .select(col("e.sub").as("sub"), col("e.id").as("id"),
+        col("e.code").as("code"))
+      .withColumn("pfx", idPfx(nPfx))
 
   /** Code an accepted batch with the STORED codebooks and append it to
     * cells/codes/vectors as one atomic SEGMENT — the incremental-index
@@ -191,12 +200,7 @@ object AnnIndexStore {
             .as("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$segDir/cells")
       val pq = pqCents(spark, base)
-      (0 until st.props("m")).map { s =>
-        pts.select(lit(s).as("sub"), col("id"),
-          Clustering.nearest(pq(s), slice(col("q"), s * subDim + 1, subDim))
-            .getField("j").as("code"))
-      }.reduce(_ unionByName _)
-        .withColumn("pfx", idPfx(nPfx))
+      pqCodes(pts, (0 until st.props("m")).map(pq), subDim, nPfx)
         .write.mode("overwrite").partitionBy("pfx").parquet(s"$segDir/codes")
     }
     ()
@@ -420,8 +424,8 @@ object AnnIndexStore {
     * [[graft.streaming.StreamingAnn.gateAndMaintainVectors]] is the
     * ingest-loop composition (gate + append survivors).
     *
-    * DEFAULTS sized for recall, and measured (tools/GateFloorProbe,
-    * shipped as the q_ann_gate_recall audit): at a radius set to the
+    * DEFAULTS sized for recall, and measured (the q_ann_gate_recall
+    * audit): at a radius set to the
     * MEDIAN nearest-neighbor distance — the adversarial regime, where
     * half the "dups" are barely distinguishable from non-dups — recall is
     * POOL-bound, not probe-bound (refine=30 caps at ~0.5 even probing all

@@ -66,9 +66,10 @@ object Bpe {
     *     map and emits only the sorted top `horizon`. The DataFrame plan
     *     this replaces paid an explode + exchange + AQE stage barrier +
     *     TakeOrdered — 3 stage submissions per round of pure scheduling
-    *     floor over a dictionary of a few dozen rows (r14 BpeFloorProbe:
-    *     0.112 s/round of which the actual work is microseconds; 83 rounds
-    *     at 256 merges). Exact because the one partition holds ALL rows.
+    *     floor over a dictionary of a few dozen rows (BASELINE.md round-14
+    *     third wave: 0.112 s/round of which the actual work is
+    *     microseconds; 83 rounds at 256 merges). Exact because the one
+    *     partition holds ALL rows.
     *   - **multi-partition dictionary** (the 100 TB shape — a corpus-scale
     *     vocabulary does not fit one task): the partial-agg shuffle +
     *     TakeOrdered plan, unchanged.
@@ -222,7 +223,7 @@ object Bpe {
         // CKPT_EVERY stacked codegen replace projections over the
         // dictionary (narrow, no shuffle re-run), which costs microseconds
         // against the ~26 ms/round the eager materialization job paid
-        // (BpeFloorProbe). Lineage stays flat: bounded at CKPT_EVERY
+        // (OPTIMIZATION_r14.md). Lineage stays flat: bounded at CKPT_EVERY
         // projections over the last checkpoint, so the Iterate contract's
         // no-unbounded-plan-growth guarantee holds.
         toks = {

@@ -44,11 +44,17 @@ object Clustering {
 
   // Column builders have no df handle; the registry is session state, so
   // register against the active (or process-default) session — idempotent,
-  // and every execution path here is single-session.
+  // and every execution path here is single-session. A missing session
+  // fails HERE (the Similarity.lshSignBits contract), not later in
+  // analysis with "undefined function vec_l2sq_l".
   private def registerVec(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.functions.VectorFunctions.register)
+    graft.functions.VectorFunctions.register(
+      org.apache.spark.sql.SparkSession.getActiveSession
+        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+        .getOrElse(throw new IllegalStateException(
+          "Clustering needs an active or default SparkSession to register " +
+            "the vector functions; build the Column on the thread that owns " +
+            "the session (or call VectorFunctions.register(session) first)")))
 
   /** Quantized point table (id, q: array<long>) — floor(v * scale), the
     * exact-integer space every operator here works in. Checkpointed: it is

@@ -272,7 +272,7 @@ object DedupIndex {
     // consumers — the candidate-pfx collect below plus the
     // count/candidate/hot-member joins inside incrementalDedupPrepared —
     // which would otherwise each re-run the pruned scan + semi-join
-    // (measured at sf0.1: 4.51 -> 4.12 s median, tools/PfxAbBench; the
+    // (measured at sf0.1: 4.51 -> 4.12 s median, OPTIMIZATION_r14.md; the
     // superset-pfx variant C measured between the two and was not taken).
     // localCheckpoint, NOT Iterate.checkpoint: a serving call is
     // single-batch scratch, and the reliable flavor would accumulate one

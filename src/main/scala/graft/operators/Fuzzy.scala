@@ -108,7 +108,7 @@ object Fuzzy {
     }
     // r14: explode plain + relational filter instead of the filter(array)
     // higher-order form — HOFs are CodegenFallback (interpreted), and the
-    // per-row array work dominated the whole query (FuzzyStageProbe: the
+    // per-row array work dominated the whole query (OPTIMIZATION_r14.md: the
     // left probe build alone was ~4.5-8.6 s of q_fuzzy_resolve2's ~7 s at
     // sf0.1; the relational form runs in whole-stage codegen).
     val rb = right.select(col(rightId).as("r_id"), col(rightStr).as("r_s"),
@@ -118,7 +118,7 @@ object Fuzzy {
         col("k.j").as("j"), col("k.seg").as("seg"))
 
     // left: probe keys for every plausible (right length, segment, shift).
-    // r14 formulation (FuzzyStageProbe A/B, ~20x on this stage): explode a
+    // r14 formulation (OPTIMIZATION_r14.md A/B, ~20x on this stage): explode a
     // LITERAL (dl, j, d) combo array — constant-folded, so Generate emits
     // combo rows without building a per-input-row array — and compute the
     // ONE probed substring per OUTPUT row in whole-stage codegen. The old

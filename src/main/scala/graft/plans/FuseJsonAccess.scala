@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * literal top-level key, which is exactly a StructField name (dots/spaces
   * inside the quotes are literal key characters, not path steps), so the
   * substitution is identical to the dot case. Measured before extending
-  * (VERDICT r10 #7, MixedPathProbe at sf0.1 width 33): 30 simple + 3
+  * (VERDICT r10 #7, sf0.1 width 33, BASELINE.md round-11 third wave): 30 simple + 3
   * bracket paths paid 1 wide + 3 narrow parses = 2.95 s vs 1.75 s
   * all-fused — a 1.69x tax on the realistic mixed workbook, gone after
   * this extension. Remaining exotic paths (nested dots `$.a.b`, array

@@ -331,7 +331,8 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
       // themselves exceed the budget does the O(snapshot) base rewrite run.
       // vs folding everything every `maxLiveSegments` appends, the
       // full-snapshot latency spike is budget× rarer while read width stays
-      // ≤ 1 + 2×budget (SnapReadProbe: width is the cheap dimension).
+      // ≤ 1 + 2×budget (width is the cheap dimension: BASELINE.md round-11
+      // sixth wave).
       val st = GenStore.readOrFail(root, What)
       val (mergedSegs, freshSegs) =
         st.segs.filterNot(_ == GenStore.BaseSeg).partition(_.startsWith("m-"))
@@ -470,7 +471,8 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
     * pinned manifest's segments) and recommends a power-of-two bucket
     * count sized to `targetBucketBytes`, with 4× hysteresis in both
     * directions so advice never flaps (a reshard is an O(snapshot)
-    * rewrite; the SnapReadProbe curve shows read width is the CHEAP
+    * rewrite; the read-width curve in BASELINE.md round-11 sixth wave
+    * shows read width is the CHEAP
     * dimension, so mild drift costs little).
     *
     * The default target matches the parquet split size

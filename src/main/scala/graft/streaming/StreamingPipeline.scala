@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * one join INSERT and one bidirectional quarantine INSERT). Spark would
   * otherwise run one independent scan per `writeStream`; `foreachBatch`
   * gives a shared scan and per-batch multi-sink writes. Measured, not
-  * argued (StmtSetAbProbe, sf0.1 events): the fan-out reads 1/N the source
-  * rows of N independent queries, and with the sink writes running
+  * argued (BASELINE.md round-11 second wave and round-12 first wave, sf0.1
+  * events): the fan-out reads 1/N the source rows of N independent
+  * queries, and with the sink writes running
   * CONCURRENTLY (r11) it matches the independent variant's wall-clock while
   * paying 1/N the scan — at reference arity N=8, not just the original 3.
   * The sharing is real only because the RAW batch is materialized once
@@ -48,17 +49,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingPipeline {
 
-  /** The legacy single-xref config; `nBuckets`/`maxLiveSegments` are the
-    * same per-table knobs as [[XrefDef]]'s — size buckets to the TABLE's
-    * volume (CommitFloorProbe: a 16-bucket layout for a batch-sized table
-    * pays 4× the write tasks and delta-read files it needs; reshard as the
-    * table grows). */
-  final case class XrefConfig(
-      keys: Seq[String],
-      orderCols: Seq[String],
-      nBuckets: Int = 16,
-      maxLiveSegments: Int = 8)
-
   /** The delta a sink's emit receives per xref: the post-merge snapshot
     * rows for THE CURRENT BATCH'S KEYS ONLY — the upsert-changelog delta,
     * NOT the full snapshot. A distinct type so a lambda written against
@@ -76,30 +66,20 @@ object StreamingPipeline {
     * at `<workDir>/<name>_snapshot`. `keys`+`orderCols` are the table's
     * primary key and ranking, exactly as in [[SnapshotStore.merge]];
     * `nBuckets`/`maxLiveSegments` are that table's layout + LSM-budget
-    * deployment knobs (size buckets to the TABLE's volume, the budget to
-    * the fold-spike tolerance — BASELINE.md SnapReadProbe/FoldProbe). */
+    * deployment knobs (size buckets to the TABLE's volume — a 16-bucket
+    * layout for a batch-sized table pays 4x the write tasks and delta-read
+    * files it needs, BASELINE.md round-12 third wave — and the budget to
+    * the fold-spike tolerance, BASELINE.md round-11 sixth and eighth
+    * waves). */
   final case class XrefDef(name: String, view: String,
                            keys: Seq[String], orderCols: Seq[String],
                            nBuckets: Int = 16, maxLiveSegments: Int = 8)
 
   /** Per-sink ChangelogSink knobs (see [[ChangelogSink.write]]); one set
-    * for the whole statement set — plus the checkpoint-retention knobs
-    * [[runSet]] applies to the checkpoint it owns (VERDICT r12 #6: the
-    * 220-batch soak found the stock defaults retain offset/commit entries
-    * for 100 batches and hold superseded file-source log entries for a
-    * 10-minute cleanupDelay — 2 files/trigger of growth a long-running set
-    * never needs). Spark reads both from the SESSION conf at query start
-    * (there is no per-query option surface), so runSet sets them on the
-    * source's session; one-statement-set-per-dedicated-session is already
-    * the documented discipline (see [[StatementSet]] usage docs). A
-    * session whose conf already carries a NON-stock value keeps it (an
-    * operator's explicit retention tuning wins over these defaults); set
-    * minBatchesToRetain <= 0 / cleanupDelay < 0 to opt out entirely. */
+    * for the whole statement set. */
   final case class SinkOptions(maxLiveSegments: Int = 8,
                                targetFileBytes: Long = 128L << 20,
-                               vacuumGraceMs: Long = 10 * 60 * 1000L,
-                               minBatchesToRetain: Int = 10,
-                               fileSourceLogCleanupDelayMs: Long = 0L)
+                               vacuumGraceMs: Long = 10 * 60 * 1000L)
 
   /** One INSERT of the statement set: emit rows for this batch from the
     * batch's view frames and upsert deltas (both by name), landing in the
@@ -144,6 +124,19 @@ object StreamingPipeline {
     * broadcast, safely under driver/executor headroom. */
   private val MaxBroadcastKeys = 1000000L
 
+  /** Checkpoint retention [[runSet]] applies to the checkpoint it owns
+    * (VERDICT r12 #6: the 220-batch soak found the stock defaults retain
+    * offset/commit entries for 100 batches and hold superseded file-source
+    * log entries for a 10-minute cleanupDelay — 2 files/trigger of growth
+    * a long-running set never needs). Spark reads both from the SESSION
+    * conf at query start (there is no per-query option surface), so runSet
+    * sets them on the source's session; one statement set per dedicated
+    * session is the documented discipline. A session whose conf already
+    * carries a NON-stock value keeps it: an operator's explicit retention
+    * tuning wins over these defaults. */
+  private val MinBatchesToRetain = 10
+  private val FileSourceLogCleanupDelayMs = 0L
+
   def xrefStorePath(workDir: String, xrefName: String): String =
     s"$workDir/${xrefName}_snapshot"
   def sinkPath(workDir: String, sinkName: String): String =
@@ -166,15 +159,6 @@ object StreamingPipeline {
       .map(x => x.name -> new SnapshotStore(xrefStorePath(workDir, x.name),
         nBuckets = x.nBuckets, maxLiveSegments = x.maxLiveSegments))
       .toMap
-    // checkpoint-retention defaults for the checkpoint this query owns
-    // (see SinkOptions scaladoc; session-level because Spark offers no
-    // per-query surface for these). Precedence (r13 review, twice over):
-    // a SinkOptions value the CALLER CHANGED from the case-class default
-    // is an explicit per-call request and always applies; the untouched
-    // SinkOptions default applies only while the session still carries
-    // Spark's STOCK value, so it never clobbers a deployment's explicit
-    // session-level retention tuning. <=0/negative opts out entirely.
-    val optDefaults = SinkOptions()
     // Stockness is decided on PARSED values, not string forms (ADVICE r13):
     // conf.get renders the default in whatever form the Spark version
     // registered it ("10m" today, but "600s"/"600000ms" parse identically),
@@ -183,27 +167,21 @@ object StreamingPipeline {
     // checkpoint growth would return with no signal. An UNPARSEABLE current
     // value is treated as explicit tuning (don't override), never as stock.
     def applyRetention(key: String, stockParsed: Long, parse: String => Long,
-                       v: String, explicit: Boolean): Unit = {
+                       v: String): Unit = {
       val conf = source.sparkSession.conf
       val cur = try Option(conf.get(key)) catch { case _: Exception => None }
       val isStock = cur.forall(c =>
         scala.util.Try(parse(c.trim)).toOption.contains(stockParsed))
-      if (explicit || isStock) conf.set(key, v)
+      if (isStock) conf.set(key, v)
     }
-    if (sinkOpts.minBatchesToRetain > 0)
-      applyRetention("spark.sql.streaming.minBatchesToRetain",
-        stockParsed = 100L, parse = _.toLong,
-        sinkOpts.minBatchesToRetain.toString,
-        explicit = sinkOpts.minBatchesToRetain != optDefaults.minBatchesToRetain)
-    if (sinkOpts.fileSourceLogCleanupDelayMs >= 0)
-      applyRetention("spark.sql.streaming.fileSource.log.cleanupDelay",
-        stockParsed = 600000L, // 10 min, the conf's registered default
-        // the conf is registered as a ms-default time conf, so a bare
-        // number means ms — same parser Spark applies
-        parse = org.apache.spark.network.util.JavaUtils.timeStringAsMs,
-        sinkOpts.fileSourceLogCleanupDelayMs.toString,
-        explicit = sinkOpts.fileSourceLogCleanupDelayMs !=
-          optDefaults.fileSourceLogCleanupDelayMs)
+    applyRetention("spark.sql.streaming.minBatchesToRetain",
+      stockParsed = 100L, parse = _.toLong, MinBatchesToRetain.toString)
+    applyRetention("spark.sql.streaming.fileSource.log.cleanupDelay",
+      stockParsed = 600000L, // 10 min, the conf's registered default
+      // the conf is registered as a ms-default time conf, so a bare
+      // number means ms — same parser Spark applies
+      parse = org.apache.spark.network.util.JavaUtils.timeStringAsMs,
+      FileSourceLogCleanupDelayMs.toString)
     source.writeStream
       .option("checkpointLocation", s"$workDir/_checkpoint")
       .trigger(trigger)
@@ -212,47 +190,6 @@ object StreamingPipeline {
       }
       .start()
   }
-
-  /** The original 3-stage shape (one view -> one xref -> enrich +
-    * quarantine), now a 2-sink statement set; kept as the API the
-    * single-table STTM compiles to. Store lands at
-    * `<workDir>/xref_snapshot`, sinks at `fgac_out`/`quarantine_out`. */
-  def run(
-      source: DataFrame,
-      view: DataFrame => DataFrame,
-      xref: XrefConfig,
-      enrich: (DataFrame, UpsertDelta) => DataFrame,
-      quarantine: (DataFrame, UpsertDelta) => DataFrame,
-      workDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runSet(source, legacySet(view, xref, enrich, quarantine), workDir, trigger)
-
-  private def legacySet(
-      view: DataFrame => DataFrame,
-      xref: XrefConfig,
-      enrich: (DataFrame, UpsertDelta) => DataFrame,
-      quarantine: (DataFrame, UpsertDelta) => DataFrame): StatementSet =
-    StatementSet(
-      views = Seq(ViewDef("view", view)),
-      xrefs = Seq(XrefDef("xref", "view", xref.keys, xref.orderCols,
-        nBuckets = xref.nBuckets, maxLiveSegments = xref.maxLiveSegments)),
-      sinks = Seq(
-        SinkDef("fgac_out", (v, d) => enrich(v("view"), d("xref"))),
-        SinkDef("quarantine_out", (v, d) => quarantine(v("view"), d("xref")))))
-
-  /** One micro-batch of the legacy 3-stage set — package-visible so the
-    * replay-idempotence spec can re-run a batchId directly. */
-  private[graft] def processBatch(
-      store: SnapshotStore,
-      workDir: String,
-      view: DataFrame => DataFrame,
-      xref: XrefConfig,
-      enrich: (DataFrame, UpsertDelta) => DataFrame,
-      quarantine: (DataFrame, UpsertDelta) => DataFrame,
-      batch: DataFrame,
-      batchId: Long): Unit =
-    processSet(Map("xref" -> store), workDir,
-      legacySet(view, xref, enrich, quarantine), batch, batchId)
 
   /** One micro-batch of the full statement set. */
   private[graft] def processSet(

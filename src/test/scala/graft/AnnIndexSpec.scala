@@ -81,6 +81,35 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(vecs.count() == 42 && vecs.select("id").distinct().count() == 42)
     assert(readAll("codes").count() == 42 * 4)
 
+    // the appended segment's codes are exactly the STORED codebooks'
+    // coding of the batch: quantize (floor(v * 1000)), then per subspace
+    // the nearest stored centroid by squared L2, ties to the lowest index
+    val cents = spark.read.parquet(s"$g/base/pqcents").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
+    val subDim = 8 / 4
+    val want = batch.collect().flatMap { r =>
+      val q = r.getSeq[Float](1).map(v => math.floor(v.toDouble * 1000).toLong)
+      (0 until 4).map { s =>
+        val sub = q.slice(s * subDim, (s + 1) * subDim)
+        val code = cents.filter(_._1 == s)
+          .map { case (_, j, c) =>
+            (sub.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, j) }
+          .min._2
+        (s, r.getLong(0), code)
+      }
+    }.toSet
+    val appendedSeg = {
+      val s = Files.list(java.nio.file.Paths.get(g))
+      try s.iterator().asScala.filter(_.getFileName.toString != "base").toSeq
+      finally s.close()
+    }
+    assert(appendedSeg.size == 1)
+    val got = spark.read.parquet(s"${appendedSeg.head}/codes")
+      .select("sub", "id", "code").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(got.size == 2 * 4 && got.toSet == want,
+      s"appended codes ${got.sorted} != stored-codebook coding ${want.toSeq.sorted}")
+
     // query vec 3: its appended exact duplicate lands in the same coarse
     // cell (identical vector => identical probe), so refine must return it
     // first with exact distance 0

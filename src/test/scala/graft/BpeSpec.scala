@@ -107,7 +107,7 @@ class BpeSpec extends AnyFunSuite {
     // IMPROVING with depth (0.52 @ 64, 0.38 @ 256, 0.40 @ 512 merges,
     // BASELINE round-11 fourth wave); this pins bit-identity plus a
     // non-degenerate ratio at test-sized depth.
-    val d = graft.tools.ZipfCorpus.docs(spark, vocab = 1500, topCount = 400)
+    val d = ZipfCorpus.docs(spark, vocab = 1500, topCount = 400)
       .localCheckpoint()
     val seqM = Bpe.train(d, "text", nMerges = 32).orderBy("step")
       .collect().map(_.toSeq).toSeq

@@ -267,4 +267,22 @@ class ClusteringSpec extends AnyFunSuite {
            !plan.contains("BroadcastNestedLoopJoin"),
       s"centroids must ride as literals, not a joined side:\n$plan")
   }
+
+  test("no active or default session: centroid assignment fails fast, not in analysis") {
+    // ADVICE r15 #1: registerVec used to skip registration silently, so a
+    // session-less caller died later with "undefined function vec_l2sq_l"
+    val rows = (0L until 4L).map(i => (i, Seq(i.toFloat, 1.0f)))
+    val input = df(rows)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val ex = intercept[IllegalStateException](
+        Clustering.kmeansAssign(input, "vec_id", "embedding", k = 2, iters = 1))
+      assert(ex.getMessage.contains("active or default SparkSession"),
+        ex.getMessage)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 }

@@ -35,8 +35,8 @@ class StreamingSoakSpec extends AnyFunSuite {
     // keep every trigger's progress event (default retains 100 of 220)
     .config("spark.sql.streaming.numRecentProgressUpdates", "300")
     // checkpoint-retention knobs (minBatchesToRetain=10, cleanupDelay=0)
-    // deliberately NOT set here: runSet applies them itself from
-    // SinkOptions' defaults (VERDICT r12 #6) — this soak's bounded
+    // deliberately NOT set here: runSet applies them itself from its
+    // retention constants (VERDICT r12 #6) — this soak's bounded
     // checkpoint assertion now exercises that path
     .config("spark.ui.enabled", "false")
     .getOrCreate()
