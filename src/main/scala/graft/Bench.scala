@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Audit, BenchRole, Isolated}
 
 /** Benchmark main. Runs the full `SparkEntry.queries` set N times
   * (default 3, override via SPARK_GRAFT_BENCH_RUNS) after a JVM warmup
@@ -75,35 +76,42 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val results = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val anyFail = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = names.map { name =>
-      scala.concurrent.Future {
-        val entry =
-          try {
-            val (n, h) = resultFingerprint(SparkEntry.queries(name)(spark, cDir))
-            s"""{"rows":$n,"hash":"$h"}"""
-          } catch {
-            case e: Throwable =>
-              anyFail.set(true)
-              s"""{"error":"${jsonEscape(
-                s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")}"}"""
-          }
-        results.put(name, entry)
-        System.err.println(s"[correctness] $name -> $entry")
-      }
+    forEachPar(names, par) { name =>
+      val entry =
+        try {
+          val (n, h) = resultFingerprint(SparkEntry.queries(name)(spark, cDir))
+          s"""{"rows":$n,"hash":"$h"}"""
+        } catch {
+          case e: Throwable =>
+            anyFail.set(true)
+            s"""{"error":"${jsonEscape(
+              s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")}"}"""
+        }
+      results.put(name, entry)
+      System.err.println(s"[correctness] $name -> $entry")
     }
-    import scala.concurrent.duration.Duration
-    scala.concurrent.Await.ready(
-      scala.concurrent.Future.sequence(futures), Duration.Inf)
-    pool.shutdown()
     val qs = names.map(n => s"\"$n\":${results.get(n)}").mkString("{", ",", "}")
     (s"""{"sf":"${jsonEscape(cDir)}","n_queries":${names.size},"queries":$qs}""",
       anyFail.get())
   }
 
-  private def jsonEscape(s: String): String =
+  /** Run `f` over `names` on a `par`-thread pool; returns when every call
+    * has finished. */
+  private[graft] def forEachPar(names: Seq[String], par: Int)(f: String => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    scala.concurrent.Await.ready(
+      scala.concurrent.Future.traverse(names)(n => scala.concurrent.Future(f(n))),
+      scala.concurrent.duration.Duration.Inf)
+    pool.shutdown()
+  }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in the oracle SQL would otherwise make a reader's
+    * json.load fail and silently zero the round's correctness. The one
+    * escaper of both mains' JSON output. */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
       case '\\'          => "\\\\"
@@ -131,16 +139,19 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first timed query isn't charged ~3 s of JIT.
     // Headline set only: audit queries (exact full-corpus ground-truth
-    // passes, see SparkEntry.benchExclude) are correctness-gated at sf0.01
-    // but not timed here.
+    // passes, see graft.queries.Audit) are correctness-gated at sf0.01 but not
+    // timed here.
     // Dev-only subset filter (comma-separated names): lets a builder time
     // one query's change without paying the full set. The driver never
     // sets it, so round benches always cover everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
+    def withRole(role: BenchRole): Set[String] =
+      SparkEntry.all.filter(_.bench == role).map(_.name).toSet
+    val audit = withRole(Audit)
     val benchQueries = SparkEntry.queries
-      .filterNot { case (name, _) => SparkEntry.benchExclude.contains(name) }
+      .filterNot { case (name, _) => audit(name) }
       .filter { case (name, _) => only.isEmpty || only(name) }
     if (runs > 0) benchQueries.headOption.foreach { case (_, fn) =>
       try fn(spark, sfDir).queryExecution.toRdd.count()
@@ -162,23 +173,21 @@ object Bench {
         name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
       }.toMap
     }
+    // Any failed run marks the query failed (-1) — a throwing query must
+    // not surface as a fast green entry.
+    def median(samples: Seq[Double]): Double =
+      if (samples.length < runs) -1.0 else samples.sorted.apply((samples.length - 1) / 2)
+    def jsonMap(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val names = if (runs > 0) benchQueries.keys.toSeq else Seq.empty
-    val medians: Seq[(String, Double)] = names.map { name =>
-      val samples = perRun.flatMap(_.get(name).flatten)
-      // Any failed run marks the query failed — a throwing query must not
-      // surface as a fast green entry.
-      val med =
-        if (samples.length < runs) -1.0
-        else samples.sorted.apply((samples.length - 1) / 2)
-      name -> med
-    }
-    val qs = medians.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val medians: Seq[(String, Double)] =
+      names.map(name => name -> median(perRun.flatMap(_.get(name).flatten)))
+    val qs = jsonMap(medians)
     val total = medians.collect { case (_, v) if v >= 0 => v }.sum
     // Quiet-tail isolated medians for the commit-bound streaming replays
     // (VERDICT r12 #3): the full-set medians above ride whatever GC/page-
     // cache state the preceding ~170 queries left behind and swing ~1.5x
-    // between host windows; re-timing each SparkEntry.benchIsolate query
+    // between host windows; re-timing each graft.queries.Isolated query
     // back-to-back at the END of the run — nothing else interleaved, heap
     // settled by an explicit GC — is the same shape as the builder's ad-hoc
     // SPARK_GRAFT_BENCH_ONLY adjudication runs. Recorded alongside (never
@@ -195,7 +204,7 @@ object Bench {
     val isoEnv = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val isoNames = isoEnv.getOrElse(
-      if (only.nonEmpty) Seq.empty else SparkEntry.benchIsolate.toSeq.sorted)
+      if (only.nonEmpty) Seq.empty else withRole(Isolated).toSeq.sorted)
     val isolated: Seq[(String, Double)] =
       if (runs == 0) Seq.empty
       else isoNames
@@ -214,12 +223,9 @@ object Bench {
                 None
             }
           }
-          val med = if (samples.length < runs) -1.0
-                    else samples.sorted.apply((samples.length - 1) / 2)
-          name -> med
+          name -> median(samples)
         }
-    val isoJson = isolated.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val isoJson = jsonMap(isolated)
     val errJson = errors.map(e => "\"" + jsonEscape(e) + "\"").mkString("[", ",", "]")
     // recorded_at_ms: a CONTENT timestamp for dev/gate.py's staleness
     // guard (ADVICE r11 #3 — file mtimes reset on clone/checkout, so the

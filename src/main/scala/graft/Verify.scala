@@ -32,18 +32,7 @@ object Verify {
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
 
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.isEmpty || only(n)).sorted
@@ -85,35 +74,26 @@ object Verify {
 
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = names.map { name =>
-      scala.concurrent.Future {
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            true
-          } catch {
-            case e: Throwable =>
-              failed.add(name)
-              System.err.println(s"[verify] $name failed: ${e.getMessage}")
-              false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val n = done.incrementAndGet()
-        System.err.println(
-          f"[verify] $name ${if (ok) "ok" else "FAILED"} in $sec%.1fs ($n/${names.size})")
-        status(f"""{"name": ${q(name)}%s, "ok": $ok%b, "seconds": $sec%.2f}""")
-      }
+    Bench.forEachPar(names, par) { name =>
+      val fn = SparkEntry.queries(name)
+      val t0 = System.nanoTime()
+      val ok =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          true
+        } catch {
+          case e: Throwable =>
+            failed.add(name)
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            false
+        }
+      val sec = (System.nanoTime() - t0) / 1e9
+      val n = done.incrementAndGet()
+      System.err.println(
+        f"[verify] $name ${if (ok) "ok" else "FAILED"} in $sec%.1fs ($n/${names.size})")
+      status(f"""{"name": ${q(name)}%s, "ok": $ok%b, "seconds": $sec%.2f}""")
     }
-    import scala.concurrent.duration.Duration
-    scala.concurrent.Await.ready(
-      scala.concurrent.Future.sequence(futures), Duration.Inf)
-    pool.shutdown()
     System.err.println(
       s"[verify] done: ${names.size - failed.size}/${names.size} ok" +
         (if (failed.isEmpty) "" else s"; failed: ${failed.toArray.mkString(",")}"))

@@ -75,14 +75,8 @@ object FuseJsonAccess extends Rule[LogicalPlan] {
   // listed charset; dots/spaces here are key characters, not path steps)
   private val BracketPath = """^\$\['([A-Za-z0-9_ .\-]+)'\]$""".r
 
-  /** Install into the session's extraOptimizations exactly once.
-    * `SPARK_GRAFT_NO_FUSE=1` skips installation — the measurement knob for
-    * the recorded fused/unfused bench A/B (BASELINE.md round 10).
-    * `=0`/empty mean fuse normally (the repo's `=0 is off` env convention,
-    * same as SPARK_GRAFT_BENCH_CORRECTNESS). */
+  /** Install into the session's extraOptimizations exactly once. */
   def install(spark: SparkSession): Unit = synchronized {
-    if (sys.env.get("SPARK_GRAFT_NO_FUSE").exists(v => v.nonEmpty && v != "0"))
-      return
     val cur = spark.experimental.extraOptimizations
     if (!cur.contains(this))
       spark.experimental.extraOptimizations = cur :+ this

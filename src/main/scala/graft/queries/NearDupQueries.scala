@@ -1,0 +1,749 @@
+package graft
+package queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.operators.TextDedup
+import QuerySupport._
+
+/** Near-duplicate detection: exact, MinHash, SimHash and winnowing
+  * signatures, LSH pipelines, stored dedup indexes and decontamination. */
+private[graft] object NearDupQueries extends QueryLayer("neardup") {
+  lazy val defs: Seq[QueryDef] = Seq(
+
+    // Exact dedup: hash group-by on full text, keep lowest doc_id.
+    query("q_dedup_exact")(
+      """SELECT min(doc_id) AS keeper_id, CAST(count(*) AS BIGINT) AS n_copies
+         FROM documents GROUP BY text ORDER BY keeper_id""")((s, dir) => {
+      Tables.documents(s, dir)
+        .groupBy(col("text"))
+        .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
+        .select(col("keeper_id"), col("n_copies"))
+        .orderBy("keeper_id")
+    }),
+
+    // Document fingerprinting (content hash; md5 matches DuckDB exactly).
+    query("q_fingerprint")(
+      """SELECT doc_id, md5(text) AS fp FROM documents ORDER BY doc_id""")((s, dir) => {
+      Tables.documents(s, dir)
+        .select(col("doc_id"), md5(col("text")).as("fp"))
+        .orderBy("doc_id")
+    }),
+
+    // MinHash signatures (k=8, char 4-grams) — the signature stage of
+    // MinHash-LSH near-dup detection.
+    query("q_minhash_sig")(
+      s"""WITH $minhashCte SELECT * FROM sig ORDER BY doc_id""")((s, dir) => {
+      TextDedup.minHashSignature(Tables.documents(s, dir), "doc_id", "text")
+        .orderBy("doc_id")
+    }),
+
+    // LSH banding: candidate near-dup pairs from 4 bands x 2 rows, with the
+    // production bucket-size cap (over-full buckets carry no signal and make
+    // the pair output quadratic; see TextDedup.lshCandidatePairs).
+    query("q_lsh_pairs")(
+      s"""WITH $minhashCte, $cappedBandsCte
+         SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+         FROM fb a JOIN fb b
+           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+         ORDER BY id1, id2""")((s, dir) => {
+      val sig = TextDedup.minHashSignature(Tables.documents(s, dir), "doc_id", "text")
+      TextDedup.lshCandidatePairs(sig, "doc_id").orderBy("id1", "id2")
+    }),
+
+    // Production-hash twins of the two heaviest text queries: identical
+    // operators with oracleParity=false, i.e. codegen'd xxhash64 instead of
+    // the md5-derived cross-engine hash. xxhash64 has no DuckDB analog for
+    // the raw values, so each twin emits CONSISTENCY-GATE rows instead
+    // (VERDICT r12 #4, the q_value_percentiles_approx bound pattern): the
+    // production signatures are computed in full (the bench still times the
+    // production path) and checked against invariants the oracle can state
+    // exactly; a broken hash/min/winnow path flips a flag and
+    // hash-mismatches the oracle.
+    //
+    // minhash gate: all 8 components present + min-over-shingles
+    // monotonicity — the signature of text||' '||text is component-wise <=
+    // the signature of text, GUARANTEED for any correct MinHash over texts
+    // of at least the shingle width (self-concatenation only ADDS 4-gram
+    // shingles and a min over a superset cannot increase). Texts SHORTER
+    // than one shingle hash a single truncated whole-text gram whose
+    // doubled form genuinely differs (r13 review) — the invariant is
+    // vacuous there, so such docs (and null texts) gate ok=1 to match the
+    // mirror's stated constant. Measured 0 violations at sf0.01 and sf0.1
+    // before gating (BASELINE.md round-13 second wave).
+    query("q_minhash_sig_prod")(
+      // consistency gate: 8 components present + min-over-shingles
+      // monotonicity under self-concatenation, vacuously green for sub-
+      // shingle-width texts (see the query's comment) — the mirror states
+      // the invariant
+      """SELECT doc_id, CAST(1 AS INT) AS ok
+         FROM documents ORDER BY doc_id""")((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      // shingle width threaded EXPLICITLY to both signature calls AND the
+      // vacuous-case predicate (r13 review: the invariant's length
+      // boundary is exactly the shingle width — a drifting default would
+      // silently decouple them)
+      val shingleN = 4
+      val base = TextDedup.minHashSignature(docs, "doc_id", "text",
+        n = shingleN, oracleParity = false)
+      val dbl = TextDedup.minHashSignature(
+        docs.select(col("doc_id"),
+          concat(col("text"), lit(" "), col("text")).as("text")),
+        "doc_id", "text", n = shingleN, oracleParity = false)
+        .select(col("doc_id") +:
+          (0 until 8).map(i => col(s"mh$i").as(s"dh$i")): _*)
+      val applicable = docs.select(col("doc_id"),
+        (col("text").isNotNull &&
+          length(col("text")) >= shingleN).as("applies"))
+      base.join(dbl, "doc_id").join(applicable, "doc_id")
+        .select(col("doc_id"),
+          when(not(col("applies")) ||
+              (0 until 8).map(i =>
+                col(s"mh$i").isNotNull && col(s"dh$i").isNotNull &&
+                  col(s"dh$i") <= col(s"mh$i")).reduce(_ && _), 1)
+            .otherwise(0).as("ok"))
+        .orderBy("doc_id")
+    }),
+
+    // winnow gate: per-doc production fingerprint count within [1/2, 2]x
+    // the PARITY count — two winnowings of the same text under different
+    // hash functions select at the same ~2/(w+1) density, so the counts
+    // track; measured ratio range [0.667, 1.5] across both sf corpora
+    // (BASELINE.md round-13 second wave), so the 2x band has >= 33%
+    // relative margin. The
+    // parity count doubles as the oracle-checked column (the mirror
+    // recomputes it exactly).
+    query("q_winnow_fp_prod")(
+      // consistency gate (VERDICT r12 #4): the mirror recomputes the PARITY
+      // per-doc fingerprint count exactly and states the band flag invariant
+      // (ok = 1 everywhere); a production winnow drifting outside [1/2, 2]x
+      // the parity density hash-mismatches here
+      s"""WITH $winnowCtes,
+         fps AS (SELECT DISTINCT doc_id, wmin AS fp FROM w WHERE n_after = 4)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par, CAST(1 AS INT) AS ok
+         FROM fps GROUP BY doc_id ORDER BY doc_id""")((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      val par = TextDedup.winnowingFingerprints(docs, "doc_id", "text")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_par"))
+      val prod = TextDedup.winnowingFingerprints(docs, "doc_id", "text",
+          oracleParity = false)
+        .groupBy("doc_id").agg(count(lit(1)).as("n_prod"))
+      // FULL outer (r13 review): a left join from the parity side hid the
+      // prod-fabricates/parity-empty direction entirely — a prod-only doc
+      // now emits a row (n_par=0, ok=0) the mirror does not have, so that
+      // failure is loud twice over (flag + row-count mismatch). One-sided
+      // absences fail the band arithmetically (0*2 >= n fails for n>0 and
+      // n <= 0*2 fails for n>0), so no extra presence conjunct is needed.
+      par.join(prod, Seq("doc_id"), "full")
+        .withColumn("n_par", coalesce(col("n_par"), lit(0L)))
+        .withColumn("n_prod", coalesce(col("n_prod"), lit(0L)))
+        .select(col("doc_id"), col("n_par"),
+          when(col("n_prod") * 2 >= col("n_par") &&
+              col("n_prod") <= col("n_par") * 2, 1)
+            .otherwise(0).as("ok"))
+        .orderBy("doc_id")
+    }),
+
+    // SimHash (60-bit majority-vote signature over token hashes).
+    query("q_simhash")(
+      s"""WITH $simhashBitsCtes
+         SELECT doc_id,
+           CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
+         FROM bits GROUP BY doc_id ORDER BY doc_id""")((s, dir) => {
+      TextDedup.simHashSignature(Tables.documents(s, dir), "doc_id", "text")
+        .orderBy("doc_id")
+    }),
+
+    // Partial-overlap / containment detection via shared winnowing
+    // fingerprints (the MOSS use-case whole-doc Jaccard misses: a short
+    // doc embedded in a long one). Boilerplate fingerprints above the
+    // doc-frequency cap never reach the join (the giant dup family's fps
+    // all exceed it — those pairs belong to the near-dup ops), and the
+    // containment floor keeps the output at the actionable head
+    // (measured: ~90k incidental low-containment pairs vs ~25 at >= 0.5).
+    query("q_winnow_overlap")(
+      // winnow-fingerprint overlap: doc-frequency cap, fp equi-join, min-side containment
+      s"""WITH $winnowCtes,
+         fps AS (SELECT DISTINCT doc_id, wmin AS fp FROM w WHERE n_after = 4),
+         sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
+                   FROM fps GROUP BY doc_id),
+         ok AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 64),
+         kept AS (SELECT fps.* FROM fps JOIN ok USING (fp)),
+         p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
+                 CAST(count(*) AS BIGINT) AS n_shared
+               FROM kept a JOIN kept b
+                 ON a.fp = b.fp AND a.doc_id < b.doc_id
+               GROUP BY a.doc_id, b.doc_id HAVING count(*) >= 2)
+         SELECT id1, id2, n_shared,
+           (n_shared * 10000 // least(s1.nfp, s2.nfp)) / 10000.0 AS containment
+         FROM p JOIN sizes s1 ON s1.doc_id = id1
+                JOIN sizes s2 ON s2.doc_id = id2
+         WHERE (n_shared * 10000 // least(s1.nfp, s2.nfp)) / 10000.0 >= 0.25
+         ORDER BY id1, id2""")((s, dir) => {
+      operators.TextDedup.fingerprintOverlapPairs(
+          Tables.documents(s, dir), "doc_id", "text",
+          minContainment = 0.25)
+        .orderBy("id1", "id2")
+    }),
+
+    // The join SimHash exists for: exact Hamming-3 near-dup pairs over
+    // the signatures — identical signatures collapse to their lowest-id
+    // representative (the value-equality cliques q_simhash's grouping
+    // already covers; a raw segment join would go quadratic in the giant
+    // duplicate family), then pigeonhole banding (4 disjoint 15-bit
+    // segments; 3 flipped bits cannot touch all 4) turns the candidate
+    // space into a segment equi-join with zero recall loss, verified by
+    // the codegen bit_count. The oracle is the brute all-pairs Hamming
+    // join over distinct signatures — hash equality therefore PROVES the
+    // banding is exact on this corpus.
+    query("q_simhash_neardup")(
+      // brute all-pairs Hamming mirror over distinct signatures — proves
+      // the Spark side's pigeonhole banding loses no pair
+      s"""WITH $simhashBitsCtes,
+         sig AS (
+           SELECT doc_id,
+             CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS h
+           FROM bits GROUP BY doc_id),
+         reps AS (SELECT h, min(doc_id) AS rid FROM sig GROUP BY h)
+         SELECT a.rid AS id1, b.rid AS id2,
+           CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
+         FROM reps a JOIN reps b ON a.rid < b.rid
+         WHERE bit_count(xor(a.h, b.h)) <= 3
+         ORDER BY id1, id2""")((s, dir) => {
+      operators.TextDedup.hammingNearDupPairs(
+          TextDedup.simHashSignature(Tables.documents(s, dir), "doc_id", "text"),
+          "doc_id", "simhash", maxHamming = 3)
+        .orderBy("id1", "id2")
+    }),
+
+    // Character trigram Jaccard similarity between consecutive documents,
+    // over md5-hashed shingles: each doc's sorted distinct hash array is
+    // built ONCE, and the per-pair score is the codegen merge walk
+    // (SortedIntersectCount) — the string-array form ran entirely in
+    // interpreted higher-order functions and was ~8x slower at sf0.1.
+    query("q_ngram_jaccard")(
+      s"""WITH s AS (SELECT doc_id,
+           list_distinct(list_transform(${shinglesSql("text", 3)},
+             g -> ('0x' || substr(md5(g), 1, 15))::BIGINT % 2147483647)) AS sh
+         FROM documents)
+         SELECT a.doc_id AS id1, b.doc_id AS id2,
+           floor(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 * 10000) / 10000 AS jac
+         FROM s a JOIN s b ON b.doc_id = a.doc_id + 1
+         ORDER BY id1""")((s, dir) => {
+      graft.functions.ArrayFunctions.register(s)
+      val sh = TextDedup.sortedShingleHashes(Tables.documents(s, dir),
+        "doc_id", "text")
+      val a = sh.toDF("id1", "sh1")
+      val b = sh.toDF("id2", "sh2")
+      a.join(b, col("id2") === col("id1") + 1)
+        .select(col("id1"), col("id2"),
+          TextDedup.jaccardFromSortedShingles(col("sh1"), col("sh2")).as("jac"))
+        .orderBy("id1")
+    }),
+
+    // Winnowing fingerprints (k-gram window minima, SIGMOD'03).
+    query("q_winnow_fp")(
+      s"""WITH $winnowCtes
+         SELECT DISTINCT doc_id, wmin AS fp FROM w WHERE n_after = 4
+         ORDER BY doc_id, fp""")((s, dir) => {
+      TextDedup.winnowingFingerprints(Tables.documents(s, dir), "doc_id", "text")
+        .orderBy("doc_id", "fp")
+    }),
+
+    // Composed near-dup pipeline: MinHash-LSH candidate generation -> exact
+    // trigram-Jaccard verification above a threshold (the canonical
+    // shingle->minhash->band->bucket-join->verify chain). Runs over the FULL
+    // corpus: the LSH-adversarial hot bucket (58% of docs share one band
+    // bucket) is bounded by the deterministic bucket-size cap, and the
+    // capped docs are routed through the exact prefix-filtered similarity
+    // join instead of being dropped (TextDedup.nearDuplicatePairs' hybrid) —
+    // near-linear candidate volume without sacrificing the duplicate family.
+    query("q_near_dup_pipeline")(
+      s"""WITH $pairSigCte, $hybridPairsCtes
+         SELECT id1, id2, jac FROM vp ORDER BY id1, id2""")((s, dir) => {
+      nearDupPairs(s, dir).orderBy("id1", "id2")
+    }),
+
+    // Recall audit of the capped-LSH pipeline: ground truth is the EXACT
+    // all-pairs trigram-Jaccard >= 0.6 set, computed WITHOUT a cartesian by
+    // an AllPairs/PPJoin-style prefix-filtered similarity join (rarest-token
+    // prefixes; see TextDedup.exactJaccardPairs). Every LSH-verified pair is
+    // exact-verified, so found ⊆ true and recall = n_found / n_true — the
+    // number the bucket cap's candidate-dropping costs, shipped as a
+    // first-class query so any corpus slice can re-audit it.
+    query("q_lsh_recall", Audit)(
+      // recall of the hybrid pipeline vs EXACT ground truth; the truth side
+      // mirrors TextDedup.exactJaccardPairs' prefix-filtered similarity join
+      // over the WHOLE corpus (rarest-token prefixes, exact verify) — no
+      // cartesian on either side
+      s"""WITH $pairSigCte, $hybridPairsCtes,
+         fo AS (SELECT CAST(count(*) AS BIGINT) AS n_found FROM vp),
+         tokt AS (SELECT doc_id, unnest(sh) AS tok FROM sh3),
+         dfreq AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
+                   FROM tokt GROUP BY tok),
+         ordered AS (SELECT t.doc_id, array_agg(t.tok ORDER BY d.df, t.tok) AS toks
+                     FROM tokt t JOIN dfreq d ON d.tok = t.tok GROUP BY t.doc_id),
+         pre AS (SELECT doc_id,
+                   unnest(toks[1 : len(toks) - CAST(ceil(len(toks) * 0.6) AS INT) + 1]) AS tok
+                 FROM ordered),
+         ecand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+                   FROM pre a JOIN pre b ON a.tok = b.tok AND a.doc_id < b.doc_id),
+         tr AS (SELECT CAST(count(*) AS BIGINT) AS n_true
+                FROM ecand JOIN sh3 x ON x.doc_id = id1 JOIN sh3 y ON y.doc_id = id2
+                WHERE floor(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
+                        / len(list_distinct(list_concat(x.sh, y.sh))) * 10000)
+                        / 10000 >= 0.6)
+         SELECT tr.n_true, fo.n_found,
+           CASE WHEN tr.n_true = 0 THEN 1.0
+                ELSE floor(CAST(fo.n_found AS DOUBLE) / tr.n_true * 10000) / 10000
+           END AS recall
+         FROM tr, fo""")((s, dir) => {
+      val truth = memo(s, s"exact:$dir")(TextDedup.exactJaccardPairs(
+        Tables.documents(s, dir), "doc_id", "text").localCheckpoint())
+      val nTrue = truth.agg(count(lit(1)).as("n_true"))
+      val nFound = nearDupPairs(s, dir).agg(count(lit(1)).as("n_found"))
+      // n_true = 0 guard (ADVICE r10 #4): found ⊆ true, so an empty truth
+      // set means found is empty too — recall is vacuously perfect (1.0),
+      // not Infinity/engine-divergent
+      nTrue.crossJoin(nFound).select(
+        col("n_true"), col("n_found"),
+        when(col("n_true") === 0, lit(1.0)).otherwise(
+          floor(col("n_found").cast("double") / col("n_true") * 10000) /
+            10000.0).as("recall"))
+    }),
+
+    // Standing recall audit of the STORED text gate (VERDICT r9 #8 — the
+    // q_ann_gate_recall discipline for DedupIndex.matchBatch): found =
+    // the index-backed cross-side verified pairs, truth = the exact
+    // AllPairs cross-side ground truth at the same threshold. found ⊆
+    // true (every gate pair is exact-verified), so recall = found/true;
+    // a banding/ceiling regression now fails the gate, not the eyeball.
+    query("q_dedup_gate_recall", Audit)(
+      // gate recall: found = the banded cross-side mirror (vf); truth = the
+      // exact AllPairs cross-side set over the same slices (prefix-filtered
+      // candidate generation is complete at jac >= 0.6, same scheme as the
+      // q_lsh_recall truth CTE)
+      s"""WITH ${crossVerifiedCtes("WHERE doc_id % 5 = 0", "WHERE doc_id % 5 <> 0")},
+         ttok AS (SELECT doc_id, unnest(sh) AS tok
+                  FROM (SELECT * FROM vshi UNION ALL SELECT * FROM vshe)),
+         tdf AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
+                 FROM ttok GROUP BY tok),
+         tord AS (SELECT t.doc_id, array_agg(t.tok ORDER BY d.df, t.tok) AS toks
+                  FROM ttok t JOIN tdf d ON d.tok = t.tok GROUP BY t.doc_id),
+         tpre AS (SELECT doc_id, len(toks) AS ln,
+                    unnest(toks[1 : len(toks) - CAST(ceil(len(toks) * 0.6) AS INT) + 1]) AS tok
+                  FROM tord),
+         tcand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
+                   FROM tpre a
+                     JOIN (SELECT doc_id FROM vshi) tin ON tin.doc_id = a.doc_id
+                     JOIN tpre b ON b.tok = a.tok
+                     JOIN (SELECT doc_id FROM vshe) tex ON tex.doc_id = b.doc_id),
+         ttr AS (SELECT CAST(count(*) AS BIGINT) AS n_true
+                 FROM tcand JOIN vshi x ON x.doc_id = new_id
+                   JOIN vshe y ON y.doc_id = old_id
+                 WHERE floor(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
+                         / len(list_distinct(list_concat(x.sh, y.sh))) * 10000)
+                         / 10000 >= 0.6),
+         nf AS (SELECT CAST(count(*) AS BIGINT) AS n_found FROM vf)
+         SELECT ttr.n_true, nf.n_found,
+           CASE WHEN ttr.n_true = 0 THEN 1.0
+                ELSE floor(CAST(nf.n_found AS DOUBLE) / ttr.n_true * 10000) / 10000
+           END AS recall
+         FROM ttr, nf""")((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      val truth = memo(s, s"exact:$dir")(TextDedup.exactJaccardPairs(
+          Tables.documents(s, dir), "doc_id", "text").localCheckpoint())
+        .filter((col("id1") % 5 === 0) =!= (col("id2") % 5 === 0))
+      val found = operators.DedupIndex.matchBatchPairs(
+        docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
+        incrDedupIndexDir(s, dir))
+      // n_true = 0 guard (ADVICE r10 #4): vacuously-perfect recall on an
+      // empty cross-side truth set, mirrored in the oracle's CASE
+      truth.agg(count(lit(1)).as("n_true"))
+        .crossJoin(found.agg(count(lit(1)).as("n_found")))
+        .select(col("n_true"), col("n_found"),
+          when(col("n_true") === 0, lit(1.0)).otherwise(
+            floor(col("n_found").cast("double") / col("n_true") * 10000) /
+              10000.0).as("recall"))
+    }),
+
+    // Incremental corpus dedup (the batch-N+1 ingestion shape): incoming
+    // docs (doc_id % 5 == 0) matched against the existing corpus (the rest)
+    // through the minhash band index — cross-side equi-join only, never
+    // existing x existing — with the deterministic bucket ceiling + hybrid
+    // exact recovery at the production default (4096, same as the self-join
+    // pipeline; a 64 ceiling would re-route the giant dup family through a
+    // full exact-recovery pass at sf0.1, 14 s of work LSH does in 6).
+    // The oracle mirrors both paths; the over-ceiling route fires in
+    // TextDedupSpec's maxBucket = 1 case.
+    query("q_incr_dedup")(
+      // incremental dedup mirror: per-side signatures + bands, COMBINED
+      // bucket ceiling (64), cross-side ok-bucket candidates UNION hot-member
+      // prefix-filtered exact candidates, one verification pass, best match
+      // per incoming doc
+      incrDedupOracle("WHERE doc_id % 5 = 0", "WHERE doc_id % 5 <> 0",
+        "d.doc_id % 5 = 0"))((s, dir) => {
+      // Index-backed: the existing corpus contributes its STORED
+      // DedupIndex (built once into the on-disk cache below, appended per
+      // batch in production), so the timed per-batch cost is one signature
+      // pass over the batch + touched-bucket joins against the store —
+      // never a corpus rehash. Same output contract as before; parity with
+      // the recompute path is asserted in IncrIndexSpec.
+      val docs = Tables.documents(s, dir)
+      operators.DedupIndex.matchBatch(
+          docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
+          incrDedupIndexDir(s, dir))
+        .orderBy("new_id")
+    }),
+
+    // Fuzzy eval-set decontamination: mark every corpus doc that is a
+    // NEAR-duplicate of a held-out eval slice (here source='src0') — the
+    // MinHash upgrade of q_contamination's exact 8-gram overlap, catching
+    // paraphrased/reflowed leakage exact grams miss. Pure reuse of the
+    // cross-side incremental machinery: eval side contributes its band
+    // index, never corpus x corpus.
+    // index-backed like q_incr_dedup: the eval slice's band index is a
+    // stored artifact (built once into the cache), so the timed cost is
+    // the corpus-side signature pass + touched-bucket joins
+    query("q_fuzzy_decontam")(
+      incrDedupOracle("WHERE source <> 'src0'", "WHERE source = 'src0'",
+        "d.source <> 'src0'"))((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      operators.DedupIndex.matchBatch(
+          docs.filter(col("source") =!= "src0"), "doc_id", "text",
+          evalSliceIndexDir(s, dir))
+        .orderBy("new_id")
+    }),
+
+    // Benchmark decontamination: flag corpus docs sharing any character
+    // 8-gram with a (simulated) eval set — distinct-gram equi-join +
+    // partial count, no pairwise document comparison.
+    query("q_contamination")(
+      s"""WITH bg AS (
+           SELECT DISTINCT g
+           FROM (SELECT unnest(${shinglesSql("text", 8)}) AS g
+                 FROM documents WHERE doc_id % 97 = 0)),
+         dg AS (
+           SELECT doc_id, unnest(${shinglesSql("text", 8)}) AS g
+           FROM documents),
+         ov AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_overlap
+                FROM dg JOIN bg USING (g) GROUP BY doc_id)
+         SELECT d.doc_id,
+           CAST(coalesce(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
+           coalesce(ov.n_overlap, 0) > 0 AS contaminated
+         FROM documents d LEFT JOIN ov USING (doc_id)
+         ORDER BY d.doc_id""")((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      val benchmark = docs.filter(col("doc_id") % 97 === 0)
+      TextDedup.ngramContamination(docs, "doc_id", "text", benchmark, "text")
+        .orderBy("doc_id")
+    }),
+
+    // Corpus diff against a blocklist ("drop documents a previous run
+    // already used"): bloom prefilter routes definitely-clean rows past the
+    // join with zero shuffle; only the maybe-set enters the exact anti-join
+    // that removes bloom false positives — result is EXACT, so the oracle
+    // is a plain set difference.
+    query("q_bloom_diff")(
+      """SELECT doc_id FROM documents WHERE doc_id % 7 <> 0 ORDER BY doc_id""")((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      val blocklist = docs.filter(col("doc_id") % 7 === 0)
+        .select(col("doc_id").as("blocked_id"))
+      operators.Blocklist.bloomDiff(docs, "doc_id", blocklist, "blocked_id")
+        .select(col("doc_id"))
+        .orderBy("doc_id")
+    }),
+
+    // Exact-substring duplication stats: fraction of each document's tokens
+    // covered by a token 5-gram occurring in another document (Lee et al.
+    // 2021 shape). Gram-keyed equi-joins only, no pairwise comparison.
+    query("q_substring_dedup")(
+      s"""WITH $tokenGramCtes,
+         rg AS (SELECT g FROM o GROUP BY g HAVING count(DISTINCT doc_id) > 1),
+         cv AS (SELECT DISTINCT doc_id, pos + unnest(range(5)) AS tp
+                FROM o SEMI JOIN rg USING (g)),
+         c2 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_covered
+                FROM (SELECT DISTINCT doc_id, tp FROM cv) GROUP BY doc_id)
+         SELECT t.doc_id, CAST(len(toks) AS INT) AS n_tok,
+           CAST(coalesce(n_covered, 0) AS BIGINT) AS n_covered,
+           floor(coalesce(n_covered, 0) * 10000 / len(toks)) / 10000 AS cover_ratio
+         FROM t LEFT JOIN c2 USING (doc_id) ORDER BY doc_id""")((s, dir) => {
+      TextDedup.repeatedNgramCoverage(Tables.documents(s, dir),
+          "doc_id", "text", n = 5)
+        .orderBy("doc_id")
+    }),
+
+    // Repeated-span scrubbing: the ACTING form of q_substring_dedup —
+    // documents rewritten with every token covered by a cross-document
+    // repeated 5-gram deleted (boilerplate/license/template removal that
+    // keeps the unique remainder instead of dropping whole docs).
+    query("q_boilerplate_scrub")(
+      s"""WITH $tokenGramCtes,
+         rg AS (SELECT g FROM o GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
+         cv AS (SELECT DISTINCT doc_id, pos + unnest(range(5)) AS tp
+                FROM o SEMI JOIN rg USING (g)),
+         tok AS (SELECT doc_id, unnest(range(1, len(toks) + 1)) AS tp, toks FROM t),
+         tk AS (SELECT doc_id, tp, toks[tp] AS t FROM tok),
+         kept AS (SELECT doc_id, tp, t FROM tk ANTI JOIN cv USING (doc_id, tp)),
+         rb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+                  string_agg(t, ' ' ORDER BY tp) AS clean_text
+                FROM kept GROUP BY doc_id)
+         SELECT t.doc_id, CAST(len(toks) AS INT) AS n_tok,
+           CAST(CAST(len(toks) AS BIGINT) - coalesce(n_kept, 0) AS BIGINT)
+             AS n_removed,
+           coalesce(clean_text, '') AS clean_text
+         FROM t LEFT JOIN rb USING (doc_id) ORDER BY doc_id""")((s, dir) => {
+      TextDedup.removeRepeatedSpans(Tables.documents(s, dir),
+          "doc_id", "text", n = 5, minDocs = 2)
+        .orderBy("doc_id")
+    }),
+
+    // Content-defined chunking dedup: hash-boundary chunks move WITH the
+    // content, so repeated boilerplate is caught even when its position
+    // shifted — the complement of fixed n-gram coverage.
+    query("q_cdc_dedup")(
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         tok AS (SELECT doc_id, pos, toks[pos] AS tk
+                 FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS pos
+                       FROM t)),
+         sg AS (SELECT doc_id, pos, tk,
+                  sum(CASE WHEN ('0x' || substr(md5(tk), 1, 15))::BIGINT % 8 = 0
+                      THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY doc_id ORDER BY pos) AS seg
+                FROM tok),
+         ch AS (SELECT doc_id, seg, CAST(count(*) AS BIGINT) AS seg_tok,
+                  ('0x' || substr(md5(string_agg(tk, ' ' ORDER BY pos)), 1, 15))::BIGINT
+                    AS seg_hash
+                FROM sg GROUP BY doc_id, seg),
+         rep AS (SELECT seg_hash FROM ch GROUP BY seg_hash
+                 HAVING count(DISTINCT doc_id) > 1),
+         pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_rep_chunks,
+                  CAST(sum(seg_tok) AS BIGINT) AS rep_tok
+                FROM ch SEMI JOIN rep USING (seg_hash) GROUP BY doc_id),
+         nc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks
+                FROM ch GROUP BY doc_id)
+         SELECT t.doc_id, CAST(len(toks) AS INT) AS n_tok,
+           CAST(coalesce(nc.n_chunks, 0) AS BIGINT) AS n_chunks,
+           CAST(coalesce(pd.n_rep_chunks, 0) AS BIGINT) AS n_rep_chunks,
+           CAST(coalesce(pd.rep_tok, 0) AS BIGINT) AS rep_tok,
+           floor(coalesce(pd.rep_tok, 0) * 10000 / len(toks)) / 10000 AS rep_ratio
+         FROM t LEFT JOIN nc USING (doc_id) LEFT JOIN pd USING (doc_id)
+         ORDER BY t.doc_id""")((s, dir) => {
+      TextDedup.cdcRepeatedChunks(Tables.documents(s, dir), "doc_id", "text")
+        .orderBy("doc_id")
+    }),
+
+    // Corpus-wide paragraph dedup, keep-first (CCNet line-dedup shape).
+    // The synthetic corpus has no newlines, so a literal token delimiter
+    // exercises the identical plan: hash-keyed winner agg + per-doc
+    // rebuild.
+    query("q_paragraph_dedup")(
+      """WITH p0 AS (SELECT doc_id, string_split(text, ' the ') AS ps
+                     FROM documents),
+         p AS (SELECT doc_id, pos AS pidx, ps[pos] AS para
+               FROM (SELECT doc_id, ps, unnest(range(1, len(ps) + 1)) AS pos
+                     FROM p0)
+               WHERE len(ps[pos]) > 0),
+         h AS (SELECT doc_id, pidx, para,
+                 row_number() OVER (
+                   PARTITION BY ('0x' || substr(md5(para), 1, 15))::BIGINT
+                   ORDER BY doc_id, pidx) AS rn
+               FROM p),
+         reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+                   string_agg(para, ' the ' ORDER BY pidx) AS clean_text
+                 FROM h WHERE rn = 1 GROUP BY doc_id),
+         np AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par
+                FROM p GROUP BY doc_id)
+         SELECT d.doc_id,
+           CAST(coalesce(np.n_par, 0) AS BIGINT) AS n_par,
+           CAST(coalesce(np.n_par, 0) - coalesce(reb.n_kept, 0) AS BIGINT)
+             AS n_removed,
+           coalesce(reb.clean_text, '') AS clean_text
+         FROM documents d LEFT JOIN np USING (doc_id)
+           LEFT JOIN reb USING (doc_id)
+         ORDER BY doc_id""")((s, dir) =>
+      TextDedup.paragraphDedup(Tables.documents(s, dir), "doc_id", "text",
+          " the ")
+        .orderBy("doc_id")),
+
+    // Pairwise source-overlap estimate: one MinHash signature per source
+    // over its shingle set, component agreement estimating Jaccard. The
+    // corpus-scale work is one explode + one O(#sources)-row agg.
+    query("q_source_overlap")({
+      val matches = (0 until 8)
+        .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH sh AS (SELECT source, unnest(${shinglesSql("text", 4)}) AS sh
+                      FROM documents),
+         hs AS (SELECT source,
+           ('0x' || substr(md5(sh), 1, 15))::BIGINT % 2147483647 AS h FROM sh),
+         sig AS (SELECT source, ${minHashMins(8)} FROM hs GROUP BY source),
+         pairs AS (SELECT a.source AS g1, b.source AS g2,
+             CAST($matches AS BIGINT) AS k_match
+           FROM sig a JOIN sig b ON a.source < b.source)
+         SELECT g1, g2, k_match,
+           CAST((10000 * k_match) // 8 AS BIGINT) AS jaccard_bp
+         FROM pairs ORDER BY g1, g2""" })((s, dir) =>
+      TextDedup.groupOverlap(Tables.documents(s, dir), "source", "text")),
+
+    // Dataset-freshness gate against the STORED n-gram index (built from
+    // the %5 ∉ {0,4} slice, %5 == 4 appended): per incoming doc, the
+    // fraction of its distinct 5-grams the corpus has literally seen.
+    // One stored-gram scan per batch, no store-side shuffle.
+    query("q_novelty")({
+      val gram = (0 until 5).map(i => s"toks[pos + $i]").mkString(" || ' ' || ")
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                     FROM documents),
+         sg AS (SELECT DISTINCT
+                  ('0x' || substr(md5($gram), 1, 15))::BIGINT AS g
+                FROM (SELECT toks, unnest(range(1, len(toks) - 3)) AS pos
+                      FROM t WHERE doc_id % 5 <> 0)),
+         bg AS (SELECT DISTINCT doc_id,
+                  ('0x' || substr(md5($gram), 1, 15))::BIGINT AS g
+                FROM (SELECT doc_id, toks,
+                        unnest(range(1, len(toks) - 3)) AS pos
+                      FROM t WHERE doc_id % 5 = 0)),
+         k AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_known
+               FROM bg JOIN sg USING (g) GROUP BY 1),
+         ng AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
+                FROM bg GROUP BY 1)
+         SELECT d.doc_id,
+           CAST(coalesce(ng.n_grams, 0) AS BIGINT) AS n_grams,
+           CAST(coalesce(k.n_known, 0) AS BIGINT) AS n_known,
+           CAST(CASE WHEN coalesce(ng.n_grams, 0) = 0 THEN 10000
+                ELSE (10000 * (ng.n_grams - coalesce(k.n_known, 0)))
+                     // ng.n_grams END AS BIGINT) AS novelty_bp
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
+           LEFT JOIN ng USING (doc_id) LEFT JOIN k USING (doc_id)
+         ORDER BY doc_id""" })((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      operators.NoveltyIndex.noveltyBatch(
+          docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
+          noveltyIndexDir(s, dir))
+        .orderBy("doc_id")
+    })
+  )
+
+  /** On-disk DedupIndex for q_incr_dedup's existing-corpus side (docs with
+    * doc_id % 5 != 0), built once per sf dir under /tmp and reused across
+    * sessions — the index is a MAINTAINED ARTIFACT like the source parquet
+    * itself, so unlike the session memos above it deliberately survives
+    * `resetMemos`: the bench should time the per-batch match, not the
+    * one-time corpus indexing (testdata is immutable per TESTDATA.md, so
+    * the cache cannot go stale). */
+  private def dedupIndexDir(s: SparkSession, dir: String, label: String)(
+      existing: => DataFrame): String =
+    maintained(dir, label)(operators.DedupIndex.exists)(
+      operators.DedupIndex.build(existing, "doc_id", "text", _))
+
+  private def incrDedupIndexDir(s: SparkSession, dir: String): String =
+    dedupIndexDir(s, dir, "incr_dedup_index")(
+      Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0))
+
+  /** Stored band index of the held-out eval slice (source='src0') — the
+    * decontamination reference set is indexed once, exactly like a
+    * production eval registry, so each corpus sweep pays only its own
+    * signature pass. */
+  private def evalSliceIndexDir(s: SparkSession, dir: String): String =
+    dedupIndexDir(s, dir, "eval_src0_index")(
+      Tables.documents(s, dir).filter(col("source") === "src0"))
+
+  /** Incrementally-composed NoveltyIndex fixture for q_novelty: grams of
+    * the doc_id % 5 ∉ {0, 4} slice at build, the % 5 == 4 slice appended;
+    * the oracle recomputes the same distinct-gram union from scratch. */
+  private def noveltyIndexDir(s: SparkSession, dir: String): String =
+    composed(dir, "novelty_index")(operators.NoveltyIndex.exists) { root =>
+      val docs = Tables.documents(s, dir)
+      operators.NoveltyIndex.build(
+        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4),
+        "doc_id", "text", root)
+      operators.NoveltyIndex.append(docs.filter(col("doc_id") % 5 === 4),
+        "doc_id", "text", root)
+    }
+
+  /** Cross-side incremental-dedup mirror, parameterized by the two corpus
+    * slices (see q_incr_dedup / q_fuzzy_decontam). `finalPred` re-selects
+    * the incoming slice for the one-row-per-incoming-doc left join. */
+  private def incrDedupOracle(whereIn: String, whereEx: String,
+                              finalPred: String): String =
+    s"""WITH ${crossVerifiedCtes(whereIn, whereEx)},
+         best AS (SELECT new_id, old_id AS match_id, jac FROM (
+                    SELECT new_id, old_id, jac, row_number() OVER
+                      (PARTITION BY new_id ORDER BY jac DESC, old_id) AS rn
+                    FROM vf) WHERE rn = 1)
+         SELECT d.doc_id AS new_id, best.match_id,
+           coalesce(best.jac, 0.0) AS jac,
+           best.match_id IS NOT NULL AS is_dup
+         FROM documents d LEFT JOIN best ON best.new_id = d.doc_id
+         WHERE $finalPred
+         ORDER BY new_id"""
+
+  /** Minhash signature CTE `sig` (mirrors TextDedup.minHashSignature:
+    * 60-bit md5-prefix hash mod 2^31-1 of the char 4-grams, 8
+    * perturbations). */
+  private val minhashCte: String =
+    s"""sh AS (SELECT doc_id, unnest(${shinglesSql("text", 4)}) AS sh FROM documents ),
+        hs AS (SELECT doc_id,
+          ('0x' || substr(md5(sh), 1, 15))::BIGINT % 2147483647 AS h FROM sh),
+        sig AS (SELECT doc_id, ${minHashMins(8)} FROM hs GROUP BY doc_id)"""
+
+  /** Band CTE (4 bands x 2 signature rows) over `sig`, then the
+    * deterministic bucket-size cap mirror of TextDedup.lshCandidatePairs
+    * (maxBucket = 64): `fb` holds only rows of buckets small enough to
+    * carry signal. */
+  private val cappedBandsCte: String =
+    """bands AS (
+         SELECT doc_id, 0 AS band, concat_ws('_', mh0, mh1) AS bucket FROM sig
+         UNION ALL SELECT doc_id, 1, concat_ws('_', mh2, mh3) FROM sig
+         UNION ALL SELECT doc_id, 2, concat_ws('_', mh4, mh5) FROM sig
+         UNION ALL SELECT doc_id, 3, concat_ws('_', mh6, mh7) FROM sig),
+       ok AS (SELECT band, bucket FROM bands
+              GROUP BY band, bucket HAVING count(*) <= 64),
+       fb AS (SELECT bands.* FROM bands JOIN ok USING (band, bucket))"""
+
+  /** Winnowing mirror of q_winnow_fp, q_winnow_overlap and q_winnow_fp_prod
+    * (TextDedup.winnowingFingerprints parity hash): 8-char k-gram hashes
+    * `g(doc_id, p, h)` and their 4-wide window minima `w(doc_id, wmin,
+    * n_after)`; a full window has n_after = 4. */
+  private val winnowCtes =
+    """pos AS (
+           SELECT doc_id, text,
+             unnest(range(greatest(length(text) - 8, 0) + 1)) AS p
+           FROM documents),
+         g AS (
+           SELECT doc_id, p,
+             ('0x' || substr(md5(substring(text, p + 1, 8)), 1, 15))::BIGINT
+               % 2147483647 AS h
+           FROM pos),
+         w AS (
+           SELECT doc_id,
+             min(h) OVER (PARTITION BY doc_id ORDER BY p
+               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
+             count(*) OVER (PARTITION BY doc_id ORDER BY p
+               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS n_after
+           FROM g)"""
+
+  /** SimHash mirror of q_simhash and q_simhash_neardup: per-(doc, bit)
+    * majority votes `bits(doc_id, b, s)` over 60-bit token hashes. */
+  private val simhashBitsCtes =
+    """tok AS (
+           SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h
+           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)),
+         bits AS (
+           SELECT doc_id, b, sum(2 * ((h >> b) & 1) - 1) AS s
+           FROM tok, (SELECT unnest(generate_series(0, 59)) AS b)
+           GROUP BY doc_id, b)"""
+
+  /** Token 5-gram occurrences of q_substring_dedup and q_boilerplate_scrub
+    * (TextDedup.repeatedNgramCoverage): `t(doc_id, toks)` and one
+    * `o(doc_id, pos, g)` row per gram start, g its 60-bit md5 prefix. */
+  private val tokenGramCtes: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+         p AS (SELECT doc_id, toks,
+           unnest(range(1, greatest(len(toks) - 4, 0) + 1)) AS pos FROM t),
+         o AS (SELECT doc_id, pos,
+           ('0x' || substr(md5(array_to_string(toks[pos:pos+4], ' ')), 1, 15))::BIGINT
+             AS g FROM p)"""
+}
