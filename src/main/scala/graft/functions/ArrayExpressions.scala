@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Native (whole-stage-codegen) intersection count of two SORTED,
@@ -80,16 +80,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level API for the array expressions. */
+/** Column-level API for the array expressions. */
 object ArrayFunctions {
 
-  /** Idempotent per-session registration (temp function registry). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect", exprs => SortedIntersectCount(exprs(0), exprs(1)),
-      "scala_udf")
-
-  /** Intersection count Column (requires [[register]] on the session). */
+  /** Intersection count Column. */
   def sortedIntersect(a: Column, b: Column): Column =
-    call_function("sorted_intersect", a, b)
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, EvalMode, Expression, IsNotNull, Literal, StringSplitSQL}
 import org.apache.spark.sql.types.{DecimalType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,12 +29,19 @@ object FlinkCompat {
     case _ => None
   }
 
+  /** Installs the names into the session once; a repeat call is a no-op
+    * (no re-registration, no "replaced a previously registered function"
+    * warning). */
   def register(spark: SparkSession): Unit = {
     // Compiled JSON views parse the payload once per row, not once per
     // mapped column — see graft.plans.FuseJsonAccess (SURVEY §4 row 1).
     graft.plans.FuseJsonAccess.install(spark)
     val reg = spark.sessionState.functionRegistry
+    // json_value is no Spark built-in: present means already installed.
+    if (!reg.functionExists(FunctionIdentifier("json_value"))) install(reg)
+  }
 
+  private def install(reg: FunctionRegistry): Unit = {
     // JSON_VALUE(str, path) — Flink returns STRING, exactly get_json_object.
     reg.createOrReplaceTempFunction("json_value",
       args => fn("get_json_object", args: _*), "built-in")

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -415,62 +415,27 @@ object ShingleHashes {
     new GenericArrayData(rows.toArray)
   }
 
-  private def longOf(e: Expression): Long = e.eval() match {
-    case l: Long => l
-    case i: Int => i.toLong
-  }
-
-  /** Idempotent per-session registration (temp function registry). */
-  def register(spark: SparkSession): Unit = {
-    def scalar[A](e: Expression): A = e.eval().asInstanceOf[A]
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", exprs =>
-        ShingleHashes(exprs(0), scalar[Int](exprs(1)),
-          scalar[Boolean](exprs(2)), longOf(exprs(3))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs =>
-        WinnowFingerprints(exprs(0), scalar[Int](exprs(1)),
-          scalar[Int](exprs(2)), scalar[Boolean](exprs(3)),
-          longOf(exprs(4))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs =>
-        MinHashSig(exprs(0), scalar[Int](exprs(1)), longOf(exprs(2))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig_text", exprs =>
-        MinHashSigText(exprs(0), scalar[Int](exprs(1)),
-          scalar[Boolean](exprs(2)), scalar[Int](exprs(3)),
-          longOf(exprs(4))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", exprs =>
-        CdcChunks(exprs(0), longOf(exprs(1)), scalar[Boolean](exprs(2))),
-      "scala_udf")
-  }
-
-  /** Sorted-distinct shingle-hash array Column (requires [[register]]). */
+  /** Sorted-distinct shingle-hash array Column. */
   def shingleHashes(text: Column, n: Int, parity: Boolean,
                     mod: Long): Column =
-    call_function("shingle_hashes", text, lit(n), lit(parity), lit(mod))
+    column(ShingleHashes(expression(text), n, parity, mod))
 
-  /** Winnowing fingerprint array Column (requires [[register]]). */
+  /** Winnowing fingerprint array Column. */
   def winnowFps(text: Column, kgram: Int, w: Int, parity: Boolean,
                 mod: Long): Column =
-    call_function("winnow_fps", text, lit(kgram), lit(w), lit(parity),
-      lit(mod))
+    column(WinnowFingerprints(expression(text), kgram, w, parity, mod))
 
-  /** k-wide MinHash signature of a `% p`-reduced hash array Column
-    * (requires [[register]]); null for empty arrays. */
+  /** k-wide MinHash signature of a `% p`-reduced hash array Column; null
+    * for empty arrays. */
   def minHashSig(sh: Column, k: Int, p: Long): Column =
-    call_function("minhash_sig", sh, lit(k), lit(p))
+    column(MinHashSig(expression(sh), k, p))
 
-  /** CDC chunk array Column — array<struct<seg_tok, seg_hash>> per doc
-    * (requires [[register]]). */
+  /** CDC chunk array Column — array<struct<seg_tok, seg_hash>> per doc. */
   def cdcChunks(text: Column, div: Long, parity: Boolean): Column =
-    call_function("cdc_chunks", text, lit(div), lit(parity))
+    column(CdcChunks(expression(text), div, parity))
 
-  /** Text-fused k-wide MinHash signature Column (requires [[register]]). */
+  /** Text-fused k-wide MinHash signature Column. */
   def minHashSigText(text: Column, n: Int, parity: Boolean, k: Int,
                      p: Long): Column =
-    call_function("minhash_sig_text", text, lit(n), lit(parity), lit(k),
-      lit(p))
+    column(MinHashSigText(expression(text), n, parity, k, p))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native (whole-stage-codegen) dot product over two `array<double>` columns.
   *
@@ -76,7 +76,6 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level API for the vector expressions. */
 /** Exact integer squared-L2 distance between two `array<bigint>` columns
   * (quantized vectors) — the inner loop of every k-means assignment, IVF
   * probe, PQ lookup build, and ANN refine. The declarative
@@ -272,38 +271,22 @@ case class VecPlaneProj(child: Expression, plane: Int)
       newChild: Expression): VecPlaneProj = copy(child = newChild)
 }
 
+/** Column-level API for the vector expressions. */
 object VectorFunctions {
 
-  /** Idempotent per-session registration (temp function registry). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_l2sq_l", exprs => VecL2SqLong(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_l", exprs => VecDotLong(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_plane_proj", {
-        case Seq(v, Literal(p: Int, IntegerType)) => VecPlaneProj(v, p)
-        case exprs => throw new IllegalArgumentException(
-          "vec_plane_proj(vec, planeIndex) needs a literal int plane index, " +
-            s"got ${exprs.map(_.sql).mkString(", ")}")
-      }, "scala_udf")
-  }
+  /** Dot product Column. */
+  def vecDot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  /** Dot product Column (requires [[register]] on the session first). */
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** Integer squared-L2 Column (requires [[register]]). */
+  /** Integer squared-L2 Column. */
   def vecL2SqLong(a: Column, b: Column): Column =
-    call_function("vec_l2sq_l", a, b)
+    column(VecL2SqLong(expression(a), expression(b)))
 
-  /** Integer dot Column (requires [[register]]). */
+  /** Integer dot Column. */
   def vecDotLong(a: Column, b: Column): Column =
-    call_function("vec_dot_l", a, b)
+    column(VecDotLong(expression(a), expression(b)))
 
-  /** Deterministic-hyperplane projection Column (requires [[register]]). */
+  /** Deterministic-hyperplane projection Column. */
   def vecPlaneProj(v: Column, plane: Int): Column =
-    call_function("vec_plane_proj", v,
-      org.apache.spark.sql.functions.lit(plane))
+    column(VecPlaneProj(expression(v), plane))
 }

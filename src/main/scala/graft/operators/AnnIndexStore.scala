@@ -210,19 +210,10 @@ object AnnIndexStore {
   def batchApplied(dir: String, batchId: Long): Boolean =
     GenStore.batchApplied(dir, batchId)
 
-  /** The vector ids a batchId-keyed append committed — the survivor set a
-    * retried, already-applied gate micro-batch must reproduce without
-    * re-matching (the store now CONTAINS the batch, so a re-match would
-    * self-suppress every survivor). */
-  def batchVecIds(spark: SparkSession, dir: String, batchId: Long): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val st = GenStore.readOrFail(dir, "AnnIndexStore")
-    val t = s"${st.genDir(dir)}/${GenStore.batchSeg(batchId)}/cells"
-    if (!GenStore.hasData(t)) // zero-survivor batch: empty, schema-less seg
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType))))
-    else spark.read.parquet(t).select(col("id")).distinct()
-  }
+  /** The vector ids a batchId-keyed append committed
+    * ([[GenStore.batchIds]]). */
+  def batchVecIds(spark: SparkSession, dir: String, batchId: Long): DataFrame =
+    GenStore.batchIds(spark, dir, "AnnIndexStore", batchId, "cells", "id")
 
   def exists(dir: String): Boolean =
     GenStore.read(dir).exists { st =>
@@ -365,7 +356,6 @@ object AnnIndexStore {
     // r14: codegen integer dot (the Similarity/Clustering discipline)
     // instead of the interpreted aggregate(zip_with) fold — same exact
     // 64-bit sum over equal-length non-null quantized vectors.
-    graft.functions.VectorFunctions.register(src.sparkSession)
     def idot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.VectorFunctions.vecDotLong(a, b)
     val q = qpts.select(col("id").as("qid"), col("q").as("qq"))
@@ -466,7 +456,6 @@ object AnnIndexStore {
       .select(col("id").as("qid"), col("q").as("qq"))
     val c = Clustering.quantized(corpus, idCol, vecCol, scale)
       .select(col("id").as("nid"), col("q").as("nq"))
-    graft.functions.VectorFunctions.register(batch.sparkSession)
     val best = c.crossJoin(broadcast(b))
       .filter(col("nid") =!= col("qid"))
       // r14: codegen integer squared-L2 instead of the interpreted

@@ -32,7 +32,6 @@ object Clustering {
   /** Element-wise squared-L2 to each centroid literal; argmin with ties to
     * the lowest cluster index, via array_min over struct(dist, j). */
   private[operators] def nearest(cents: Seq[(Int, Array[Long])], q: Column): Column = {
-    registerVec()
     val dists = cents.map { case (j, c) =>
       struct(
         graft.functions.VectorFunctions
@@ -41,20 +40,6 @@ object Clustering {
     }
     array_min(array(dists: _*))
   }
-
-  // Column builders have no df handle; the registry is session state, so
-  // register against the active (or process-default) session — idempotent,
-  // and every execution path here is single-session. A missing session
-  // fails HERE (the Similarity.lshSignBits contract), not later in
-  // analysis with "undefined function vec_l2sq_l".
-  private def registerVec(): Unit =
-    graft.functions.VectorFunctions.register(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(throw new IllegalStateException(
-          "Clustering needs an active or default SparkSession to register " +
-            "the vector functions; build the Column on the thread that owns " +
-            "the session (or call VectorFunctions.register(session) first)")))
 
   /** Quantized point table (id, q: array<long>) — floor(v * scale), the
     * exact-integer space every operator here works in. Checkpointed: it is
@@ -169,10 +154,8 @@ object Clustering {
 
   /** Exact integer squared L2 of a quantized vector column to a centroid
     * literal. */
-  private[operators] def qdist(q: Column, c: Array[Long]): Column = {
-    registerVec()
+  private[operators] def qdist(q: Column, c: Array[Long]): Column =
     graft.functions.VectorFunctions.vecL2SqLong(q, array(c.map(lit(_)): _*))
-  }
 
   /** Per-subspace PQ training artifacts: the corpus code table
     * (sub, id, code) and the per-query lookup tables (qid, sub, code, pd)
@@ -236,7 +219,6 @@ object Clustering {
   private[operators] def refineTopKQuantized(pool: DataFrame, cq: DataFrame,
                                              qq: DataFrame, kNN: Int,
                                              minDist: Long = -1L): DataFrame = {
-    graft.functions.VectorFunctions.register(pool.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("dist"), col("id"))
     val scored = pool.select(col("qid"), col("nid").as("id"))

@@ -135,20 +135,11 @@ object DedupIndex {
   def batchApplied(dir: String, batchId: Long): Boolean =
     GenStore.batchApplied(dir, batchId)
 
-  /** The distinct doc ids a batchId-keyed append committed — the survivor
-    * set a retried, already-applied gate micro-batch must reproduce
-    * without re-matching (the store now CONTAINS the batch, so a re-match
-    * would self-suppress every survivor). */
+  /** The distinct doc ids a batchId-keyed append committed
+    * ([[GenStore.batchIds]]). */
   def batchDocIds(spark: SparkSession, dir: String,
-                  batchId: Long, idCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val st = GenStore.readOrFail(dir, "DedupIndex")
-    val t = s"${st.genDir(dir)}/${GenStore.batchSeg(batchId)}/shingles"
-    if (!GenStore.hasData(t)) // zero-survivor batch: empty, schema-less seg
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField(idCol, LongType))))
-    else spark.read.parquet(t).select(col(idCol)).distinct()
-  }
+                  batchId: Long, idCol: String): DataFrame =
+    GenStore.batchIds(spark, dir, "DedupIndex", batchId, "shingles", idCol)
 
   private def write(docs: DataFrame, idCol: String, textCol: String,
                     segDir: String, oracleParity: Boolean, nPfx: Int,

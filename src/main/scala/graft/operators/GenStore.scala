@@ -2,7 +2,9 @@ package graft.operators
 
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Shared generation + segment manifest machinery for the maintained
   * stores ([[DedupIndex]], [[AnnIndexStore]], [[PairStore]]) — one copy of
@@ -230,6 +232,21 @@ private[graft] object GenStore {
     * committed — the replay-detection half of the idempotent gate loop. */
   def batchApplied(dir: String, batchId: Long): Boolean =
     read(dir).exists(_.segs.contains(batchSeg(batchId)))
+
+  /** The distinct `idCol` values a batchId-keyed append committed to
+    * `table` — the survivor set a retried, already-applied gate
+    * micro-batch must reproduce without re-matching (the store now
+    * CONTAINS the batch, so a re-match would self-suppress every
+    * survivor). A zero-survivor batch's segment has no data files and
+    * reads as an empty `(idCol: long)` frame. */
+  def batchIds(spark: SparkSession, dir: String, what: String, batchId: Long,
+               table: String, idCol: String): DataFrame = {
+    val t = s"${readOrFail(dir, what).genDir(dir)}/${batchSeg(batchId)}/$table"
+    if (!hasData(t))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField(idCol, LongType))))
+    else spark.read.parquet(t).select(col(idCol)).distinct()
+  }
 
   /** Minor-fold commit: atomically replace the already-written `fold`
     * segments with `merged` in the manifest, SAME generation — the cheap

@@ -136,19 +136,11 @@ object NoveltyIndex {
     ()
   }
 
-  /** The survivor ids a gated batchId append committed (empty for a
-    * zero-survivor batch, whose segment has no data files). */
+  /** The survivor ids a gated batchId append committed
+    * ([[GenStore.batchIds]]). */
   def batchDocIds(spark: SparkSession, dir: String, batchId: Long,
-                  idCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val st = GenStore.readOrFail(dir, "NoveltyIndex")
-    val t = s"${st.genDir(dir)}/${GenStore.batchSeg(batchId)}/docs"
-    if (!GenStore.hasData(t))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField(idCol, LongType))))
-    else spark.read.parquet(t).select(col(idCol)).distinct()
-  }
+                  idCol: String): DataFrame =
+    GenStore.batchIds(spark, dir, "NoveltyIndex", batchId, "docs", idCol)
 
   /** Fold all segments into one duplicate-free base segment of the next
     * generation (serve-through-compact; readers of the pinned previous

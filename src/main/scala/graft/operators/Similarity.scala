@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
@@ -23,7 +23,6 @@ object Similarity {
 
   /** id, v (array<double>), nrm columns — norm computed once per vector. */
   private def prepared(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(VectorFunctions.vecDot(col("v"), col("v"))))
   }
@@ -144,19 +143,6 @@ object Similarity {
     // double summation, so projections/signs/buckets are bit-identical
     // (the earlier literal-plane-array attempt measured +39% and is
     // recorded as a negative result in OPTIMIZATION_r14.md).
-    // ADVICE r14: a missing session must FAIL HERE with an actionable
-    // message, not silently skip registration and die later in analysis
-    // with "undefined function vec_plane_proj". Column builders have no
-    // DataFrame handle, so the session comes from the thread/process
-    // default — every DataFrame-level caller in this library satisfies
-    // that; the error is for bare-Column use on a non-Spark thread.
-    val session = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(throw new IllegalStateException(
-        "lshSignBits needs an active or default SparkSession to register " +
-          "vec_plane_proj; build the Column on the thread that owns the " +
-          "session (or call VectorFunctions.register(session) first)"))
-    VectorFunctions.register(session)
     val bits = (0 until nBits).map { j =>
       val proj = VectorFunctions.vecPlaneProj(vec, offset + j)
       when(proj > 0, lit(1L << j)).otherwise(lit(0L))
@@ -390,7 +376,6 @@ object Similarity {
   def randomProject(df: DataFrame, idCol: String, vecCol: String,
                     dim: Int, outDim: Int, seed: Int = 1,
                     scale: Int = 1000): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val q = transform(col(vecCol),
       v => floor(v.cast("double") * scale).cast("long"))
     val projCols = (0 until outDim).map { j =>

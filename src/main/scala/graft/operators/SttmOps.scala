@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Core relational operators of the reference pipeline, Spark-first.
@@ -29,15 +28,6 @@ object SttmOps {
     df.groupBy(keys.map(col): _*)
       .agg(max_by(payload, rank).as("__r"))
       .select(col("__r.*"))
-  }
-
-  /** Window-sort formulation of A1 (kept for cases where the full sorted
-    * history per key is also needed downstream). */
-  def latestByKeyWindow(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** F6: drop rows whose delete-flag column matches a truthy value list

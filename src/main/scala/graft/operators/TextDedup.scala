@@ -48,7 +48,6 @@ object TextDedup {
     // pins equality against that form). The k element extractions below
     // collapse into one projection; codegen subexpression elimination
     // evaluates the deterministic signature expression once per row.
-    graft.functions.ShingleHashes.register(df.sparkSession)
     val sig = graft.functions.ShingleHashes
       .minHashSigText(col(textCol), n, oracleParity, k, P)
     df.select(col(idCol) +:
@@ -234,17 +233,12 @@ object TextDedup {
     * merge-walk [[graft.functions.SortedIntersectCount]] — no per-pair hash
     * set. Same value as [[jaccardFromShingles]] (for distinct arrays,
     * |union| = |a| + |b| - |intersection|, exactly). Caller must sort each
-    * array once per document (array_sort) and register
-    * [[graft.functions.ArrayFunctions]] on the session. */
+    * array once per document (array_sort). */
   def jaccardFromSortedShingles(sa: Column, sb: Column): Column = {
     val inter = graft.functions.ArrayFunctions.sortedIntersect(sa, sb).cast("double")
     val uni = (size(sa) + size(sb)).cast("double") - inter
     floor(inter / uni * 10000) / 10000.0
   }
-
-  /** Character n-gram Jaccard similarity of two string columns. */
-  def ngramJaccard(a: Column, b: Column, n: Int): Column =
-    jaccardFromShingles(charShingles(a, n), charShingles(b, n))
 
   /** Composed near-duplicate pair detection over a document table: MinHash
     * signatures -> capped-LSH candidate pairs -> exact trigram-Jaccard
@@ -273,7 +267,6 @@ object TextDedup {
   def nearDuplicatePairs(docs: DataFrame, idCol: String, textCol: String,
                          minJaccard: Double = 0.6, maxBucket: Int = 4096,
                          oracleParity: Boolean = true): DataFrame = {
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
     // ONE hash pass: the sorted distinct 3-gram hash arrays feed BOTH the
     // minhash signature (min of perturbed hashes, same coefficients as
     // minHashSignature) and the exact verification — the single-pass design
@@ -395,7 +388,6 @@ object TextDedup {
     // one codegen'd pass computes all k minima; the per-permutation
     // array_min(transform(...)) form this replaces paid k interpreted
     // (CodegenFallback) traversals of every shingle array
-    graft.functions.ShingleHashes.register(sh.sparkSession)
     val sig = graft.functions.ShingleHashes.minHashSig(col("sh"), k, P)
     sh.filter(size(col("sh")) > 0).select(col(idCol) +:
       (0 until k).map(i => element_at(sig, i + 1).as(s"mh$i")): _*)
@@ -461,7 +453,6 @@ object TextDedup {
                                minJaccard: Double = 0.6,
                                maxBucket: Int = 4096,
                                bePreFiltered: Boolean = false): DataFrame = {
-    graft.functions.ArrayFunctions.register(shI.sparkSession)
     // Every downstream stage only cares about buckets the BATCH touches:
     // an existing doc sharing no band bucket with any incoming doc can
     // never become a candidate, so the stored index is semi-joined down to
@@ -556,7 +547,6 @@ object TextDedup {
     // native codegen expression — bit-identical to the declarative
     // array_sort(array_distinct(transform(...))) stack (ShingleSpec), but
     // one fused JVM loop per doc instead of three interpreted HOFs
-    graft.functions.ShingleHashes.register(docs.sparkSession)
     docs.select(col(idCol),
         graft.functions.ShingleHashes
           .shingleHashes(col(textCol), n, oracleParity, P).as("sh"))
@@ -586,7 +576,6 @@ object TextDedup {
   def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         minJaccard: Double = 0.6, n: Int = 3,
                         oracleParity: Boolean = true): DataFrame = {
-    graft.functions.ArrayFunctions.register(docs.sparkSession)
     val sh = sortedShingleHashes(docs, idCol, textCol, n, oracleParity)
     val tok = sh.select(col(idCol), explode(col("sh")).as("tok"))
     val dfreq = tok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -1030,7 +1019,6 @@ object TextDedup {
     // groupBy(doc, seg) with collect_list/array_sort/interpreted
     // transform — all deleted; the remaining exchanges are analytical
     // (chunk doc-frequency, per-doc rollups).
-    graft.functions.ShingleHashes.register(docs.sparkSession)
     val chunks = docs.select(col(idCol),
         explode(graft.functions.ShingleHashes.cdcChunks(
           col(textCol), boundaryDiv.toLong, oracleParity)).as("c"))
@@ -1069,7 +1057,6 @@ object TextDedup {
     // per-doc window EXCHANGE it forced, and the corpus-wide distinct all
     // disappear — a fingerprint query's only exchanges are analytical
     // (doc-frequency counts, fp joins).
-    graft.functions.ShingleHashes.register(df.sparkSession)
     df.select(col(idCol),
       explode(graft.functions.ShingleHashes
         .winnowFps(col(textCol), kgram, w, oracleParity, P)).as("fp"))
@@ -1151,7 +1138,6 @@ object TextDedup {
     * Returns (g1, g2, k_match, jaccard_bp) for g1 < g2, ordered. */
   def groupOverlap(df: DataFrame, groupCol: String, textCol: String,
                    n: Int = 4, k: Int = 8): DataFrame = {
-    graft.functions.ShingleHashes.register(df.sparkSession)
     val hashed = df
       .select(col(groupCol), explode(graft.functions.ShingleHashes
         .shingleHashes(col(textCol), n, parity = true, mod = P)).as("h"))

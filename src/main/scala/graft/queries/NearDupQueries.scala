@@ -232,7 +232,6 @@ private[graft] object NearDupQueries extends QueryLayer("neardup") {
                  * 10000) / 10000 AS jac
          FROM s a JOIN s b ON b.doc_id = a.doc_id + 1
          ORDER BY id1""")((s, dir) => {
-      graft.functions.ArrayFunctions.register(s)
       val sh = TextDedup.sortedShingleHashes(Tables.documents(s, dir),
         "doc_id", "text")
       val a = sh.toDF("id1", "sh1")

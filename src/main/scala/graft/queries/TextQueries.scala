@@ -18,7 +18,7 @@ private[graft] object TextQueries extends QueryLayer("text") {
          FROM documents ORDER BY doc_id""")((s, dir) => {
       Tables.documents(s, dir)
         .select(col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           length(col("text")).as("n_chars_m"))
         .orderBy("doc_id")
     }),

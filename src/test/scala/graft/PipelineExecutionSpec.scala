@@ -107,4 +107,20 @@ class PipelineExecutionSpec extends AnyFunSuite {
     assert(rows(1).getString(1) == "x|y|z") // no '.' present -> whole string
     assert(rows(0).isNullAt(2) && rows(1).isNullAt(2)) // OOB -> NULL
   }
+
+  test("FlinkCompat.register installs once per session; a repeat call is a no-op") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val id = FunctionIdentifier("json_value")
+    assert(reg.lookupFunction(id).isEmpty)
+    graft.functions.FlinkCompat.register(fresh)
+    // every registration stores a fresh ExpressionInfo (the builder lambda
+    // is a shared instance either way), so identity shows none happened
+    val first = reg.lookupFunction(id)
+    assert(first.isDefined)
+    graft.functions.FlinkCompat.register(fresh)
+    assert(reg.lookupFunction(id).get eq first.get)
+    assert(fresh.sql("SELECT JSON_VALUE('{\"a\":1}', '$.a')").head().getString(0) == "1")
+  }
 }

@@ -30,7 +30,6 @@ class ShingleSpec extends AnyFunSuite {
   test("parity mode == array_sort(array_distinct(transform(charShingles, stableHash % P)))") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    ShingleHashes.register(spark)
     val df = fixtures.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     for (n <- Seq(3, 4)) {
@@ -50,7 +49,6 @@ class ShingleSpec extends AnyFunSuite {
   test("no-mod parity mode == sorted distinct stableHash (60-bit)") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    ShingleHashes.register(spark)
     val df = fixtures.toDF("text")
     val declarative = array_sort(array_distinct(transform(
       TextDedup.charShingles(col("text"), 4),
@@ -66,7 +64,6 @@ class ShingleSpec extends AnyFunSuite {
   test("production mode == pmod(xxhash64, P) over distinct shingles") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    ShingleHashes.register(spark)
     val df = fixtures.toDF("text")
     val declarative = array_sort(array_distinct(transform(
       TextDedup.charShingles(col("text"), 3),
@@ -83,7 +80,6 @@ class ShingleSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    ShingleHashes.register(spark)
     val df = fixtures.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     for ((parity, kgram, w) <- Seq((true, 8, 4), (false, 8, 4), (true, 3, 2))) {
@@ -115,7 +111,6 @@ class ShingleSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    ShingleHashes.register(spark)
     // fixtures plus CDC-specific edges: consecutive spaces (empty tokens),
     // leading/trailing spaces, single token
     val texts = fixtures ++ Seq("a  b   c", " leading", "trailing ", "one")
@@ -150,7 +145,6 @@ class ShingleSpec extends AnyFunSuite {
   test("minHashSig(Text) == both prior signature formulations, bit-for-bit") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    ShingleHashes.register(spark)
     // real corpus slice + the engineered edge fixtures
     val real = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id").as("id"), col("text")).limit(300)
@@ -209,7 +203,6 @@ class ShingleSpec extends AnyFunSuite {
   test("output is ascending and duplicate-free") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    ShingleHashes.register(spark)
     val rows = fixtures.toDF("text")
       .select(ShingleHashes.shingleHashes(col("text"), 3, parity = true,
         mod = TextDedup.P).as("sh"))

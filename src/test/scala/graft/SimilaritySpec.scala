@@ -21,7 +21,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("vec_dot: two calls in one projection survive CODEGEN_ONLY (fresh local names)") {
     spark.sparkContext.setLogLevel("ERROR")
-    VectorFunctions.register(spark)
     val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
     val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -50,7 +49,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("vec_plane_proj: bit-identical to the HOF fold it replaces, in CODEGEN_ONLY") {
     spark.sparkContext.setLogLevel("ERROR")
-    VectorFunctions.register(spark)
     val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
     val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -254,7 +252,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("sorted_intersect: merge walk equals array_intersect size, survives CODEGEN_ONLY") {
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.ArrayFunctions.register(spark)
     import spark.implicits._
     val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -279,6 +276,32 @@ class SimilaritySpec extends AnyFunSuite {
       prevFallback.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
         spark.conf.set("spark.sql.codegen.fallback", _))
     }
+  }
+
+  test("library expressions need no function registration: a fresh session evaluates them") {
+    spark.sparkContext.setLogLevel("ERROR")
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions.{ArrayFunctions, ShingleHashes}
+    def values(s: SparkSession) = {
+      import s.implicits._
+      Seq((1L, Array(1.0, -2.0, 3.0), Array(4.0, 5.0, -6.0), "the quick brown fox",
+          Array(1L, 3L, 5L), Array(3L, 5L, 7L)))
+        .toDF("id", "a", "b", "text", "x", "y")
+        .select(VectorFunctions.vecDot(col("a"), col("b")),
+          Similarity.lshSignBits(col("a"), 8),
+          ShingleHashes.shingleHashes(col("text"), 3, parity = true,
+            mod = TextDedup.P),
+          ArrayFunctions.sortedIntersect(col("x"), col("y")))
+        .head().toSeq
+    }
+    val fresh = spark.newSession()
+    assert(values(fresh) == values(spark))
+    val names = Seq("vec_dot", "vec_l2sq_l", "vec_dot_l", "vec_plane_proj",
+      "shingle_hashes", "winnow_fps", "minhash_sig", "minhash_sig_text",
+      "cdc_chunks", "sorted_intersect")
+    for (n <- names)
+      assert(!fresh.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier(n)), n)
   }
 
   test("Sampling: splits are exhaustive, stable, and nested across fractions") {
