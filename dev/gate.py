@@ -111,50 +111,24 @@ local_md5 = hashlib.md5(open(out_record, "rb").read()).hexdigest()
 # BASELINE.md prose. Publish the latest full bench run as a committed
 # bench_r{N}.json sibling (refresh bench.json with a full sf0.1 Bench run
 # before the round-close gate).
-import filecmp, re, shutil
+import re, shutil
+from bench_guard import stale_reason
 m = re.search(r"_r(\d+)", base)
 bench_src = os.path.join(repo, "bench.json")
 if m and os.path.exists(bench_src):
     bench_dst = os.path.join(repo, f"bench_r{m.group(1)}.json")
     # staleness guard: the gate itself never refreshes bench.json (it runs
     # Bench with RUNS=0 for fingerprints only), so copying without checking
-    # would relabel the PREVIOUS round's timings as this round's. Refuse
-    # when bench.json is byte-identical to the prior round's committed
-    # record — that means no full Bench ran since round close.
-    prev = os.path.join(repo, f"bench_r{int(m.group(1)) - 1:02d}.json")
-    # Bootstrap case: bench_r{N-1}.json doesn't exist (first round with the
-    # feature, or a round the guard skipped), so byte-comparison can't catch
-    # a leftover previous-round bench.json. Staleness is judged by CONTENT
-    # first (ADVICE r11 #3): Bench stamps recorded_at_ms into bench.json
-    # (since r12), which survives clones/checkouts where every mtime is the
-    # checkout time; records without the stamp fall back to mtime, with
-    # both timestamps printed so a false refusal is diagnosable.
-    round_start = os.path.join(repo, f"BENCH_r{int(m.group(1)) - 1:02d}.json")
-    try:
-        bench_when = json.load(open(bench_src)).get("recorded_at_ms", 0) / 1000.0
-    except (ValueError, AttributeError, TypeError):
-        # clobbered-but-parseable JSON (null, [], a string) must degrade to
-        # the mtime fallback, not crash the gate before it writes its record
-        bench_when = 0
-    when_src = "recorded_at_ms" if bench_when else "mtime"
-    if not bench_when:
-        bench_when = os.path.getmtime(bench_src)
-    if os.path.exists(prev) and filecmp.cmp(bench_src, prev, shallow=False):
-        print(f"[gate] SKIPPED bench_r{m.group(1)}.json: bench.json is "
-              f"byte-identical to {os.path.basename(prev)} — run a full "
-              f"sf0.1 Bench first, then re-run gate or dev/seal.py")
-    elif (os.path.exists(round_start)
-          and bench_when < os.path.getmtime(round_start)):
-        print(f"[gate] SKIPPED bench_r{m.group(1)}.json: bench.json predates "
-              f"this round (bench {when_src}={bench_when:.0f} < "
-              f"{os.path.basename(round_start)} mtime="
-              f"{os.path.getmtime(round_start):.0f}) — run a full sf0.1 "
-              f"Bench first")
+    # would relabel the PREVIOUS round's timings as this round's. The anchor
+    # is the previous round's own recorded_at_ms (see dev/bench_guard.py).
+    stale = stale_reason(repo, int(m.group(1)))
+    if stale:
+        print(f"[gate] SKIPPED bench_r{m.group(1)}.json: {stale} — run a "
+              f"full sf0.1 Bench first, then re-run gate or dev/seal.py")
     else:
         shutil.copyfile(bench_src, bench_dst)
-        print(f"[gate] per-query bench record -> {bench_dst} "
-              f"(from bench.json, {when_src} {bench_when:.0f}) — "
-              f"git add it with the correctness records")
+        print(f"[gate] per-query bench record -> {bench_dst} (from bench.json) "
+              f"— git add it with the correctness records")
 ok = oracle.get("n_pass", 0)
 tot = oracle.get("n_oracle", 0)
 print(f"[gate] record -> {out_record}: oracle {ok}/{tot}, "

@@ -63,39 +63,21 @@ else:
 # Per-query bench coverage (VERDICT r10 #4): the committed bench_r{N}.json
 # must carry the round's per-query timing map; restore it from the
 # untracked bench.json if the copy is missing.
-import filecmp, re, shutil
+import re, shutil
+from bench_guard import stale_reason
 m = re.search(r"_r(\d+)", os.path.basename(local_path))
 repo_dir = os.path.dirname(os.path.abspath(local_path))
 bench_src = os.path.join(repo_dir, "bench.json")
 if m:
     bench_dst = os.path.join(repo_dir, f"bench_r{m.group(1)}.json")
-    # Same staleness guards as gate.py — restoring unconditionally would
-    # relabel the PREVIOUS round's timings as this round's (the exact
-    # failure VERDICT r10 #4 was fixed to prevent): refuse a bench.json
-    # byte-identical to the prior round's committed record, or one older
-    # than the driver's round-start artifact refresh.
-    prev = os.path.join(repo_dir, f"bench_r{int(m.group(1)) - 1:02d}.json")
-    round_start = os.path.join(repo_dir, f"BENCH_r{int(m.group(1)) - 1:02d}.json")
+    # Same staleness guard as gate.py (dev/bench_guard.py): restoring
+    # unconditionally would relabel the PREVIOUS round's timings as this
+    # round's (the exact failure VERDICT r10 #4 was fixed to prevent).
     if not os.path.exists(bench_dst) and os.path.exists(bench_src):
-        # same content-first staleness reading as gate.py (ADVICE r11 #3):
-        # recorded_at_ms survives clones/copies where mtimes reset
-        try:
-            bench_when = (json.load(open(bench_src))
-                          .get("recorded_at_ms", 0) / 1000.0)
-        except (ValueError, AttributeError, TypeError):
-            bench_when = 0
-        if not bench_when:
-            bench_when = os.path.getmtime(bench_src)
-        if os.path.exists(prev) and filecmp.cmp(bench_src, prev, shallow=False):
-            print(f"[seal] REFUSED bench restore: bench.json is byte-identical "
-                  f"to {os.path.basename(prev)} — run a full sf0.1 Bench first")
-        elif (os.path.exists(round_start)
-              and bench_when < os.path.getmtime(round_start)):
-            print(f"[seal] REFUSED bench restore: bench.json predates this "
-                  f"round (bench {bench_when:.0f} < "
-                  f"{os.path.basename(round_start)} mtime "
-                  f"{os.path.getmtime(round_start):.0f}) — "
-                  f"run a full sf0.1 Bench first")
+        stale = stale_reason(repo_dir, int(m.group(1)))
+        if stale:
+            print(f"[seal] REFUSED bench restore: {stale} — run a full sf0.1 "
+                  f"Bench first")
         else:
             shutil.copyfile(bench_src, bench_dst)
             print(f"[seal] RESTORED {bench_dst} from bench.json — git add it")

@@ -26,12 +26,13 @@ import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDe
   *     hand-built pipelines.
   *
   * Per-trigger statement compilation is deliberately NOT cached: re-running
-  * `session.sql` for every view/xref/sink costs 1.5-3.7 ms/statement
-  * (sqlcompile rows, BASELINE.md round-13 first wave) — ~25-35
-  * ms/trigger at reference arity vs a ~1.2 s addBatch median, i.e. 2-3%,
-  * while a parse-once/re-bind cache would have to thread analyzed plans
-  * across the per-batch session-clone boundary the registration contract
-  * below depends on. Measured and declined (VERDICT r12 #5).
+  * `session.sql` (parse + analysis) for the 10 statements of perfbench's
+  * `stream_upsert` workbook takes 40-70 ms of thread CPU per trigger
+  * (median 58 ms, ~6 ms/statement; seed 7, 4 vCPUs, one run). That is 5.1%
+  * of the CPU of the threads running the trigger's addBatch and 1.5% of the
+  * program's CPU per trigger, while a parse-once/re-bind cache would have
+  * to thread analyzed plans across the per-batch session-clone boundary
+  * the registration contract below depends on. Measured and declined.
   *
   * Name resolution: each target registers under its emitted name in
   * `session`'s temp catalog — static frames at bridge time, per-batch

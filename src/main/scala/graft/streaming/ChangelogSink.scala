@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
+import graft.functions.ReferencedLong
 import graft.operators.GenStore
 
 /** GenStore-backed append-only changelog sink — the statement set's INSERT
@@ -75,12 +76,14 @@ object ChangelogSink {
     GenStore.initIfAbsent(root, GenStore.State(0, Vector.empty, Map.empty))
     val st0 = GenStore.readOrFail(root, What)
     if (GenStore.foldedWatermark(st0.props) >= batchId) return // folded replay
-    val out = df.withColumn(BatchCol, lit(batchId))
+    // the id travels in the generated code's references, not its source,
+    // so every trigger reuses the sink plan's compiled code
+    val out = df.withColumn(BatchCol, ReferencedLong.col(batchId))
     val applied = GenStore.appendSeg(root, What, GenStore.batchSeg(batchId)) {
       (_, segDir) => writeKeepingSchema(out, s"$segDir/$Rows")
     }
     if (applied) {
-      maybeFold(df.sparkSession, root, maxLiveSegments, targetFileBytes)
+      maybeFold(df.sparkSession, root, out.schema, maxLiveSegments, targetFileBytes)
       GenStore.vacuum(root, vacuumGraceMs)
       ()
     }
@@ -118,19 +121,21 @@ object ChangelogSink {
 
   /** At most ONE fold per trigger (bounded per-batch work; a backlog just
     * folds on subsequent triggers): all fresh past the budget, else the
-    * smallest half of an over-budget merged tier. */
-  private def maybeFold(spark: SparkSession, root: String,
+    * smallest half of an over-budget merged tier. `schema` is the one the
+    * calling [[write]] just wrote: the fold reads its segments with it, so
+    * Spark runs no schema-inference job per segment. */
+  private def maybeFold(spark: SparkSession, root: String, schema: StructType,
                         budget: Int, targetFileBytes: Long): Unit = {
     val st = GenStore.readOrFail(root, What)
     val (mergedSegs, freshSegs) = st.segs.partition(_.startsWith("m-"))
     if (freshSegs.size > budget)
-      fold(spark, root, st, freshSegs, targetFileBytes)
+      fold(spark, root, st, schema, freshSegs, targetFileBytes)
     else if (mergedSegs.size > budget) {
       val bySize = mergedSegs.sortBy(s => GenStore.dirBytes(segDir(root, st, s)))
       // at least 2: a 1-segment "fold" rewrites without shrinking the
       // tier, so a budget of 1 would grow unboundedly while paying a
       // rewrite every trigger (r12 review)
-      fold(spark, root, st, bySize.take(math.max(2, (budget + 2) / 2)),
+      fold(spark, root, st, schema, bySize.take(math.max(2, (budget + 2) / 2)),
         targetFileBytes)
     }
   }
@@ -139,7 +144,8 @@ object ChangelogSink {
     s"$root/g${st.gen}/$seg/$Rows"
 
   private def fold(spark: SparkSession, root: String, st: GenStore.State,
-                   segs: Seq[String], targetFileBytes: Long): Unit = {
+                   schema: StructType, segs: Seq[String],
+                   targetFileBytes: Long): Unit = {
     val dirs = segs.map(segDir(root, st, _)).filter(GenStore.hasData)
     if (dirs.isEmpty) return
     val nFiles = math.max(1L,
@@ -147,7 +153,7 @@ object ChangelogSink {
     val merged = GenStore.mergedSeg()
     // pure concatenation — no dedup, no shuffle; coalesce bounds the
     // output file count without repartitioning
-    val raw = dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val raw = dirs.map(spark.read.schema(schema).parquet(_)).reduce(_ unionByName _)
     writeKeepingSchema(raw.coalesce(nFiles.toInt),
       segDir(root, st, merged))
     // watermark rises atomically with the fold commit: a replay of any

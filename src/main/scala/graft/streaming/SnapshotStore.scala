@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{GenStore, SttmOps}
 
 /** Key-hash-bucketed LSM "current snapshot" table — the engine's stand-in
@@ -71,6 +72,23 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
   private val Rows = "rows"
   private val What = "xref snapshot"
   private val keysPath = Paths.get(root, "_KEYS")
+
+  /** The segment schema this instance last wrote, `_bucket` last (the
+    * prepared frame's schema). Reads pass it to the parquet reader, which
+    * otherwise runs one schema-inference job per `read.parquet` call —
+    * jobs every trigger paid to rediscover a schema written moments
+    * earlier. None on a fresh instance until its first append: reads then
+    * infer from the files, so a restarted stream and out-of-trigger
+    * readers work unchanged. */
+  @volatile private var segSchema: Option[StructType] = None
+
+  /** A parquet reader for this store's files: `withBucket` for segment
+    * table roots, where partition discovery re-surfaces `_bucket`, false
+    * for leaf bucket dirs, which carry only the data columns. */
+  private def reader(spark: SparkSession, withBucket: Boolean): DataFrameReader =
+    segSchema.fold(spark.read) { s =>
+      spark.read.schema(if (withBucket) s else StructType(s.filterNot(_.name == BucketCol)))
+    }
 
   /** A `_META` that exists but fails the v3 parse is a pre-LSM (or corrupt)
     * layout — fail LOUD instead of reading as an absent store: "absent"
@@ -162,7 +180,7 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
                         preFilter: DataFrame => DataFrame = identity): Option[DataFrame] =
     if (paths.isEmpty) None
     else {
-      val raw = preFilter(spark.read.parquet(paths: _*))
+      val raw = preFilter(reader(spark, withBucket = false).parquet(paths: _*))
       // EVERY segment is written deduped within itself (mergePrepared's
       // latestByKey before the append; compact's deduped base), so any
       // single-live-segment state is globally deduped — skip the
@@ -323,6 +341,7 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
             "prepare()'s materialize contract); make the view a pure " +
             "transform of the shared raw batch, or merge via the " +
             "materializing merge() path")
+      segSchema = Some(p.df.schema)
     }
     if (applied) {
       // Tiered compaction (two-level LSM): FRESH append segments fold into
@@ -358,7 +377,8 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
     // segment TABLE roots: partition discovery re-surfaces _bucket, which
     // the fold preserves as-is (key->bucket mapping is stable within a
     // generation; a racing reshard bumps the generation and fails the CAS)
-    val raw = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val raw = paths.map(reader(spark, withBucket = true).parquet(_))
+      .reduce(_ unionByName _)
     SttmOps.latestByKey(raw, k, o)
       .repartition(bucketsOf(st), col(BucketCol))
       .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
@@ -447,7 +467,8 @@ final class SnapshotStore(root: String, nBuckets: Int = 16,
       // _bucket, which the rewrite re-derives under the target count
       val paths = st.segTableDirs(root, Rows).filter(GenStore.hasData)
       if (paths.nonEmpty) {
-        val raw = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        val raw = paths.map(reader(spark, withBucket = true).parquet(_))
+          .reduce(_ unionByName _)
         SttmOps.latestByKey(raw, k, o)
           .drop(BucketCol)
           .withColumn(BucketCol, bucketOf(k, buckets))

@@ -1,8 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.ChangelogSink
 
@@ -26,7 +32,6 @@ class ChangelogSinkSpec extends AnyFunSuite {
     (0 until 10).map(j => (i.toLong * 100 + j, s"v$i-$j")).toDF("id", "v")
 
   private def parquetFiles(root: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     val p = java.nio.file.Paths.get(root)
     if (!Files.isDirectory(p)) Seq.empty
     else {
@@ -106,6 +111,44 @@ class ChangelogSinkSpec extends AnyFunSuite {
     assert(rows.count() == 600)
     assert(rows.filter(col("batch") === 37L).count() == 10)
     assert(rows.groupBy("id").count().filter(col("count") > 1).count() == 0)
+  }
+
+  test("sink plans of two batch ids generate identical whole-stage code") {
+    // The batch id rides in the compiled class's references, not in its
+    // source: an inlined literal would make each trigger's sink code new
+    // source, which misses Spark's codegen cache and compiles again.
+    spark.sparkContext.setLogLevel("ERROR")
+    val root = Files.createTempDirectory("graft_clsink_codegen").toString + "/sink"
+    val codes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        codegenStringSeq(qe.executedPlan).foreach(c => codes.add(c._2))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def sinkCode(batchId: Long): Seq[String] = {
+      codes.clear()
+      ChangelogSink.write(
+        spark.range(0, 40, 1, 2).select(col("id"), (col("id") % 7).as("k")),
+        root, batchId, maxLiveSegments = 2)
+      TestBus.drain(spark.sparkContext)
+      codes.asScala.toSeq
+    }
+    spark.listenerManager.register(listener)
+    val (code0, code1) =
+      try (sinkCode(0L), sinkCode(1L))
+      finally spark.listenerManager.unregister(listener)
+    assert(code0.nonEmpty, "the sink write ran no whole-stage-codegen stage")
+    assert(code0 == code1, "the batch id changed the sink's generated code")
+    // rows and schema are those of a literal stamp; a fold keeps them
+    ChangelogSink.write(spark.range(80, 90).select(col("id"), (col("id") % 7).as("k")),
+      root, 2L, maxLiveSegments = 2)
+    assert(ChangelogSink.liveSegments(root).exists(_.startsWith("m-")))
+    val back = ChangelogSink.read(spark, root)
+    assert(back.schema == StructType(Seq(StructField("id", LongType),
+      StructField("k", LongType), StructField("batch", LongType))))
+    assert(back.groupBy("batch").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 40L, 1L -> 40L, 2L -> 10L))
   }
 
   test("an all-empty first batch still reads back with the schema") {

@@ -1,12 +1,18 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SttmOps
 import graft.streaming.{ChangelogSink, SnapshotStore, StreamingPipeline}
-import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, UpsertDelta, ViewDef, XrefDef}
+import graft.streaming.StreamingPipeline.{SinkDef, SinkOptions, StatementSet, UpsertDelta,
+  ViewDef, XrefDef, sinkPath, xrefStorePath}
 
 /** Streaming/batch parity: the micro-batch statement set (view -> xref
   * upsert -> enrich + quarantine) over a file stream must converge to the
@@ -36,6 +42,41 @@ class StreamingPipelineSpec extends AnyFunSuite {
       sinks = Seq(
         SinkDef("fgac_out", (v, d) => enrich(v("view"), d("xref"))),
         SinkDef("quarantine_out", (v, d) => quarantine(v("view"), d("xref")))))
+
+  /** A 2-xref, 5-sink set: purchase and click views, one XREF per view
+    * keyed by user_id, two INSERTs over the XREF deltas and three over the
+    * views. Stores take an LSM budget of 2, like the sinks under
+    * [[TwoXrefSinkOpts]], so the third trigger folds every store and sink
+    * and the seventh compacts the stores. */
+  private def twoXrefSet(cust: DataFrame): StatementSet = {
+    def view(eventType: String)(b: DataFrame): DataFrame =
+      b.filter(col("event_type") === eventType)
+        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+    def xref(name: String, view: String) =
+      XrefDef(name, view, Seq("user_id"), Seq("ts", "event_id"),
+        nBuckets = 2, maxLiveSegments = 2)
+    StatementSet(
+      views = Seq(ViewDef("purchase", view("purchase")), ViewDef("click", view("click"))),
+      xrefs = Seq(xref("xp", "purchase"), xref("xc", "click")),
+      sinks = Seq(
+        SinkDef("fgac", (_, d) => d("xp").rows
+          .join(cust, d("xp").rows("user_id") === cust("c_custkey"), "left")
+          .select(col("user_id"), col("event_id"), col("c_mktsegment"))),
+        SinkDef("quarantine", (v, _) => v("purchase")
+          .join(cust, v("purchase")("user_id") === cust("c_custkey"), "left_anti")
+          .select(col("user_id"), col("event_id"))),
+        SinkDef("clicks_latest", (_, d) => d("xc").rows),
+        SinkDef("purchases", (v, _) => v("purchase")),
+        SinkDef("clicks", (v, _) => v("click"))))
+  }
+
+  private val TwoXrefSinkOpts = SinkOptions(maxLiveSegments = 2)
+
+  /** Jobs of [[twoXrefSet]]'s plain and fold triggers over a third of the
+    * sf0.001 events each (the job-count spec below). A trigger that reads
+    * without the written schemas runs 26 and 56. */
+  private val PlainTriggerJobs = 24
+  private val FoldTriggerJobs = 33
 
   test("micro-batch xref snapshot equals batch latest-by-key; sinks fan out") {
     spark.sparkContext.setLogLevel("ERROR")
@@ -339,5 +380,110 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(all == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
     // every key exactly once (a re-hash would duplicate or lose keys)
     assert(reopened.read(spark).get.count() == 3)
+  }
+
+  test("a trigger runs no parquet schema-inference job: jobs per plain and fold trigger") {
+    // Stores and sinks read back segments they wrote in the same call; a
+    // read without the schema makes Spark run a one-task job that merges
+    // the files' footers (a parallelized file-status list) on every read:
+    // 2 of a plain trigger's jobs here and 23 of the fold trigger's.
+    spark.sparkContext.setLogLevel("ERROR")
+    val work = Files.createTempDirectory("graft_stream_jobs").toString
+    val ev = Tables.events(spark, dir)
+    val set = twoXrefSet(Tables.customer(spark, dir))
+    val stores = set.xrefs.map(x => x.name -> new SnapshotStore(
+      xrefStorePath(work, x.name), x.nBuckets, x.maxLiveSegments)).toMap
+    val jobs, inference = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (j.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))
+          inference.incrementAndGet()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val perTrigger =
+      try (0 until 3).map { i =>
+        TestBus.drain(sc)
+        jobs.set(0); inference.set(0)
+        StreamingPipeline.processSet(stores, work, set,
+          ev.filter(pmod(col("event_id"), lit(3)) === i), i.toLong, TwoXrefSinkOpts)
+        TestBus.drain(sc)
+        (jobs.get, inference.get)
+      } finally sc.removeSparkListener(listener)
+    // trigger 1 is plain; trigger 2 folds every store and every sink
+    assert(stores.values.forall(_.liveSegments.exists(_.startsWith("m-"))))
+    assert(set.sinks.forall(s =>
+      ChangelogSink.liveSegments(sinkPath(work, s.name)).exists(_.startsWith("m-"))))
+    assert(perTrigger.drop(1).map(_._2) == Seq(0, 0),
+      s"schema-inference jobs in the plain and fold triggers: $perTrigger")
+    assert(perTrigger.drop(1).map(_._1) == Seq(PlainTriggerJobs, FoldTriggerJobs),
+      s"jobs per trigger (jobs, inference jobs): $perTrigger")
+    // reading with the written schema serves what inferring it serves
+    stores.foreach { case (name, store) =>
+      val inferred = new SnapshotStore(xrefStorePath(work, name)).read(spark).get
+      val known = store.read(spark).get
+      assert(known.schema == inferred.schema, s"xref $name")
+      assert(known.collect().map(_.toString).sorted.toSeq ==
+        inferred.collect().map(_.toString).sorted.toSeq, s"xref $name")
+    }
+  }
+
+  test("a restarted runSet folds and compacts the first run's segments: rows equal an uninterrupted run") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_stream_restart").toString
+    val ev = Tables.events(spark, dir)
+    val set = twoXrefSet(Tables.customer(spark, dir))
+    // 7 topic files with strictly increasing mtimes: the file source takes
+    // them oldest first, one per trigger, so both runs see the same batches
+    val n = 7
+    val files = (0 until n).map { i =>
+      val out = s"$base/gen/$i"
+      ev.filter(pmod(col("event_id"), lit(n)) === i).coalesce(1).write.parquet(out)
+      val ls = Files.list(Paths.get(out))
+      try ls.iterator().asScala.find(_.toString.endsWith(".parquet")).get
+      finally ls.close()
+    }
+    def publish(in: String, which: Range): Unit = which.foreach { i =>
+      val dst = Paths.get(in, f"f$i%02d.parquet")
+      Files.createDirectories(dst.getParent)
+      Files.copy(files(i), dst)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 10000L))
+    }
+    def runAll(in: String, work: String): Unit = {
+      val source = spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(in)
+      val q = StreamingPipeline.runSet(source, set, work, sinkOpts = TwoXrefSinkOpts)
+      if (!q.awaitTermination(300000)) q.stop()
+    }
+    def segs(work: String): Seq[Vector[String]] =
+      set.xrefs.map(x => new SnapshotStore(xrefStorePath(work, x.name)).liveSegments)
+
+    publish(s"$base/inA", 0 until n)
+    runAll(s"$base/inA", s"$base/a")
+    // the interrupted stream: two triggers, then a fresh runSet (fresh
+    // stores) over the same work dir takes the other five
+    publish(s"$base/inB", 0 until 2)
+    runAll(s"$base/inB", s"$base/b")
+    assert(segs(s"$base/b") == Seq(Vector("b0", "b1"), Vector("b0", "b1")))
+    publish(s"$base/inB", 2 until n)
+    runAll(s"$base/inB", s"$base/b")
+    // its trigger 2 folded b0 and b1, and its trigger 6 compacted the stores
+    assert(segs(s"$base/b") == Seq(Vector("base"), Vector("base")))
+
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    set.xrefs.foreach { x =>
+      def snap(work: String) = new SnapshotStore(xrefStorePath(work, x.name)).read(spark).get
+      assert(snap(s"$base/b").schema == snap(s"$base/a").schema)
+      assert(rows(snap(s"$base/b")) == rows(snap(s"$base/a")), s"xref ${x.name}")
+    }
+    set.sinks.foreach { s =>
+      def sink(work: String) = ChangelogSink.read(spark, sinkPath(work, s.name))
+      assert(sink(s"$base/b").schema == sink(s"$base/a").schema)
+      assert(rows(sink(s"$base/b")) == rows(sink(s"$base/a")), s"sink ${s.name}")
+    }
+    assert(ChangelogSink.read(spark, sinkPath(s"$base/a", "clicks"))
+      .select("batch").distinct().count() == n)
   }
 }
