@@ -27,9 +27,10 @@ import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDe
   *
   * Per-trigger statement compilation is deliberately NOT cached: re-running
   * `session.sql` (parse + analysis) for the 10 statements of perfbench's
-  * `stream_upsert` workbook takes 40-70 ms of thread CPU per trigger
-  * (median 58 ms, ~6 ms/statement; seed 7, 4 vCPUs, one run). That is 5.1%
-  * of the CPU of the threads running the trigger's addBatch and 1.5% of the
+  * `stream_upsert` workbook takes 42-52 ms of thread CPU per trigger
+  * (median 48 ms, ~5 ms/statement; seed 7, measured triggers 1-6 of
+  * interpreted 1,500-row triggers, 4 vCPUs, one run). That is 5.6% of the
+  * CPU of the threads running the trigger's addBatch and 1.6% of the
   * program's CPU per trigger, while a parse-once/re-bind cache would have
   * to thread analyzed plans across the per-batch session-clone boundary
   * the registration contract below depends on. Measured and declined.

@@ -2,9 +2,13 @@ package graft.operators
 
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Shared generation + segment manifest machinery for the maintained
   * stores ([[DedupIndex]], [[AnnIndexStore]], [[PairStore]]) — one copy of
@@ -446,7 +450,37 @@ private[graft] object GenStore {
                 table: String): DataFrame = {
     val paths = st.segTableDirs(dir, table).filter(hasData)
     require(paths.nonEmpty, s"table $table has no segments under $dir")
-    paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    readSegments(spark, paths)
+  }
+
+  /** The union of the segment tables at `paths`, every leg read with the
+    * schema the writer of the first one stored (every segment of a table
+    * comes from the same writer). A read without a schema runs one parquet
+    * footer-merging job per segment; this reads one footer on the driver.
+    * A table whose footer carries no Spark schema is inferred once. */
+  private def readSegments(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val schema = writtenSchema(spark, paths.head)
+      .getOrElse(spark.read.parquet(paths.head).schema)
+    paths.map(spark.read.schema(schema).parquet(_)).reduce(_ unionByName _)
+  }
+
+  /** The Spark schema a Spark writer stores in each parquet footer, read
+    * from one data file under `tableDir` — the columns in the files;
+    * partition columns come from directory names when the table is read.
+    * The file inference would pick carries the same schema. */
+  private def writtenSchema(spark: SparkSession, tableDir: String): Option[StructType] = {
+    val walk = Files.walk(Paths.get(tableDir))
+    val file = try walk.iterator().asScala.find { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      } finally walk.close()
+    file.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(f.toUri), spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
   // (session, store dir, table) -> (gen, segs, frame). Building the frame
@@ -504,7 +538,7 @@ private[graft] object GenStore {
                      table: String): Option[DataFrame] = {
     val paths = st.segTableDirs(dir, table).filter(hasData)
     if (paths.isEmpty) None
-    else Some(paths.map(spark.read.parquet(_)).reduce(_ unionByName _))
+    else Some(readSegments(spark, paths))
   }
 
   private def dropCached(dir: String): Unit = {

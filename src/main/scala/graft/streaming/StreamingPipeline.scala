@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming execution of an N-stage statement set: one source scan fanned
@@ -19,10 +21,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The sharing is real only because the RAW batch is materialized once
   * (localCheckpoint): each action on a raw foreachBatch frame re-reads the
   * source files. View transforms recompute per downstream action over the
-  * cached raw blocks — codegen'd row work traded for not paying one eager
+  * cached raw blocks — repeated row work traded for not paying one eager
   * materialization job per view per trigger (the commit-floor knob,
   * VERDICT r11 #5); they MUST therefore be deterministic functions of the
-  * batch, which every compiled STTM view is.
+  * batch, which every compiled STTM view is. That row work is small next
+  * to a trigger's fixed cost, so a batch of at most [[InterpretedMaxRows]]
+  * rows runs every plan of its trigger interpreted: at 1,500 rows, code
+  * generation and Janino compiles took about a fifth of the program's CPU,
+  * and the same bodies were compiled again each trigger after the codegen
+  * cache evicted them. Larger batches keep whole-stage codegen, where
+  * compiled row loops repay their compile.
   *
   * Stage semantics per micro-batch:
   *  1. each VIEW projects/filters the shared raw batch (discriminator
@@ -137,6 +145,27 @@ object StreamingPipeline {
   private val MinBatchesToRetain = 10
   private val FileSourceLogCleanupDelayMs = 0L
 
+  /** Rows per batch at or below which a trigger runs interpreted. A
+    * `stream_upsert` trigger of 1,500 events spent about 20% of the
+    * program's CPU generating and compiling code, mostly re-compiling
+    * bodies evicted from Spark's 100-entry codegen cache (a static conf
+    * the program does not own); compiling a short query costs more than
+    * interpreting it (Kohn, Leis, Neumann, ICDE 2018). Measured per
+    * trigger (CHANGES.md), interpreted triggers used less CPU at 1,500
+    * and 5,000 events; at 15,000 generated code caught up on one of two
+    * seeds for the narrow and the 24-field workbook, so the limit stays
+    * below that crossover. */
+  private[streaming] val InterpretedMaxRows = 5000L
+
+  /** The confs an interpreted trigger sets. `spark.sql.codegen.factoryMode`
+    * is an INTERNAL Spark conf (`SQLConf.CODEGEN_FACTORY_MODE`, the switch
+    * Spark's own suites use to force interpreted projections, predicates
+    * and orderings); StreamingPipelineSpec pins that Spark still honours
+    * it, so an upgrade that ignores it fails loudly. */
+  private val InterpretedConfs = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   def xrefStorePath(workDir: String, xrefName: String): String =
     s"$workDir/${xrefName}_snapshot"
   def sinkPath(workDir: String, sinkName: String): String =
@@ -191,14 +220,18 @@ object StreamingPipeline {
       .start()
   }
 
-  /** One micro-batch of the full statement set. */
+  /** One micro-batch of the full statement set. A batch of at most
+    * `interpretedMaxRows` rows runs its plans interpreted (see
+    * [[InterpretedMaxRows]]); the parameter lets a spec cross the
+    * threshold with a small batch. */
   private[graft] def processSet(
       stores: Map[String, SnapshotStore],
       workDir: String,
       set: StatementSet,
       batch: DataFrame,
       batchId: Long,
-      sinkOpts: SinkOptions = SinkOptions()): Unit = {
+      sinkOpts: SinkOptions = SinkOptions(),
+      interpretedMaxRows: Long = InterpretedMaxRows): Unit = {
     val spark = batch.sparkSession
     // the SHARED SCAN, materialized exactly once per trigger: every view,
     // merge and sink below reads the cached raw blocks, never the source
@@ -209,47 +242,81 @@ object StreamingPipeline {
     // registrations bound the un-checkpointed batch, silently re-reading
     // the source per downstream action.
     val raw = batch.localCheckpoint()
-    val views: Map[String, DataFrame] =
-      set.views.map(v => v.name -> v.transform(raw)).toMap
+    val small = checkpointedRows(batch).exists(_ <= interpretedMaxRows)
+    interpreted(spark, small) {
+      val views: Map[String, DataFrame] =
+        set.views.map(v => v.name -> v.transform(raw)).toMap
 
-    // 2+3. XREF upserts run concurrently across stores; each yields its
-    //      batch-keyed upsert delta (bucket-pruned, semi-joined BELOW the
-    //      merge-on-read dedup — see readBuckets' preFilter contract)
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val deltas: Map[String, UpsertDelta] =
-      concurrently[(String, UpsertDelta)]("merge", batchId, set.xrefs.map { x =>
-        (x.name, () => {
-          val store = stores(x.name)
-          val vb = views(x.view)
-          val prep = store.prepare(vb, x.keys, materialize = false)
-          val (touched, nRows) =
-            store.mergePreparedCounted(prep, x.keys, x.orderCols, Some(batchId))
-          val delta = store.readBuckets(spark, touched, preFilter = { rawSeg =>
-              // key semi-join BEFORE the latest-by-key (it commutes with
-              // per-key dedup): the agg runs over just this batch's keys'
-              // rows instead of every row in the touched buckets — at scale
-              // the difference between aggregating a bucket and a batch.
-              val keySide = vb.select(x.keys.map(col): _*).distinct()
-              val side =
-                if (nRows <= MaxBroadcastKeys) broadcast(keySide) else keySide
-              rawSeg.join(side, x.keys, "left_semi")
-            })
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], vb.schema))
-          x.name -> UpsertDelta(delta)
-        })
-      }).toMap
+      // 2+3. XREF upserts run concurrently across stores; each yields its
+      //      batch-keyed upsert delta (bucket-pruned, semi-joined BELOW the
+      //      merge-on-read dedup — see readBuckets' preFilter contract)
+      import org.apache.spark.sql.functions.{broadcast, col}
+      val deltas: Map[String, UpsertDelta] =
+        concurrently[(String, UpsertDelta)]("merge", batchId, set.xrefs.map { x =>
+          (x.name, () => {
+            val store = stores(x.name)
+            val vb = views(x.view)
+            val prep = store.prepare(vb, x.keys, materialize = false)
+            val (touched, nRows) =
+              store.mergePreparedCounted(prep, x.keys, x.orderCols, Some(batchId))
+            val delta = store.readBuckets(spark, touched, preFilter = { rawSeg =>
+                // key semi-join BEFORE the latest-by-key (it commutes with
+                // per-key dedup): the agg runs over just this batch's keys'
+                // rows instead of every row in the touched buckets — at scale
+                // the difference between aggregating a bucket and a batch.
+                val keySide = vb.select(x.keys.map(col): _*).distinct()
+                val side =
+                  if (nRows <= MaxBroadcastKeys) broadcast(keySide) else keySide
+                rawSeg.join(side, x.keys, "left_semi")
+              })
+              .getOrElse(spark.createDataFrame(
+                spark.sparkContext.emptyRDD[Row], vb.schema))
+            x.name -> UpsertDelta(delta)
+          })
+        }).toMap
 
-    // 4. statement-set fan-out: every INSERT runs concurrently from the
-    //    shared batch, each landing batchId-idempotently in its sink
-    concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
-      (sd.name, () => ChangelogSink.write(
-        sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
-        maxLiveSegments = sinkOpts.maxLiveSegments,
-        targetFileBytes = sinkOpts.targetFileBytes,
-        vacuumGraceMs = sinkOpts.vacuumGraceMs))
-    })
-    ()
+      // 4. statement-set fan-out: every INSERT runs concurrently from the
+      //    shared batch, each landing batchId-idempotently in its sink
+      concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
+        (sd.name, () => ChangelogSink.write(
+          sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
+          maxLiveSegments = sinkOpts.maxLiveSegments,
+          targetFileBytes = sinkOpts.targetFileBytes,
+          vacuumGraceMs = sinkOpts.vacuumGraceMs))
+      })
+      ()
+    }
+  }
+
+  /** The batch's row count, read from the `numOutputRows` SQL metric of
+    * the root operator of its `localCheckpoint` job (Spark resets a plan's
+    * metrics before every action on it), so counting runs no job of its
+    * own. Row-preserving wrappers without the metric are looked through;
+    * any other root yields None. */
+  private def checkpointedRows(batch: DataFrame): Option[Long] = {
+    def rows(p: SparkPlan): Option[Long] = p match {
+      case a: AdaptiveSparkPlanExec => rows(a.executedPlan)
+      case w: WholeStageCodegenExec => rows(w.child)
+      case pr: ProjectExec => rows(pr.child)
+      case other => other.metrics.get("numOutputRows").map(_.value)
+    }
+    rows(batch.queryExecution.executedPlan)
+  }
+
+  /** Run `body` with the session's plans interpreted when `on`: no
+    * whole-stage code generation and no generated projections, predicates
+    * or orderings. The confs are set for the duration of `body` only and
+    * removed after it, so the session leaves every trigger as it entered
+    * it. A conf the session already sets explicitly is the operator's
+    * choice and is left alone, as [[runSet]]'s retention defaults are. */
+  private def interpreted[T](spark: SparkSession, on: Boolean)(body: => T): T = {
+    val conf = spark.conf
+    val owned = if (!on) Nil else {
+      val explicit = conf.getAll // what the session sets; defaults are not listed
+      InterpretedConfs.filterNot { case (k, _) => explicit.contains(k) }
+    }
+    owned.foreach { case (k, v) => conf.set(k, v) }
+    try body finally owned.foreach { case (k, _) => conf.unset(k) }
   }
 
   /** Run the named tasks concurrently and return their results in order.

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.GenStore
 
@@ -167,5 +170,44 @@ class GenStoreSpec extends AnyFunSuite {
     val a = GenStore.readTableCached(s, dir, st, "t")
     val b = GenStore.readTableCached(s, dir, st, "t")
     assert(a eq b)
+  }
+
+  test("readTable reads its writer's schema: no schema-inference job for a 4-segment table") {
+    // each schema-inferring parquet read runs a one-task job over a
+    // parallelized file-status list (ParallelCollectionRDD)
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val dir = newStore()
+    val segs = Seq(GenStore.BaseSeg, "b1", "b2", "b3")
+    segs.zipWithIndex.foreach { case (seg, i) =>
+      val rows = (0 until 6).map(j => (i * 10L + j, s"v$i-$j", j % 2)).toDF("id", "v", "pfx")
+      // one segment writes its columns in another order: legs union by name
+      val df = if (i == 2) rows.select("v", "pfx", "id") else rows
+      df.write.partitionBy("pfx").parquet(s"$dir/g0/$seg/t")
+      if (seg != GenStore.BaseSeg) GenStore.commitSeg(dir, 0, seg)
+    }
+    val st = GenStore.read(dir).get
+    assert(st.segs == segs.toVector)
+    val sc = spark.sparkContext
+    val inference = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))
+          inference.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    val df = try { val d = GenStore.readTable(spark, dir, st, "t"); TestBus.drain(sc); d }
+      finally sc.removeSparkListener(listener)
+    assert(inference.get == 0, s"schema-inference jobs for a 4-segment read: ${inference.get}")
+    // what a per-segment inferring read serves
+    val inferred = st.segTableDirs(dir, "t").map(spark.read.parquet(_)).reduce(_ unionByName _)
+    assert(df.schema == inferred.schema)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(rows(df) == rows(inferred))
+    assert(rows(df).size == 24)
+    assert(rows(df.filter($"pfx" === 1)) == rows(inferred.filter($"pfx" === 1)))
   }
 }

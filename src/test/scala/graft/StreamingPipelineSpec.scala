@@ -4,10 +4,22 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TestBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference,
+  InterpretedUnsafeProjection, Literal, UnsafeProjection}
+import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SttmOps
 import graft.streaming.{ChangelogSink, SnapshotStore, StreamingPipeline}
@@ -71,6 +83,62 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   private val TwoXrefSinkOpts = SinkOptions(maxLiveSegments = 2)
+
+  private def twoXrefStores(set: StatementSet, work: String): Map[String, SnapshotStore] =
+    set.xrefs.map(x => x.name -> new SnapshotStore(
+      xrefStorePath(work, x.name), x.nBuckets, x.maxLiveSegments)).toMap
+
+  /** Codegen compiles so far in this JVM (Spark's own counter). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** A session with none of the shared session's runtime confs: other
+    * suites leave codegen confs set explicitly on the shared one, and an
+    * explicit setting is the operator's, which an interpreted trigger
+    * leaves alone. */
+  private def freshSession(): SparkSession = {
+    val s = spark.newSession()
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
+      assert(!s.conf.getAll.contains(k), s"$k set on a new session"))
+    s
+  }
+
+  /** The store and sink writes `body` runs under `work` in `session`,
+    * each with whether its executed plan holds a whole-stage-codegen
+    * stage. */
+  private def sinkWritePlans(session: SparkSession, work: String)(body: => Unit): Seq[(String, Boolean)] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        helper.collect(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd
+        }.foreach {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toString.contains(work) =>
+            plans.add(c.outputPath.toString ->
+              helper.find(qe.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).nonEmpty)
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try { body; TestBus.drain(session.sparkContext) }
+    finally session.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** The Spark schema each data file under `root` stores in its footer. */
+  private def footerSchemas(root: String): Set[String] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val ls = Files.walk(Paths.get(root))
+    try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).map { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), hconf))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally r.close()
+    }.toSet
+    finally ls.close()
+  }
 
   /** Jobs of [[twoXrefSet]]'s plain and fold triggers over a third of the
     * sf0.001 events each (the job-count spec below). A trigger that reads
@@ -485,5 +553,100 @@ class StreamingPipelineSpec extends AnyFunSuite {
     }
     assert(ChangelogSink.read(spark, sinkPath(s"$base/a", "clicks"))
       .select("batch").distinct().count() == n)
+  }
+
+  test("Spark honours the internal codegen factoryMode conf: NO_CODEGEN builds interpreted projections") {
+    // spark.sql.codegen.factoryMode is internal; an interpreted trigger
+    // depends on it for every projection, predicate and ordering it builds
+    val session = freshSession()
+    val exprs = Seq(Add(BoundReference(0, LongType, nullable = false), Literal(1L)))
+    val key = "spark.sql.codegen.factoryMode"
+    session.conf.set(key, "NO_CODEGEN")
+    val before = compiles
+    val proj =
+      try { SparkSession.setActiveSession(session); UnsafeProjection.create(exprs) }
+      finally { SparkSession.setActiveSession(spark); session.conf.unset(key) }
+    assert(proj.isInstanceOf[InterpretedUnsafeProjection], proj.getClass.getName)
+    assert(compiles == before)
+  }
+
+  test("steady small triggers compile no code; a batch above the limit keeps whole-stage codegen") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_stream_codegen").toString
+    val session = freshSession()
+    val ev = Tables.events(session, dir)
+    val n = 5
+    ev.withColumn("part", pmod(col("event_id"), lit(n)))
+      .write.partitionBy("part").parquet(s"$base/in")
+    val set = twoXrefSet(Tables.customer(session, dir))
+    // Spark's compile counter, read as each trigger's views are built (its
+    // raw batch is checkpointed by then) and once after the last trigger.
+    // Triggers 2 and 4 fold every store and sink: new plans, which the
+    // parent's codegen path compiled on every fold.
+    val atViews = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val first = set.views.head
+    val sampled = set.copy(views = first.copy(transform = { raw: DataFrame =>
+      atViews.add(compiles); first.transform(raw) }) +: set.views.tail)
+    val source = session.readStream.schema(session.read.parquet(s"$base/in").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
+    val q = StreamingPipeline.runSet(source, sampled, s"$base/work", sinkOpts = TwoXrefSinkOpts)
+    if (!q.awaitTermination(300000)) q.stop()
+    assert(q.exception.isEmpty, q.exception.toString)
+    val counts = atViews.asScala.toSeq :+ compiles
+    assert(counts.size == n + 1, s"compile counts per trigger: $counts")
+    assert(counts.drop(1).distinct.size == 1,
+      s"codegen compiled in triggers 2..$n (counts at each trigger's views, then at the end): $counts")
+
+    // a batch of ~170 rows run with a 100-row limit plans its store and
+    // sink writes with whole-stage codegen; at the default limit it plans none
+    val work = s"$base/direct"
+    val stores = twoXrefStores(set, work)
+    val batch0 = ev.filter(pmod(col("event_id"), lit(6)) === 0)
+    val batch1 = ev.filter(pmod(col("event_id"), lit(6)) === 1)
+    val small = sinkWritePlans(session, work)(
+      StreamingPipeline.processSet(stores, work, set, batch0, 0L, TwoXrefSinkOpts))
+    val large = sinkWritePlans(session, work)(
+      StreamingPipeline.processSet(stores, work, set, batch1, 1L, TwoXrefSinkOpts,
+        interpretedMaxRows = 100L))
+    val writes = set.xrefs.size + set.sinks.size
+    assert(small.size == writes && large.size == writes, s"$small $large")
+    assert(small.forall(!_._2), s"interpreted trigger planned whole-stage codegen: $small")
+    assert(large.forall(_._2), s"a batch above the limit planned no whole-stage codegen: $large")
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
+      assert(!session.conf.getAll.contains(k), s"$k left set on the session"))
+  }
+
+  test("interpreted and generated triggers agree: XREF snapshots and sinks equal in rows and footer schema") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_stream_modes").toString
+    val session = freshSession()
+    val ev = Tables.events(session, dir)
+    val set = twoXrefSet(Tables.customer(session, dir))
+    // 3 triggers (the third folds); a limit no batch crosses forces every
+    // trigger interpreted, a negative one forces whole-stage codegen. Both
+    // runs complete, so SnapshotStore's determinism guard fired in neither.
+    def run(work: String, limit: Long): Unit = {
+      val stores = twoXrefStores(set, work)
+      (0 until 3).foreach(i => StreamingPipeline.processSet(stores, work, set,
+        ev.filter(pmod(col("event_id"), lit(3)) === i), i.toLong, TwoXrefSinkOpts,
+        interpretedMaxRows = limit))
+    }
+    val (interp, gen) = (s"$base/interpreted", s"$base/generated")
+    run(interp, Long.MaxValue)
+    run(gen, -1L)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    set.xrefs.foreach { x =>
+      def snap(work: String) = new SnapshotStore(xrefStorePath(work, x.name)).read(spark).get
+      assert(rows(snap(interp)) == rows(snap(gen)), s"xref ${x.name}")
+      assert(footerSchemas(xrefStorePath(interp, x.name)) ==
+        footerSchemas(xrefStorePath(gen, x.name)), s"xref ${x.name}")
+    }
+    set.sinks.foreach { s =>
+      def sink(work: String) = ChangelogSink.read(spark, sinkPath(work, s.name))
+      assert(rows(sink(interp)).nonEmpty || s.name == "quarantine", s"sink ${s.name}")
+      assert(rows(sink(interp)) == rows(sink(gen)), s"sink ${s.name}")
+      assert(footerSchemas(sinkPath(interp, s.name)) ==
+        footerSchemas(sinkPath(gen, s.name)), s"sink ${s.name}")
+    }
   }
 }
