@@ -5,7 +5,9 @@
 The change is this checkout's working tree. The base is a git revision,
 extracted with `git archive` into a directory of its own (a temporary one
 unless --base-dir names one; nothing is written under .git and no worktree
-is made). Each side builds its own `.bench_build/` on its first run. Pairs
+is made). A --base-dir records the commit it holds in `.ab-base-rev` and is
+reused only for that commit: a directory holding any other tree is refused.
+Each side builds its own `.bench_build/` on its first run. Pairs
 alternate which side runs first, so a drift in host speed during the window
 falls on both sides alike.
 
@@ -35,6 +37,7 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STAMP = ".ab-base-rev"
 
 
 def seeds_arg(text):
@@ -51,12 +54,32 @@ def end_to_end():
         return [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
 
 
-def extract(rev, dest):
-    """The tree of `rev`, written to `dest` with `git archive`."""
-    tar = subprocess.run(["git", "archive", "--format=tar", rev], cwd=ROOT,
+def commit_of(rev):
+    return subprocess.run(["git", "rev-parse", "--verify", rev + "^{commit}"], cwd=ROOT,
+                          capture_output=True, text=True, check=True).stdout.strip()
+
+
+def held_commit(base_dir):
+    """The commit an existing, non-empty --base-dir was extracted from
+    ('' when it has no stamp), or None when there is nothing to reuse."""
+    if not os.path.isdir(base_dir) or not os.listdir(base_dir):
+        return None
+    stamp = os.path.join(base_dir, STAMP)
+    if not os.path.isfile(stamp):
+        return ""
+    with open(stamp) as f:
+        return f.read().strip()
+
+
+def extract(commit, dest):
+    """The tree of `commit`, written to `dest` with `git archive` and
+    stamped with the commit."""
+    tar = subprocess.run(["git", "archive", "--format=tar", commit], cwd=ROOT,
                          capture_output=True, check=True).stdout
     with tarfile.open(fileobj=io.BytesIO(tar)) as t:
         t.extractall(dest)
+    with open(os.path.join(dest, STAMP), "w") as f:
+        f.write(commit + "\n")
 
 
 def bench_cmd(args, seed):
@@ -106,16 +129,21 @@ def main():
     ap.add_argument("--workload", required=True, choices=("stream_upsert", "batch_curation"))
     ap.add_argument("--seeds", required=True, type=seeds_arg, help="e.g. 3001-3005 or 3001,3003")
     ap.add_argument("--seconds", type=int, default=12)
-    ap.add_argument("--base-dir", help="extract the base here (kept, reused when it exists)")
+    ap.add_argument("--base-dir", help="extract the base here (kept; reused for the same commit)")
     ap.add_argument("--dry-run", action="store_true", help="print the commands, run nothing")
     args = ap.parse_args()
 
     metrics = end_to_end()
+    commit = commit_of(args.base)
     base_dir = args.base_dir or os.path.join(tempfile.gettempdir(), "ab-base-<tmp>")
-    reuse = args.base_dir and os.path.isdir(os.path.join(args.base_dir, "perfbench"))
+    held = held_commit(args.base_dir) if args.base_dir else None
+    if held is not None and held != commit:
+        sys.exit(f"--base-dir {args.base_dir} holds {held or 'a tree with no ' + STAMP}, "
+                 f"not {args.base} ({commit}); name an empty or new directory")
+    reuse = held is not None
     if args.dry_run:
         if not reuse:
-            print(f"git archive --format=tar {args.base} | tar -x -C {base_dir}")
+            print(f"git archive --format=tar {commit} | tar -x -C {base_dir}")
         for i, seed in enumerate(args.seeds):
             sides = [("base", base_dir), ("change", ROOT)]
             for side, cwd in sides if i % 2 == 0 else sides[::-1]:
@@ -126,7 +154,7 @@ def main():
         base_dir = tempfile.mkdtemp(prefix="ab-base-")
     if not reuse:
         os.makedirs(base_dir, exist_ok=True)
-        extract(args.base, base_dir)
+        extract(commit, base_dir)
     pairs = []
     try:
         names = [n for n, _ in metrics]

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import java.util.Locale
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming execution of an N-stage statement set: one source scan fanned
@@ -25,12 +24,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * materialization job per view per trigger (the commit-floor knob,
   * VERDICT r11 #5); they MUST therefore be deterministic functions of the
   * batch, which every compiled STTM view is. That row work is small next
-  * to a trigger's fixed cost, so a batch of at most [[InterpretedMaxRows]]
-  * rows runs every plan of its trigger interpreted: at 1,500 rows, code
-  * generation and Janino compiles took about a fifth of the program's CPU,
-  * and the same bodies were compiled again each trigger after the codegen
-  * cache evicted them. Larger batches keep whole-stage codegen, where
-  * compiled row loops repay their compile.
+  * to a trigger's fixed cost, so every plan of a trigger runs interpreted
+  * (see [[runSet]]): at 1,500 rows per trigger, code generation and Janino
+  * compiles took about a fifth of the program's CPU, the same bodies
+  * compiled again each trigger after Spark's codegen cache evicted them,
+  * and no measured trigger size, up to 75,000 rows, showed compiled row
+  * loops repaying their compile beyond run-to-run noise.
   *
   * Stage semantics per micro-batch:
   *  1. each VIEW projects/filters the shared raw batch (discriminator
@@ -145,26 +144,17 @@ object StreamingPipeline {
   private val MinBatchesToRetain = 10
   private val FileSourceLogCleanupDelayMs = 0L
 
-  /** Rows per batch at or below which a trigger runs interpreted. A
-    * `stream_upsert` trigger of 1,500 events spent about 20% of the
-    * program's CPU generating and compiling code, mostly re-compiling
-    * bodies evicted from Spark's 100-entry codegen cache (a static conf
-    * the program does not own); compiling a short query costs more than
-    * interpreting it (Kohn, Leis, Neumann, ICDE 2018). Measured per
-    * trigger (CHANGES.md), interpreted triggers used less CPU at 1,500
-    * and 5,000 events; at 15,000 generated code caught up on one of two
-    * seeds for the narrow and the 24-field workbook, so the limit stays
-    * below that crossover. */
-  private[streaming] val InterpretedMaxRows = 5000L
-
-  /** The confs an interpreted trigger sets. `spark.sql.codegen.factoryMode`
-    * is an INTERNAL Spark conf (`SQLConf.CODEGEN_FACTORY_MODE`, the switch
-    * Spark's own suites use to force interpreted projections, predicates
-    * and orderings); StreamingPipelineSpec pins that Spark still honours
-    * it, so an upgrade that ignores it fails loudly. */
+  /** The confs every trigger of [[runSet]] runs under: no whole-stage
+    * code generation and no generated projections, predicates or
+    * orderings, each with its stock value. Compiling a short query costs
+    * more than interpreting it (Kohn, Leis, Neumann, ICDE 2018).
+    * `spark.sql.codegen.factoryMode` is an INTERNAL Spark conf
+    * (`SQLConf.CODEGEN_FACTORY_MODE`, the switch Spark's own suites use to
+    * force interpreted evaluation); StreamingPipelineSpec pins that Spark
+    * still honours it, so an upgrade that ignores it fails loudly. */
   private val InterpretedConfs = Seq(
-    "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    ("spark.sql.codegen.wholeStage", "true", "false"),
+    ("spark.sql.codegen.factoryMode", "FALLBACK", "NO_CODEGEN"))
 
   def xrefStorePath(workDir: String, xrefName: String): String =
     s"$workDir/${xrefName}_snapshot"
@@ -188,50 +178,59 @@ object StreamingPipeline {
       .map(x => x.name -> new SnapshotStore(xrefStorePath(workDir, x.name),
         nBuckets = x.nBuckets, maxLiveSegments = x.maxLiveSegments))
       .toMap
+    val conf = source.sparkSession.conf
     // Stockness is decided on PARSED values, not string forms (ADVICE r13):
     // conf.get renders the default in whatever form the Spark version
     // registered it ("10m" today, but "600s"/"600000ms" parse identically),
     // and a string-form set would silently treat a re-rendered default as
     // operator tuning — the retention defaults would stop applying and
-    // checkpoint growth would return with no signal. An UNPARSEABLE current
-    // value is treated as explicit tuning (don't override), never as stock.
-    def applyRetention(key: String, stockParsed: Long, parse: String => Long,
-                       v: String): Unit = {
-      val conf = source.sparkSession.conf
+    // checkpoint growth would return with no signal. The same holds for a
+    // default written back explicitly, as code that saved a conf with
+    // getOption does when it restores it. An UNPARSEABLE current value is
+    // treated as explicit tuning (don't override), never as stock.
+    def isStock[T](key: String, stockParsed: T, parse: String => T): Boolean = {
       val cur = try Option(conf.get(key)) catch { case _: Exception => None }
-      val isStock = cur.forall(c =>
-        scala.util.Try(parse(c.trim)).toOption.contains(stockParsed))
-      if (isStock) conf.set(key, v)
+      cur.forall(c => scala.util.Try(parse(c.trim)).toOption.contains(stockParsed))
     }
-    applyRetention("spark.sql.streaming.minBatchesToRetain",
-      stockParsed = 100L, parse = _.toLong, MinBatchesToRetain.toString)
-    applyRetention("spark.sql.streaming.fileSource.log.cleanupDelay",
-      stockParsed = 600000L, // 10 min, the conf's registered default
-      // the conf is registered as a ms-default time conf, so a bare
-      // number means ms — same parser Spark applies
-      parse = org.apache.spark.network.util.JavaUtils.timeStringAsMs,
-      FileSourceLogCleanupDelayMs.toString)
-    source.writeStream
+    if (isStock("spark.sql.streaming.minBatchesToRetain", 100L, _.toLong))
+      conf.set("spark.sql.streaming.minBatchesToRetain", MinBatchesToRetain.toString)
+    // 10 min, the conf's registered default; the conf is registered as a
+    // ms-default time conf, so a bare number means ms — same parser Spark applies
+    if (isStock("spark.sql.streaming.fileSource.log.cleanupDelay", 600000L,
+        org.apache.spark.network.util.JavaUtils.timeStringAsMs))
+      conf.set("spark.sql.streaming.fileSource.log.cleanupDelay",
+        FileSourceLogCleanupDelayMs.toString)
+    // The stream clones the source's session when it is created, inside
+    // start(), and runs every trigger on that clone. So the interpreted
+    // confs are set only around start() and the prior settings restored
+    // after it: the stream runs interpreted, the caller's session keeps
+    // code generation for its other queries.
+    val interpreted = InterpretedConfs.collect {
+      case (key, stock, v)
+          if isStock(key, stock.toLowerCase(Locale.ROOT), _.toLowerCase(Locale.ROOT)) =>
+        (key, conf.getAll.get(key), v)
+    }
+    interpreted.foreach { case (key, _, v) => conf.set(key, v) }
+    try source.writeStream
       .option("checkpointLocation", s"$workDir/_checkpoint")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processSet(stores, workDir, set, batch, batchId, sinkOpts)
       }
       .start()
+    finally interpreted.foreach { case (key, prior, _) =>
+      prior.fold(conf.unset(key))(conf.set(key, _)) }
   }
 
-  /** One micro-batch of the full statement set. A batch of at most
-    * `interpretedMaxRows` rows runs its plans interpreted (see
-    * [[InterpretedMaxRows]]); the parameter lets a spec cross the
-    * threshold with a small batch. */
+  /** One micro-batch of the full statement set, run under the batch's
+    * session confs ([[runSet]]'s stream runs it interpreted). */
   private[graft] def processSet(
       stores: Map[String, SnapshotStore],
       workDir: String,
       set: StatementSet,
       batch: DataFrame,
       batchId: Long,
-      sinkOpts: SinkOptions = SinkOptions(),
-      interpretedMaxRows: Long = InterpretedMaxRows): Unit = {
+      sinkOpts: SinkOptions = SinkOptions()): Unit = {
     val spark = batch.sparkSession
     // the SHARED SCAN, materialized exactly once per trigger: every view,
     // merge and sink below reads the cached raw blocks, never the source
@@ -242,81 +241,47 @@ object StreamingPipeline {
     // registrations bound the un-checkpointed batch, silently re-reading
     // the source per downstream action.
     val raw = batch.localCheckpoint()
-    val small = checkpointedRows(batch).exists(_ <= interpretedMaxRows)
-    interpreted(spark, small) {
-      val views: Map[String, DataFrame] =
-        set.views.map(v => v.name -> v.transform(raw)).toMap
+    val views: Map[String, DataFrame] =
+      set.views.map(v => v.name -> v.transform(raw)).toMap
 
-      // 2+3. XREF upserts run concurrently across stores; each yields its
-      //      batch-keyed upsert delta (bucket-pruned, semi-joined BELOW the
-      //      merge-on-read dedup — see readBuckets' preFilter contract)
-      import org.apache.spark.sql.functions.{broadcast, col}
-      val deltas: Map[String, UpsertDelta] =
-        concurrently[(String, UpsertDelta)]("merge", batchId, set.xrefs.map { x =>
-          (x.name, () => {
-            val store = stores(x.name)
-            val vb = views(x.view)
-            val prep = store.prepare(vb, x.keys, materialize = false)
-            val (touched, nRows) =
-              store.mergePreparedCounted(prep, x.keys, x.orderCols, Some(batchId))
-            val delta = store.readBuckets(spark, touched, preFilter = { rawSeg =>
-                // key semi-join BEFORE the latest-by-key (it commutes with
-                // per-key dedup): the agg runs over just this batch's keys'
-                // rows instead of every row in the touched buckets — at scale
-                // the difference between aggregating a bucket and a batch.
-                val keySide = vb.select(x.keys.map(col): _*).distinct()
-                val side =
-                  if (nRows <= MaxBroadcastKeys) broadcast(keySide) else keySide
-                rawSeg.join(side, x.keys, "left_semi")
-              })
-              .getOrElse(spark.createDataFrame(
-                spark.sparkContext.emptyRDD[Row], vb.schema))
-            x.name -> UpsertDelta(delta)
-          })
-        }).toMap
+    // 2+3. XREF upserts run concurrently across stores; each yields its
+    //      batch-keyed upsert delta (bucket-pruned, semi-joined BELOW the
+    //      merge-on-read dedup — see readBuckets' preFilter contract)
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val deltas: Map[String, UpsertDelta] =
+      concurrently[(String, UpsertDelta)]("merge", batchId, set.xrefs.map { x =>
+        (x.name, () => {
+          val store = stores(x.name)
+          val vb = views(x.view)
+          val prep = store.prepare(vb, x.keys, materialize = false)
+          val (touched, nRows) =
+            store.mergePreparedCounted(prep, x.keys, x.orderCols, Some(batchId))
+          val delta = store.readBuckets(spark, touched, preFilter = { rawSeg =>
+              // key semi-join BEFORE the latest-by-key (it commutes with
+              // per-key dedup): the agg runs over just this batch's keys'
+              // rows instead of every row in the touched buckets — at scale
+              // the difference between aggregating a bucket and a batch.
+              val keySide = vb.select(x.keys.map(col): _*).distinct()
+              val side =
+                if (nRows <= MaxBroadcastKeys) broadcast(keySide) else keySide
+              rawSeg.join(side, x.keys, "left_semi")
+            })
+            .getOrElse(spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row], vb.schema))
+          x.name -> UpsertDelta(delta)
+        })
+      }).toMap
 
-      // 4. statement-set fan-out: every INSERT runs concurrently from the
-      //    shared batch, each landing batchId-idempotently in its sink
-      concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
-        (sd.name, () => ChangelogSink.write(
-          sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
-          maxLiveSegments = sinkOpts.maxLiveSegments,
-          targetFileBytes = sinkOpts.targetFileBytes,
-          vacuumGraceMs = sinkOpts.vacuumGraceMs))
-      })
-      ()
-    }
-  }
-
-  /** The batch's row count, read from the `numOutputRows` SQL metric of
-    * the root operator of its `localCheckpoint` job (Spark resets a plan's
-    * metrics before every action on it), so counting runs no job of its
-    * own. Row-preserving wrappers without the metric are looked through;
-    * any other root yields None. */
-  private def checkpointedRows(batch: DataFrame): Option[Long] = {
-    def rows(p: SparkPlan): Option[Long] = p match {
-      case a: AdaptiveSparkPlanExec => rows(a.executedPlan)
-      case w: WholeStageCodegenExec => rows(w.child)
-      case pr: ProjectExec => rows(pr.child)
-      case other => other.metrics.get("numOutputRows").map(_.value)
-    }
-    rows(batch.queryExecution.executedPlan)
-  }
-
-  /** Run `body` with the session's plans interpreted when `on`: no
-    * whole-stage code generation and no generated projections, predicates
-    * or orderings. The confs are set for the duration of `body` only and
-    * removed after it, so the session leaves every trigger as it entered
-    * it. A conf the session already sets explicitly is the operator's
-    * choice and is left alone, as [[runSet]]'s retention defaults are. */
-  private def interpreted[T](spark: SparkSession, on: Boolean)(body: => T): T = {
-    val conf = spark.conf
-    val owned = if (!on) Nil else {
-      val explicit = conf.getAll // what the session sets; defaults are not listed
-      InterpretedConfs.filterNot { case (k, _) => explicit.contains(k) }
-    }
-    owned.foreach { case (k, v) => conf.set(k, v) }
-    try body finally owned.foreach { case (k, _) => conf.unset(k) }
+    // 4. statement-set fan-out: every INSERT runs concurrently from the
+    //    shared batch, each landing batchId-idempotently in its sink
+    concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
+      (sd.name, () => ChangelogSink.write(
+        sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
+        maxLiveSegments = sinkOpts.maxLiveSegments,
+        targetFileBytes = sinkOpts.targetFileBytes,
+        vacuumGraceMs = sinkOpts.vacuumGraceMs))
+    })
+    ()
   }
 
   /** Run the named tasks concurrently and return their results in order.

@@ -91,20 +91,12 @@ class StreamingPipelineSpec extends AnyFunSuite {
   /** Codegen compiles so far in this JVM (Spark's own counter). */
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** A session with none of the shared session's runtime confs: other
-    * suites leave codegen confs set explicitly on the shared one, and an
-    * explicit setting is the operator's, which an interpreted trigger
-    * leaves alone. */
-  private def freshSession(): SparkSession = {
-    val s = spark.newSession()
-    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
-      assert(!s.conf.getAll.contains(k), s"$k set on a new session"))
-    s
-  }
+  private val WholeStage = "spark.sql.codegen.wholeStage"
+  private val FactoryMode = "spark.sql.codegen.factoryMode"
 
-  /** The store and sink writes `body` runs under `work` in `session`,
-    * each with whether its executed plan holds a whole-stage-codegen
-    * stage. */
+  /** The store and sink writes `body` runs under `work` in `session` (or
+    * in a stream cloned from it while the listener is registered), each
+    * with whether its executed plan holds a whole-stage-codegen stage. */
   private def sinkWritePlans(session: SparkSession, work: String)(body: => Unit): Seq[(String, Boolean)] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
     val helper = new AdaptiveSparkPlanHelper {}
@@ -558,82 +550,84 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("Spark honours the internal codegen factoryMode conf: NO_CODEGEN builds interpreted projections") {
     // spark.sql.codegen.factoryMode is internal; an interpreted trigger
     // depends on it for every projection, predicate and ordering it builds
-    val session = freshSession()
+    val session = spark.newSession()
     val exprs = Seq(Add(BoundReference(0, LongType, nullable = false), Literal(1L)))
-    val key = "spark.sql.codegen.factoryMode"
-    session.conf.set(key, "NO_CODEGEN")
+    session.conf.set(FactoryMode, "NO_CODEGEN")
     val before = compiles
     val proj =
       try { SparkSession.setActiveSession(session); UnsafeProjection.create(exprs) }
-      finally { SparkSession.setActiveSession(spark); session.conf.unset(key) }
+      finally SparkSession.setActiveSession(spark)
     assert(proj.isInstanceOf[InterpretedUnsafeProjection], proj.getClass.getName)
     assert(compiles == before)
   }
 
-  test("steady small triggers compile no code; a batch above the limit keeps whole-stage codegen") {
+  test("runSet triggers run interpreted: steady triggers compile no code, no write plans whole-stage codegen") {
     spark.sparkContext.setLogLevel("ERROR")
     val base = Files.createTempDirectory("graft_stream_codegen").toString
-    val session = freshSession()
-    val ev = Tables.events(session, dir)
+    val ev = Tables.events(spark, dir)
     val n = 5
     ev.withColumn("part", pmod(col("event_id"), lit(n)))
       .write.partitionBy("part").parquet(s"$base/in")
-    val set = twoXrefSet(Tables.customer(session, dir))
+    val set = twoXrefSet(Tables.customer(spark, dir))
     // Spark's compile counter, read as each trigger's views are built (its
     // raw batch is checkpointed by then) and once after the last trigger.
-    // Triggers 2 and 4 fold every store and sink: new plans, which the
-    // parent's codegen path compiled on every fold.
+    // Triggers 2 and 4 fold every store and sink: new plans, which a
+    // codegen'd trigger compiles on every fold.
     val atViews = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val first = set.views.head
     val sampled = set.copy(views = first.copy(transform = { raw: DataFrame =>
       atViews.add(compiles); first.transform(raw) }) +: set.views.tail)
-    val source = session.readStream.schema(session.read.parquet(s"$base/in").schema)
+    val source = spark.readStream.schema(spark.read.parquet(s"$base/in").schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = StreamingPipeline.runSet(source, sampled, s"$base/work", sinkOpts = TwoXrefSinkOpts)
-    if (!q.awaitTermination(300000)) q.stop()
-    assert(q.exception.isEmpty, q.exception.toString)
+    // the shared session as another suite leaves it after restoring a
+    // conf it read with getOption: the stock factoryMode written back
+    // explicitly, wholeStage not set at all
+    val prior = Seq(WholeStage, FactoryMode).map(k => k -> spark.conf.getAll.get(k))
+    spark.conf.unset(WholeStage)
+    spark.conf.set(FactoryMode, "FALLBACK")
+    val writes = try {
+      val w = sinkWritePlans(spark, s"$base/work") {
+        val q = StreamingPipeline.runSet(source, sampled, s"$base/work", sinkOpts = TwoXrefSinkOpts)
+        if (!q.awaitTermination(300000)) q.stop()
+        assert(q.exception.isEmpty, q.exception.toString)
+      }
+      // the caller's session leaves runSet as it entered it
+      assert(!spark.conf.getAll.contains(WholeStage))
+      assert(spark.conf.getAll.get(FactoryMode).contains("FALLBACK"))
+      w
+    } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     val counts = atViews.asScala.toSeq :+ compiles
     assert(counts.size == n + 1, s"compile counts per trigger: $counts")
     assert(counts.drop(1).distinct.size == 1,
       s"codegen compiled in triggers 2..$n (counts at each trigger's views, then at the end): $counts")
-
-    // a batch of ~170 rows run with a 100-row limit plans its store and
-    // sink writes with whole-stage codegen; at the default limit it plans none
-    val work = s"$base/direct"
-    val stores = twoXrefStores(set, work)
-    val batch0 = ev.filter(pmod(col("event_id"), lit(6)) === 0)
-    val batch1 = ev.filter(pmod(col("event_id"), lit(6)) === 1)
-    val small = sinkWritePlans(session, work)(
-      StreamingPipeline.processSet(stores, work, set, batch0, 0L, TwoXrefSinkOpts))
-    val large = sinkWritePlans(session, work)(
-      StreamingPipeline.processSet(stores, work, set, batch1, 1L, TwoXrefSinkOpts,
-        interpretedMaxRows = 100L))
-    val writes = set.xrefs.size + set.sinks.size
-    assert(small.size == writes && large.size == writes, s"$small $large")
-    assert(small.forall(!_._2), s"interpreted trigger planned whole-stage codegen: $small")
-    assert(large.forall(_._2), s"a batch above the limit planned no whole-stage codegen: $large")
-    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
-      assert(!session.conf.getAll.contains(k), s"$k left set on the session"))
+    // every trigger writes both stores and all 5 sinks, plus its folds
+    assert(writes.size >= n * (set.xrefs.size + set.sinks.size), s"writes: $writes")
+    assert(writes.forall(!_._2), s"a stream write planned whole-stage codegen: $writes")
   }
 
   test("interpreted and generated triggers agree: XREF snapshots and sinks equal in rows and footer schema") {
     spark.sparkContext.setLogLevel("ERROR")
     val base = Files.createTempDirectory("graft_stream_modes").toString
-    val session = freshSession()
-    val ev = Tables.events(session, dir)
-    val set = twoXrefSet(Tables.customer(session, dir))
-    // 3 triggers (the third folds); a limit no batch crosses forces every
-    // trigger interpreted, a negative one forces whole-stage codegen. Both
-    // runs complete, so SnapshotStore's determinism guard fired in neither.
-    def run(work: String, limit: Long): Unit = {
+    // 3 triggers (the third folds), each mode forced on a session of its
+    // own. Both runs complete, so SnapshotStore's determinism guard fired
+    // in neither.
+    def run(work: String, wholeStage: String, factoryMode: String): Seq[(String, Boolean)] = {
+      val session = spark.newSession()
+      session.conf.set(WholeStage, wholeStage)
+      session.conf.set(FactoryMode, factoryMode)
+      val ev = Tables.events(session, dir)
+      val set = twoXrefSet(Tables.customer(session, dir))
       val stores = twoXrefStores(set, work)
-      (0 until 3).foreach(i => StreamingPipeline.processSet(stores, work, set,
-        ev.filter(pmod(col("event_id"), lit(3)) === i), i.toLong, TwoXrefSinkOpts,
-        interpretedMaxRows = limit))
+      sinkWritePlans(session, work)((0 until 3).foreach(i =>
+        StreamingPipeline.processSet(stores, work, set,
+          ev.filter(pmod(col("event_id"), lit(3)) === i), i.toLong, TwoXrefSinkOpts)))
     }
     val (interp, gen) = (s"$base/interpreted", s"$base/generated")
-    run(interp, Long.MaxValue)
-    run(gen, -1L)
+    val interpWrites = run(interp, "false", "NO_CODEGEN")
+    val genWrites = run(gen, "true", "CODEGEN_ONLY")
+    assert(interpWrites.nonEmpty && interpWrites.forall(!_._2), s"interpreted: $interpWrites")
+    assert(genWrites.nonEmpty && genWrites.forall(_._2), s"generated: $genWrites")
+    val set = twoXrefSet(Tables.customer(spark, dir))
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     set.xrefs.foreach { x =>
       def snap(work: String) = new SnapshotStore(xrefStorePath(work, x.name)).read(spark).get
