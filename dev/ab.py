@@ -17,6 +17,10 @@ the medians, and the number of pairs the change won (better in the
 direction BENCHMARK.json gives). A run that is not correct is reported and
 its pair left out of the summary.
 
+A metric whose change median is worse than the base median by more than
+its BENCHMARK.json `bound` (a fraction of the base median) is flagged
+`OVER BOUND`, the rule a change is rejected by; the script then exits 1.
+
 Usage (from the root of the checkout):
 
     python3 dev/ab.py --base HEAD~1 --workload stream_upsert --seeds 3001-3005
@@ -51,7 +55,15 @@ def seeds_arg(text):
 
 def end_to_end():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        return [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+        return [(m["name"], m["better"], m["bound"]) for m in json.load(f)["end_to_end"]]
+
+
+def worse_by(base, change, better):
+    """How much worse the change median is than the base median, as a
+    fraction of the base median (negative when it is better)."""
+    if not base:
+        return float("nan")
+    return (change - base) / base if better == "lower" else (base - change) / base
 
 
 def commit_of(rev):
@@ -110,17 +122,26 @@ def quartiles(xs):
 
 
 def summarise(pairs, metrics):
+    """Print the per-metric summary; return the names of the metrics whose
+    change median is worse than the base median by more than their bound."""
     print(f"\n{len(pairs)} correct pairs")
-    for name, better in metrics:
+    over = []
+    for name, better, bound in metrics:
         base = [b[name] for _, b, _ in pairs]
         chg = [c[name] for _, _, c in pairs]
         bq, cq = quartiles(base), quartiles(chg)
         won = sum((c < b) if better == "lower" else (c > b) for b, c in zip(base, chg))
         delta = (cq[1] - bq[1]) / bq[1] * 100 if bq[1] else float("nan")
         gap = abs(cq[1] - bq[1]) > bq[2] - bq[0]
+        worse = worse_by(bq[1], cq[1], better)
+        flag = ""
+        if worse > bound:
+            over.append(name)
+            flag = f"  OVER BOUND (worse by {worse * 100:.1f}%, bound {bound * 100:.0f}%)"
         print(f"{name:22s} base {bq[1]:.4g} [{bq[0]:.4g}, {bq[2]:.4g}]  "
               f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  {delta:+.1f}%  "
-              f"change won {won}/{len(pairs)}  median gap > base IQR: {gap}")
+              f"change won {won}/{len(pairs)}  median gap > base IQR: {gap}{flag}")
+    return over
 
 
 def main():
@@ -157,7 +178,7 @@ def main():
         extract(commit, base_dir)
     pairs = []
     try:
-        names = [n for n, _ in metrics]
+        names = [n for n, _, _ in metrics]
         print("pair seed side    " + "  ".join(f"{n:>20s}" for n in names))
         for i, seed in enumerate(args.seeds):
             sides = [("base", base_dir), ("change", ROOT)]
@@ -174,8 +195,11 @@ def main():
     finally:
         if not args.base_dir:
             shutil.rmtree(base_dir, ignore_errors=True)
-    if pairs:
-        summarise(pairs, metrics)
+    if not pairs:
+        sys.exit("no correct pairs")
+    over = summarise(pairs, metrics)
+    if over:
+        sys.exit(f"worse than the base by more than the bound: {', '.join(over)}")
 
 
 if __name__ == "__main__":

@@ -1,7 +1,9 @@
 package graft.compile
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.metric.SQLMetric
 import graft.functions.FlinkCompat
+import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDef}
 
 /** Compiled STTM workbook -> streaming statement set (VERDICT r11 #2's
@@ -12,8 +14,16 @@ import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDe
   *
   *   - VIEW targets whose FROM table is the streamed topic re-evaluating
   *     per micro-batch over the shared raw batch;
-  *   - VIEW targets over any other table (dim views like CUST_VW) planned
-  *     once at bridge time as static frames;
+  *   - VIEW targets over any other table (dim views like CUST_VW) read
+  *     ONCE PER STREAM RUN: analyzed at bridge time (no Spark job, no
+  *     physical planning, so set-up cost is unchanged) and materialized on
+  *     the stream's own session at its first trigger (a lazy
+  *     localCheckpoint that trigger's first reader fills). Every later
+  *     trigger's FGAC join and quarantine anti-join read the cached rows
+  *     instead of re-parsing the dim's source once per sink per trigger —
+  *     the reference's statement set likewise keeps CUST_VW once for both
+  *     INSERTs. The dim is static for the run: a change to its source is
+  *     seen only by a restarted stream, which re-reads it;
   *   - upsert-changelog XREF targets (PK + `graft.upsert.order`) becoming
   *     [[graft.streaming.SnapshotStore]] tables, delete-flag exclusion
   *     applied per batch exactly as in the batch runner (shared
@@ -36,13 +46,14 @@ import graft.streaming.StreamingPipeline.{SinkDef, StatementSet, ViewDef, XrefDe
   * the registration contract below depends on. Measured and declined.
   *
   * Name resolution: each target registers under its emitted name in
-  * `session`'s temp catalog — static frames at bridge time, per-batch
+  * `session`'s temp catalog — static frames at bridge time (re-registered
+  * materialized on the stream's session at its first trigger), per-batch
   * frames during the trigger (processSet evaluates view transforms in
-  * declaration order on one thread; sink emits re-register each xref's
-  * delta before planning, overriding the xref-input registration with the
-  * delta, which is the read every INSERT gets). Temp views are
-  * session-scoped: run ONE statement set per dedicated session, the same
-  * discipline every registered query already follows. */
+  * declaration order on one thread; a sink emit registers the delta of
+  * each xref its SQL references before planning, which is the read every
+  * INSERT gets — a delta no INSERT references is never computed). Temp
+  * views are session-scoped: run ONE statement set per dedicated session,
+  * the same discipline every registered query already follows. */
 object StreamingBridge {
 
   def toStatementSet(
@@ -124,22 +135,36 @@ object StreamingBridge {
         "resolve only inside sink emits; sink outputs never register), so " +
         "this view would fail on the first batch. Read the target's source " +
         "view instead, or run the downstream read as its own statement set") }
-    // dim views: planned once, resolvable by name from every compiled SELECT
+    // dim views: analyzed now (no job, no physical plan), resolvable by name
+    // from every compiled SELECT; materialized at a stream's first trigger
     staticViews.foreach(v =>
       session.sql(v.selectSql).createOrReplaceTempView(v.name))
+    // per stream session, the metrics of its dims' filling plans, kept
+    // reachable for the session's life (StreamingPipeline.lazyCheckpoint)
+    val materialized = new java.util.WeakHashMap[SparkSession, Seq[SQLMetric]]()
+    def materializeDims(sb: SparkSession): Unit = materialized.synchronized {
+      if (!materialized.containsKey(sb)) materialized.put(sb, staticViews.flatMap { v =>
+        val (dim, metrics) = StreamingPipeline.lazyCheckpoint(sb.table(v.name))
+        dim.createOrReplaceTempView(v.name)
+        metrics
+      })
+    }
 
     // Per-batch SQL must run against the STREAM's session: Spark clones
     // the session when a streaming query starts (sparkSessionForStream),
     // and the micro-batch frames belong to that clone — registrations on
     // the original would be invisible to them. The clone copies the temp
     // catalog + function registry at start, so the static views and
-    // FlinkCompat registered above carry over.
+    // FlinkCompat registered above carry over; the clone is the same for
+    // every trigger of a run, so its dims are materialized once per run,
+    // and a restarted stream (a new clone) reads them again.
     val viewDefs =
       streamViews.map { v =>
         ViewDef(v.name, raw => {
           // the raw batch IS the topic for this trigger; registration is
           // idempotent across this batch's stream views
           val sb = raw.sparkSession
+          materializeDims(sb)
           raw.createOrReplaceTempView(streamTable)
           val df = sb.sql(v.selectSql)
           df.createOrReplaceTempView(v.name)
@@ -172,7 +197,9 @@ object StreamingBridge {
         // same exclusion or streamed output retains delete-flagged rows the
         // batch path drops (ADVICE r12 #1).
         val sb = views.values.head.sparkSession
-        deltas.foreach { case (n, d) => d.rows.createOrReplaceTempView(n) }
+        val reads = t.referencedTables
+        deltas.foreach { case (n, d) =>
+          if (reads(n.toLowerCase)) d.rows.createOrReplaceTempView(n) }
         val planned = sb.sql(t.selectSql)
         if (t.isUpsertLike) t.deleteCleaned(planned) else planned
       })

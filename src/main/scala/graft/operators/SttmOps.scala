@@ -15,11 +15,16 @@ import org.apache.spark.sql.functions._
 object SttmOps {
 
   /** A1: latest record per key (ROW_NUMBER ... rn=1 semantics). Implemented
-    * as `max_by(struct(*), struct(orderCols))` — a hash aggregation with
+    * as `max_by(struct(*), struct(orderCols))` — an aggregation with a
     * map-side partial combine, so the shuffle carries at most one row per
     * (key, map partition) instead of every row like the window-sort
     * formulation would. At 100 TB with high key cardinality this is the
     * difference between shuffling the full table and shuffling ~|keys| rows.
+    * Spark 4.1 plans it as a SORT aggregate (`SortAggregateExec`, partial
+    * and final, each behind a sort on the keys), not a hash aggregate: the
+    * aggregation buffer holds the two structs, which are not fixed-width,
+    * and a hash aggregate needs a mutable fixed-width buffer. PlanShapeSpec
+    * pins the planned operator.
     * `order` columns must make the ranking unique (ts + seq tie-break).
     */
   def latestByKey(df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame = {

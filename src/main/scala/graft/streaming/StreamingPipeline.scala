@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.util.Locale
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming execution of an N-stage statement set: one source scan fanned
@@ -31,11 +34,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and no measured trigger size, up to 75,000 rows, showed compiled row
   * loops repaying their compile beyond run-to-run noise.
   *
+  * Every JOIN INPUT, unlike a view, is computed once: the raw batch, the
+  * touched buckets of all XREFs (one job), each XREF's upsert delta (by its
+  * first reader, see [[UpsertDelta]]) once per trigger, and a compiled
+  * workbook's static dim views once per stream run
+  * ([[graft.compile.StreamingBridge]]): in the reference's statement set
+  * the FGAC join and the quarantine anti-join read the same XREF delta and
+  * the same customer dim.
+  *
   * Stage semantics per micro-batch:
   *  1. each VIEW projects/filters the shared raw batch (discriminator
   *     filters, JSON extraction, casts)
   *  2. each XREF upserts its view's batch as a delta segment of its LSM
-  *     [[SnapshotStore]] (A2/T2); merges run concurrently across stores
+  *     [[SnapshotStore]] (A2/T2): one job counts every XREF's touched
+  *     buckets and rows, then the appends run concurrently across stores
   *     (independent manifests). Per-batch write cost is O(|batch|) +
   *     amortized compaction, never O(snapshot).
   *  3. each xref exposes its upsert DELTA — the post-merge snapshot rows
@@ -61,8 +73,29 @@ object StreamingPipeline {
     * NOT the full snapshot. A distinct type so a lambda written against
     * full-snapshot semantics (e.g. one that consults rows for keys outside
     * the batch) fails to compile instead of silently producing reduced
-    * output (ADVICE r10 #2). */
-  final case class UpsertDelta(rows: DataFrame)
+    * output (ADVICE r10 #2).
+    *
+    * [[rows]] is computed once per trigger, by the first sink that reads
+    * it, and materialized (a lazy localCheckpoint: that sink's own job
+    * fills the blocks, every later reader scans them), so the delta's
+    * key-side broadcast and bucket-pruned merge-on-read run once however
+    * many INSERTs read it — the reference's statement set likewise keeps
+    * XREF_PURCHASE once for its FGAC and quarantine INSERTs. A delta no
+    * sink reads runs nothing. [[processSet]] releases the blocks when the
+    * trigger ends. */
+  final class UpsertDelta private[streaming] (compute: () => DataFrame,
+                                              materialize: Boolean) {
+    // the frame, and the metrics of the plan that fills it (kept reachable
+    // until the trigger ends, see lazyCheckpoint)
+    private var memo: Option[(DataFrame, Seq[SQLMetric])] = None
+    def rows: DataFrame = synchronized {
+      if (memo.isEmpty)
+        memo = Some(if (materialize) lazyCheckpoint(compute()) else (compute(), Nil))
+      memo.get._1
+    }
+    private[streaming] def release(): Unit =
+      synchronized(if (materialize) memo.foreach(m => releaseCheckpoint(m._1)))
+  }
 
   /** One named view over the shared raw batch. `transform` must be a
     * DETERMINISTIC function of its input frame (see class doc — it
@@ -222,15 +255,47 @@ object StreamingPipeline {
       prior.fold(conf.unset(key))(conf.set(key, _)) }
   }
 
+  /** `df` checkpointed lazily: the first job that reads the result fills
+    * its blocks and every later read scans them. On finishing, that job
+    * also truncates the checkpoint's lineage, which held the driver's only
+    * reference to the SQL metrics of `df`'s plan; a concurrent reader's
+    * tasks still report to those metrics, and once a GC has collected them
+    * Spark drops the updates with an "attempted to access non-existent
+    * accumulator" error. So the metrics come back with the frame: keep them
+    * reachable for as long as readers may still run. */
+  private[graft] def lazyCheckpoint(df: DataFrame): (DataFrame, Seq[SQLMetric]) = {
+    val cp = df.localCheckpoint(eager = false)
+    val plan = new AdaptiveSparkPlanHelper {}
+    (cp, plan.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.metrics.values.toSeq
+    }.flatten)
+  }
+
+  /** Drop the blocks of a frame made by `localCheckpoint`: its logical
+    * plan is the checkpointed RDD's relation. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ =>
+    }
+
   /** One micro-batch of the full statement set, run under the batch's
-    * session confs ([[runSet]]'s stream runs it interpreted). */
+    * session confs ([[runSet]]'s stream runs it interpreted). Each join
+    * input is computed once: the raw batch (eagerly), every XREF's touched
+    * buckets and row count (one job for all of them) and each XREF's upsert
+    * delta (by its first reader). The raw batch's and the deltas' blocks
+    * are released when the trigger ends.
+    *
+    * @param materialize false reads each delta unmaterialized, planned
+    *        again by every sink that reads it (the specs' reference run) */
   private[graft] def processSet(
       stores: Map[String, SnapshotStore],
       workDir: String,
       set: StatementSet,
       batch: DataFrame,
       batchId: Long,
-      sinkOpts: SinkOptions = SinkOptions()): Unit = {
+      sinkOpts: SinkOptions = SinkOptions(),
+      materialize: Boolean = true): Unit = {
     val spark = batch.sparkSession
     // the SHARED SCAN, materialized exactly once per trigger: every view,
     // merge and sink below reads the cached raw blocks, never the source
@@ -241,22 +306,29 @@ object StreamingPipeline {
     // registrations bound the un-checkpointed batch, silently re-reading
     // the source per downstream action.
     val raw = batch.localCheckpoint()
-    val views: Map[String, DataFrame] =
-      set.views.map(v => v.name -> v.transform(raw)).toMap
+    var deltas = Map.empty[String, UpsertDelta]
+    try {
+      val views: Map[String, DataFrame] =
+        set.views.map(v => v.name -> v.transform(raw)).toMap
 
-    // 2+3. XREF upserts run concurrently across stores; each yields its
-    //      batch-keyed upsert delta (bucket-pruned, semi-joined BELOW the
-    //      merge-on-read dedup — see readBuckets' preFilter contract)
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val deltas: Map[String, UpsertDelta] =
-      concurrently[(String, UpsertDelta)]("merge", batchId, set.xrefs.map { x =>
-        (x.name, () => {
-          val store = stores(x.name)
-          val vb = views(x.view)
-          val prep = store.prepare(vb, x.keys, materialize = false)
-          val (touched, nRows) =
-            store.mergePreparedCounted(prep, x.keys, x.orderCols, Some(batchId))
-          val delta = store.readBuckets(spark, touched, preFilter = { rawSeg =>
+      // 2. XREF upserts: one job counts every store's touched buckets and
+      //    rows, then the segment appends run concurrently across stores
+      val preps = set.xrefs.map(x =>
+        stores(x.name).prepare(views(x.view), x.keys, materialize = false))
+      val counts = SnapshotStore.touchedCounts(preps)
+      concurrently[Unit]("merge", batchId, set.xrefs.zip(preps).zip(counts).map {
+        case ((x, prep), (touched, _)) => (x.name, () =>
+          stores(x.name).append(prep, touched, x.keys, x.orderCols, Some(batchId)))
+      })
+
+      // 3. each xref's batch-keyed upsert delta (bucket-pruned, semi-joined
+      //    BELOW the merge-on-read dedup — see readBuckets' preFilter
+      //    contract), computed when a sink first reads it
+      import org.apache.spark.sql.functions.{broadcast, col}
+      deltas = set.xrefs.zip(counts).map { case (x, (touched, nRows)) =>
+        val vb = views(x.view)
+        x.name -> new UpsertDelta(() =>
+          stores(x.name).readBuckets(spark, touched, preFilter = { rawSeg =>
               // key semi-join BEFORE the latest-by-key (it commutes with
               // per-key dedup): the agg runs over just this batch's keys'
               // rows instead of every row in the touched buckets — at scale
@@ -267,21 +339,24 @@ object StreamingPipeline {
               rawSeg.join(side, x.keys, "left_semi")
             })
             .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], vb.schema))
-          x.name -> UpsertDelta(delta)
-        })
-      }).toMap
+              spark.sparkContext.emptyRDD[Row], vb.schema)),
+          materialize)
+      }.toMap
 
-    // 4. statement-set fan-out: every INSERT runs concurrently from the
-    //    shared batch, each landing batchId-idempotently in its sink
-    concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
-      (sd.name, () => ChangelogSink.write(
-        sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
-        maxLiveSegments = sinkOpts.maxLiveSegments,
-        targetFileBytes = sinkOpts.targetFileBytes,
-        vacuumGraceMs = sinkOpts.vacuumGraceMs))
-    })
-    ()
+      // 4. statement-set fan-out: every INSERT runs concurrently from the
+      //    shared batch, each landing batchId-idempotently in its sink
+      concurrently[Unit]("sink", batchId, set.sinks.map { sd =>
+        (sd.name, () => ChangelogSink.write(
+          sd.emit(views, deltas), sinkPath(workDir, sd.name), batchId,
+          maxLiveSegments = sinkOpts.maxLiveSegments,
+          targetFileBytes = sinkOpts.targetFileBytes,
+          vacuumGraceMs = sinkOpts.vacuumGraceMs))
+      })
+      ()
+    } finally {
+      deltas.values.foreach(_.release())
+      releaseCheckpoint(raw)
+    }
   }
 
   /** Run the named tasks concurrently and return their results in order.

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gate over the ENTIRE query surface: every entry in
@@ -115,6 +117,24 @@ class PlanShapeSpec extends AnyFunSuite {
         bad += s"$name: BroadcastNestedLoopJoin (add to allowlist ONLY if the side is O(1) rows)"
     }
     assert(bad.isEmpty, s"\n${bad.mkString("\n")}")
+  }
+
+  test("latestByKey plans a partial and a final sort aggregate, no hash aggregate") {
+    // max_by(struct, struct) keeps two structs in its aggregation buffer;
+    // a hash aggregate needs a fixed-width mutable buffer, so Spark falls
+    // back to sorting on the keys (SttmOps.latestByKey's scaladoc)
+    val session = spark.newSession()
+    import session.implicits._
+    val df = Seq((1L, 1L, 1L, "a"), (1L, 2L, 1L, "b"), (2L, 1L, 1L, "c"))
+      .toDF("k", "ts", "seq", "v")
+    val latest = graft.operators.SttmOps.latestByKey(df, Seq("k"), Seq("ts", "seq"))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val aggs = helper.collect(latest.queryExecution.executedPlan) {
+      case a: BaseAggregateExec => a
+    }
+    assert(aggs.map(_.getClass.getSimpleName) ==
+      Seq("SortAggregateExec", "SortAggregateExec"), s"aggregates: $aggs")
+    assert(latest.collect().map(_.toString).sorted.toSeq == Seq("[1,2,1,b]", "[2,1,1,c]"))
   }
 
   // The check runs on the OPTIMIZED LOGICAL plan, not executedPlan: under

@@ -1,9 +1,15 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.compile.{DemoSpecs, PipelineCompiler, StreamingBridge}
 import graft.streaming.{ChangelogSink, SnapshotStore, StreamingPipeline}
 
@@ -79,6 +85,124 @@ class StreamingBridgeSpec extends AnyFunSuite {
     val expKeys = batchOut("QUAR_USER").select("USER_ID").distinct()
     assert(gotKeys.count() == expKeys.count())
     assert(gotKeys.join(expKeys, Seq("USER_ID"), "left_anti").count() == 0)
+  }
+
+  /** A session of its own whose `customer` table is a CSV copy of the
+    * sf0.001 customers, so a stage scanning the dim is told apart from the
+    * topic's parquet scans by its scan node. */
+  private def csvDimSession(base: String): SparkSession = {
+    val csv = s"$base/customer_csv"
+    val schema = Tables.customer(spark, dir).schema
+    if (!Files.exists(Paths.get(csv)))
+      Tables.customer(spark, dir).write.option("header", "true").csv(csv)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "4")
+    s2.read.option("header", "true").schema(schema).csv(csv)
+      .createOrReplaceTempView("customer")
+    s2
+  }
+
+  /** The RDD behind a temp view materialized by localCheckpoint. */
+  private def checkpointedRdd(session: SparkSession, view: String): Option[Int] =
+    session.table(view).queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD => r.rdd.id
+    }
+
+  test("a bridged dim view is scanned in one trigger of four; XREF snapshot and sinks equal an unmaterialized run") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_bridge_dims").toString
+    val pipeline = PipelineCompiler.compile(DemoSpecs.jsonPipeline, DemoSpecs.jsonOptions)
+    val dims = pipeline.views.filter(_.name == "CUST_VW")
+    val sc = spark.sparkContext
+    val dimScans = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.scope.exists(_.name.toLowerCase.startsWith("scan csv"))))
+          dimScans.incrementAndGet()
+    }
+    val n = 4
+    // stages scanning the dim, per trigger; `materialize` false is the
+    // reference run: deltas planned again by each sink, and the dims
+    // re-registered from their SQL after the bridge's views ran
+    def run(work: String, materialize: Boolean): Seq[Int] = {
+      val s2 = csvDimSession(base)
+      val ev = Tables.events(s2, dir)
+      val bridged = StreamingBridge.toStatementSet(pipeline, "events", s2, nBuckets = 4)
+      val set = if (materialize) bridged else bridged.copy(views = bridged.views.map(v =>
+        v.copy(transform = { raw: DataFrame =>
+          val df = v.transform(raw)
+          dims.foreach(d => raw.sparkSession.sql(d.selectSql).createOrReplaceTempView(d.name))
+          df
+        })))
+      val stores = set.xrefs.map(x => x.name -> new SnapshotStore(
+        StreamingPipeline.xrefStorePath(work, x.name), x.nBuckets, x.maxLiveSegments)).toMap
+      (0 until n).map { i =>
+        TestBus.drain(sc)
+        dimScans.set(0)
+        StreamingPipeline.processSet(stores, work, set,
+          ev.filter(pmod(col("event_id"), lit(n)) === i), i.toLong, materialize = materialize)
+        TestBus.drain(sc)
+        dimScans.get
+      }
+    }
+    sc.addSparkListener(listener)
+    val (scans, refScans) =
+      try (run(s"$base/materialized", materialize = true), run(s"$base/reference", materialize = false))
+      finally sc.removeSparkListener(listener)
+    assert(scans.head > 0 && scans.tail.forall(_ == 0),
+      s"stages scanning the dim in each of $n triggers: $scans")
+    assert(refScans.forall(_ > 0), s"the reference run reads the dim every trigger: $refScans")
+
+    import StoreFiles.{footerSchemas, rows}
+    def snap(run: String) = new SnapshotStore(
+      StreamingPipeline.xrefStorePath(s"$base/$run", "XREF_USER")).read(spark).get
+    assert(rows(snap("materialized")) == rows(snap("reference")))
+    assert(footerSchemas(spark, StreamingPipeline.xrefStorePath(s"$base/materialized", "XREF_USER")) ==
+      footerSchemas(spark, StreamingPipeline.xrefStorePath(s"$base/reference", "XREF_USER")))
+    Seq("FGAC_USER_REF", "QUAR_USER").foreach { s =>
+      def sink(run: String) = ChangelogSink.read(spark, StreamingPipeline.sinkPath(s"$base/$run", s))
+      assert(rows(sink("materialized")).nonEmpty, s"sink $s")
+      assert(rows(sink("materialized")) == rows(sink("reference")), s"sink $s")
+      assert(footerSchemas(spark, StreamingPipeline.sinkPath(s"$base/materialized", s)) ==
+        footerSchemas(spark, StreamingPipeline.sinkPath(s"$base/reference", s)), s"sink $s")
+    }
+  }
+
+  test("a stream releases each trigger's raw batch and deltas: only the dim's blocks stay cached") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_bridge_blocks").toString
+    val n = 4
+    Tables.events(spark, dir)
+      .withColumn("part", pmod(col("event_id"), lit(n)))
+      .write.partitionBy("part").parquet(s"$base/in")
+    val pipeline = PipelineCompiler.compile(DemoSpecs.jsonPipeline, DemoSpecs.jsonOptions)
+    val s2 = csvDimSession(base)
+    val bridged = StreamingBridge.toStatementSet(pipeline, "events", s2, nBuckets = 4)
+    // the stream's own session, where the bridge materializes the dim
+    val streamSession = new java.util.concurrent.atomic.AtomicReference[SparkSession]()
+    val first = bridged.views.head
+    val set = bridged.copy(views = first.copy(transform = { raw: DataFrame =>
+      streamSession.set(raw.sparkSession); first.transform(raw) }) +: bridged.views.tail)
+    val source = s2.readStream
+      .schema(s2.read.parquet(s"$base/in").schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$base/in")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val q = StreamingPipeline.runSet(source, set, s"$base/work")
+    assert(q.awaitTermination(300000), "streaming query did not terminate")
+    assert(q.exception.isEmpty, q.exception.toString)
+    assert(q.recentProgress.count(_.numInputRows > 0) == n)
+    val dim = checkpointedRdd(streamSession.get, "CUST_VW")
+    assert(dim.nonEmpty, "the stream's CUST_VW is not a materialized frame")
+    // the caller's session keeps the dim as the plain view it registered
+    assert(checkpointedRdd(s2, "CUST_VW").isEmpty)
+    assert((sc.getPersistentRDDs.keySet -- before) == dim.toSet,
+      s"RDDs the stream left persisted: ${sc.getPersistentRDDs.keySet -- before}, dim $dim")
+    // unpersisting is asynchronous: the blocks go shortly after the trigger
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      assert((TestBus.rddsWithBlocks(sc) -- before) == dim.toSet)
+    }
   }
 
   /** ADVICE r12 #1: an upsert-mode XREF with a PK and a delete flag but NO

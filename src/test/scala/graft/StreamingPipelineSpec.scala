@@ -4,12 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TestBus
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference,
   InterpretedUnsafeProjection, Literal, UnsafeProjection}
@@ -17,6 +14,7 @@ import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -119,24 +117,15 @@ class StreamingPipelineSpec extends AnyFunSuite {
     plans.asScala.toSeq
   }
 
-  /** The Spark schema each data file under `root` stores in its footer. */
-  private def footerSchemas(root: String): Set[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val ls = Files.walk(Paths.get(root))
-    try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).map { p =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), hconf))
-      try r.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata")
-      finally r.close()
-    }.toSet
-    finally ls.close()
-  }
+  private def footerSchemas(root: String): Set[String] = StoreFiles.footerSchemas(spark, root)
 
   /** Jobs of [[twoXrefSet]]'s plain and fold triggers over a third of the
     * sf0.001 events each (the job-count spec below). A trigger that reads
-    * without the written schemas runs 26 and 56. */
-  private val PlainTriggerJobs = 24
-  private val FoldTriggerJobs = 33
+    * without the written schemas runs 26 and 56; one that counts each
+    * XREF's touched buckets in a job of its own and reads every delta
+    * unmaterialized runs 24 and 33. */
+  private val PlainTriggerJobs = 22
+  private val FoldTriggerJobs = 31
 
   test("micro-batch xref snapshot equals batch latest-by-key; sinks fan out") {
     spark.sparkContext.setLogLevel("ERROR")
@@ -487,6 +476,53 @@ class StreamingPipelineSpec extends AnyFunSuite {
       assert(known.schema == inferred.schema, s"xref $name")
       assert(known.collect().map(_.toString).sorted.toSeq ==
         inferred.collect().map(_.toString).sorted.toSeq, s"xref $name")
+    }
+  }
+
+  test("a delta two sinks read is computed once per trigger, an unread delta never") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val base = Files.createTempDirectory("graft_stream_delta_memo").toString
+    val ev = Tables.events(spark, dir)
+    val twoXref = twoXrefSet(Tables.customer(spark, dir))
+    // both INSERTs read xp's delta; none reads xc's
+    val set = twoXref.copy(sinks = Seq(
+      SinkDef("latest", (_, d) => d("xp").rows),
+      SinkDef("latest_ids", (_, d) => d("xp").rows.select(col("user_id"), col("event_id"))),
+      SinkDef("clicks", (v, _) => v("click"))))
+    // the SQL executions whose physical plan scans a store's segment files
+    val storeScans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          Seq("xp", "xc").filter(n => s"Location: InMemoryFileIndex[^\n]*/${n}_snapshot/".r
+            .findFirstIn(x.physicalPlanDescription).nonEmpty).foreach(storeScans.add)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def run(work: String, materialize: Boolean): Seq[Map[String, Int]] = {
+      val stores = twoXrefStores(set, work)
+      (0 until 2).map { i =>
+        TestBus.drain(sc)
+        storeScans.clear()
+        StreamingPipeline.processSet(stores, work, set,
+          ev.filter(pmod(col("event_id"), lit(3)) === i), i.toLong, materialize = materialize)
+        TestBus.drain(sc)
+        storeScans.asScala.toSeq.groupBy(identity).map { case (n, xs) => n -> xs.size }
+      }
+    }
+    sc.addSparkListener(listener)
+    val (memo, reference) =
+      try (run(s"$base/memo", materialize = true), run(s"$base/reference", materialize = false))
+      finally sc.removeSparkListener(listener)
+    assert(memo == Seq(Map("xp" -> 1), Map("xp" -> 1)), s"store scans per trigger: $memo")
+    assert(reference == Seq(Map("xp" -> 2), Map("xp" -> 2)), s"store scans per trigger: $reference")
+    set.sinks.foreach { sd =>
+      def sink(run: String) = ChangelogSink.read(spark, sinkPath(s"$base/$run", sd.name))
+      assert(StoreFiles.rows(sink("memo")).nonEmpty, s"sink ${sd.name}")
+      assert(StoreFiles.rows(sink("memo")) == StoreFiles.rows(sink("reference")), s"sink ${sd.name}")
+      assert(footerSchemas(sinkPath(s"$base/memo", sd.name)) ==
+        footerSchemas(sinkPath(s"$base/reference", sd.name)), s"sink ${sd.name}")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,34 +32,37 @@ class SnapshotStoreDeterminismSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("non-deterministic unmaterialized input fails before the manifest commit") {
-    spark.sparkContext.setLogLevel("ERROR")
-    val work = Files.createTempDirectory("graft_det").toString
-    val nBuckets = 4
-
-    // two key values that land in DIFFERENT buckets under the store's
-    // pmod(hash(key), nBuckets) tagging — chosen by computing the same
-    // expression, so the test can't go stale against the bucket function
+  /** A one-row, one-partition frame whose KEY flips between evaluations:
+    * the first evaluation sees a key of bucket A, every later one a key of
+    * bucket B (of `nBuckets`) — the exact silent-corruption shape the guard
+    * exists for. The two keys are chosen by computing the store's
+    * pmod(hash(key), nBuckets) tagging, so the fixture can't go stale
+    * against the bucket function. */
+  private def flippingKeyFrame(nBuckets: Int): DataFrame = {
     val byBucket = spark.range(0, 64)
       .select(col("id"), pmod(hash(col("id")), lit(nBuckets)).as("b"))
       .collect().map(r => r.getLong(0) -> r.getInt(1))
     val k1 = byBucket.head
     val k2 = byBucket.find(_._2 != k1._2).get
     assert(k1._2 != k2._2)
-
-    // a one-row, one-partition frame whose KEY flips between evaluations:
-    // the touched pass sees k1 (bucket A), the segment write sees k2
-    // (bucket B) — the exact silent-corruption shape the guard exists for
     val (v1, v2) = (k1._1, k2._1)
     val flip = udf(() => if (EvalFlip.next() == 0) v1 else v2)
       .asNondeterministic()
-    val df = spark.range(0, 1, 1, numPartitions = 1)
+    EvalFlip.n.set(0)
+    spark.range(0, 1, 1, numPartitions = 1)
       .select(flip().as("user_id"), lit(1L).as("ts"))
+  }
+
+  test("non-deterministic unmaterialized input fails before the manifest commit") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val work = Files.createTempDirectory("graft_det").toString
+    val nBuckets = 4
+    val df = flippingKeyFrame(nBuckets)
 
     val store = new SnapshotStore(work, nBuckets = nBuckets)
     val prep = store.prepare(df, Seq("user_id"), materialize = false)
     val ex = intercept[IllegalStateException] {
-      store.mergePreparedCounted(prep, Seq("user_id"), Seq("ts"), Some(0L))
+      store.mergePrepared(prep, Seq("user_id"), Seq("ts"), Some(0L))
     }
     assert(ex.getMessage.contains("non-deterministic across actions"),
       ex.getMessage)
@@ -73,6 +76,30 @@ class SnapshotStoreDeterminismSpec extends AnyFunSuite {
     val touched = store.merge(df, Seq("user_id"), Seq("ts"), Some(1L))
     assert(touched.size == 1)
     assert(store.read(spark).get.count() == 1)
+  }
+
+  test("touched buckets counted for two stores in one job: the guard still fires") {
+    // processSet counts every XREF's touched buckets in one job before the
+    // appends; that job is an action apart from each segment write, so a
+    // frame that changes between the two still fails its append
+    spark.sparkContext.setLogLevel("ERROR")
+    val work = Files.createTempDirectory("graft_det_shared").toString
+    val nBuckets = 4
+    val flipping = new SnapshotStore(s"$work/a", nBuckets = nBuckets)
+    val steady = new SnapshotStore(s"$work/b", nBuckets = nBuckets)
+    val preps = Seq(
+      flipping.prepare(flippingKeyFrame(nBuckets), Seq("user_id"), materialize = false),
+      steady.prepare(spark.range(0, 8).select(col("id").as("user_id"), lit(1L).as("ts")),
+        Seq("user_id"), materialize = false))
+    val counts = SnapshotStore.touchedCounts(preps)
+    assert(counts.map(_._2) == Seq(1L, 8L))
+    val ex = intercept[IllegalStateException] {
+      flipping.append(preps(0), counts(0)._1, Seq("user_id"), Seq("ts"), Some(0L))
+    }
+    assert(ex.getMessage.contains("non-deterministic across actions"), ex.getMessage)
+    assert(flipping.read(spark).forall(_.count() == 0))
+    steady.append(preps(1), counts(1)._1, Seq("user_id"), Seq("ts"), Some(0L))
+    assert(steady.read(spark).get.count() == 8)
   }
 
   test("guard has no false positive: all-NULL payload and all-NULL key buckets still write their dirs") {
@@ -94,8 +121,8 @@ class SnapshotStoreDeterminismSpec extends AnyFunSuite {
       .toDF("user_id", "ts", "payload")
     val store = new SnapshotStore(work, nBuckets = nBuckets)
     val prep = store.prepare(df, Seq("user_id"), materialize = false)
-    val touched = store.mergePreparedCounted(
-      prep, Seq("user_id"), Seq("ts"), Some(0L))._1
+    val touched = store.mergePrepared(
+      prep, Seq("user_id"), Seq("ts"), Some(0L))
     assert(touched.nonEmpty)
     val snap = store.read(spark).get
     assert(snap.count() == 2, "both rows (incl. the NULL key) must commit")
