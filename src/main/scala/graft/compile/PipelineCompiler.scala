@@ -148,8 +148,9 @@ final case class CompiledPipeline(
     *
     * Scale note: this is pure plan construction — nothing materializes until
     * an action; Catalyst sees the whole view->xref->fgac tree and pushes
-    * filters/prunes columns across stage boundaries (the reference's Flink
-    * jobs are opaque to each other; ours fuse).
+    * filters/prunes columns across stage boundaries, through the XREF's
+    * latest-by-key too (graft.plans.PruneLatestPayload; the reference's
+    * Flink jobs are opaque to each other; ours fuse).
     */
   def run(spark: SparkSession): Map[String, DataFrame] = {
     FlinkCompat.register(spark)

@@ -25,6 +25,12 @@ object SttmOps {
     * aggregation buffer holds the two structs, which are not fixed-width,
     * and a hash aggregate needs a mutable fixed-width buffer. PlanShapeSpec
     * pins the planned operator.
+    * A reader that takes only some columns of the result gets only those
+    * computed, sorted and shuffled: [[graft.plans.PruneLatestPayload]]
+    * (installed with [[graft.plans.FuseJsonAccess]]) narrows the struct to
+    * the fields read and lets Spark's `ColumnPruning` drop the inputs,
+    * down to the JSON parse, that no kept field reads. Reading every
+    * column, or `__r` whole, keeps the full struct.
     * `order` columns must make the ranking unique (ts + seq tie-break).
     */
   def latestByKey(df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame = {

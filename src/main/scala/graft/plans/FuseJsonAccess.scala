@@ -75,11 +75,14 @@ object FuseJsonAccess extends Rule[LogicalPlan] {
   // listed charset; dots/spaces here are key characters, not path steps)
   private val BracketPath = """^\$\['([A-Za-z0-9_ .\-]+)'\]$""".r
 
-  /** Install into the session's extraOptimizations exactly once. */
+  /** Install into the session's extraOptimizations exactly once, with
+    * [[PruneLatestPayload]] after it: a latest-by-key reader that takes a
+    * few fields of the row then drops the parse this rule fuses. */
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
+    val missing = Seq(this, PruneLatestPayload).filterNot(cur.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations = cur ++ missing
   }
 
   private def simplePath(path: Expression): Option[String] = path match {

@@ -281,10 +281,10 @@ object StreamingPipeline {
 
   /** One micro-batch of the full statement set, run under the batch's
     * session confs ([[runSet]]'s stream runs it interpreted). Each join
-    * input is computed once: the raw batch (eagerly), every XREF's touched
-    * buckets and row count (one job for all of them) and each XREF's upsert
-    * delta (by its first reader). The raw batch's and the deltas' blocks
-    * are released when the trigger ends.
+    * input is computed once: the raw batch (by its first reader), every
+    * XREF's touched buckets and row count (one job for all of them) and
+    * each XREF's upsert delta (by its first reader). The raw batch's and
+    * the deltas' blocks are released when the trigger ends.
     *
     * @param materialize false reads each delta unmaterialized, planned
     *        again by every sink that reads it (the specs' reference run) */
@@ -304,8 +304,11 @@ object StreamingPipeline {
     // measured perf-neutral (BASELINE r12) and broke transforms that
     // REGISTER frames as a side effect (the workbook bridge) — their
     // registrations bound the un-checkpointed batch, silently re-reading
-    // the source per downstream action.
-    val raw = batch.localCheckpoint()
+    // the source per downstream action. The checkpoint is lazy, so it is
+    // no job of its own: the touched-bucket count fills its blocks, or,
+    // in a set without XREFs, the concurrent sink writes do, one task
+    // computing each block while the others' tasks wait for it.
+    val (raw, rawMetrics) = lazyCheckpoint(batch)
     var deltas = Map.empty[String, UpsertDelta]
     try {
       val views: Map[String, DataFrame] =
@@ -356,6 +359,7 @@ object StreamingPipeline {
     } finally {
       deltas.values.foreach(_.release())
       releaseCheckpoint(raw)
+      java.lang.ref.Reference.reachabilityFence(rawMetrics)
     }
   }
 

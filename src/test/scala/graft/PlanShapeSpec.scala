@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,6 +138,34 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(aggs.map(_.getClass.getSimpleName) ==
       Seq("SortAggregateExec", "SortAggregateExec"), s"aggregates: $aggs")
     assert(latest.collect().map(_.toString).sorted.toSeq == Seq("[1,2,1,b]", "[2,1,1,c]"))
+  }
+
+  test("FGAC and quarantine INSERTs parse no JSON and carry only the XREF fields they read") {
+    // The 24-field workbook: XREF_PURCHASE keeps 28 columns per key, the
+    // FGAC INSERT reads 3 of them and the quarantine INSERT 2
+    // (graft.plans.PruneLatestPayload).
+    spark.sparkContext.setLogLevel("ERROR")
+    val session = spark.newSession()
+    val dir = Files.createTempDirectory("graft_wide_plans").toString
+    WideWorkbook.write(session, dir, 60)
+    WideWorkbook.register(session, dir)
+    val out = WideWorkbook.compile().run(session)
+    def jsonParses(t: String) = out(t).queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case e @ (_: JsonToStructs | _: GetJsonObject) => e })
+    def latestFields(t: String) = PruneLatestPayloadSpec.latestFields(out(t))
+    def scanned(t: String): Seq[Seq[String]] = new AdaptiveSparkPlanHelper {}
+      .collect(out(t).queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.endsWith("/topic")) =>
+          s.requiredSchema.fieldNames.toSeq
+      }
+    assert(latestFields("FGAC_PURCHASE") == Seq(Seq("USER_ID", "EVENT_ID", "VALUE")))
+    assert(latestFields("QUAR_PURCHASE") == Seq(Seq("USER_ID", "EVENT_ID")))
+    Seq("FGAC_PURCHASE", "QUAR_PURCHASE").foreach { t =>
+      assert(jsonParses(t).isEmpty, s"$t: ${out(t).queryExecution.optimizedPlan}")
+      assert(scanned(t).size == 1 && !scanned(t).head.contains("props"), s"$t scans ${scanned(t)}")
+    }
+    assert(latestFields("XREF_PURCHASE").map(_.size) == Seq(4 + WideWorkbook.Width))
+    assert(jsonParses("XREF_PURCHASE").nonEmpty)
   }
 
   // The check runs on the OPTIMIZED LOGICAL plan, not executedPlan: under

@@ -123,9 +123,10 @@ class StreamingPipelineSpec extends AnyFunSuite {
     * sf0.001 events each (the job-count spec below). A trigger that reads
     * without the written schemas runs 26 and 56; one that counts each
     * XREF's touched buckets in a job of its own and reads every delta
-    * unmaterialized runs 24 and 33. */
-  private val PlainTriggerJobs = 22
-  private val FoldTriggerJobs = 31
+    * unmaterialized runs 24 and 33; one that checkpoints the raw batch in
+    * a job of its own, not in the touched-bucket count's, runs 22 and 31. */
+  private val PlainTriggerJobs = 21
+  private val FoldTriggerJobs = 30
 
   test("micro-batch xref snapshot equals batch latest-by-key; sinks fan out") {
     spark.sparkContext.setLogLevel("ERROR")
@@ -523,6 +524,38 @@ class StreamingPipelineSpec extends AnyFunSuite {
       assert(StoreFiles.rows(sink("memo")) == StoreFiles.rows(sink("reference")), s"sink ${sd.name}")
       assert(footerSchemas(sinkPath(s"$base/memo", sd.name)) ==
         footerSchemas(sinkPath(s"$base/reference", sd.name)), s"sink ${sd.name}")
+    }
+  }
+
+  test("a set without XREFs scans its source once per trigger: concurrent sinks share the raw blocks") {
+    // The raw batch is checkpointed lazily. With no XREF there is no
+    // touched-bucket count to fill it, so the concurrent sink writes are
+    // its first readers; each block must still be computed once.
+    spark.sparkContext.setLogLevel("ERROR")
+    val work = Files.createTempDirectory("graft_stream_sinks_only").toString
+    val ev = Tables.events(spark, dir)
+    // every row the source scan yields passes through this counter once
+    val scanned = spark.sparkContext.longAccumulator("scanned rows")
+    val counted = udf { (id: Long) => scanned.add(1); id }.asNondeterministic()
+    def view(eventType: String)(b: DataFrame): DataFrame = b.filter(col("event_type") === eventType)
+    val set = StatementSet(
+      views = Seq(ViewDef("purchase", view("purchase")), ViewDef("click", view("click"))),
+      xrefs = Nil,
+      sinks = Seq(
+        SinkDef("purchases", (v, _) => v("purchase")),
+        SinkDef("clicks", (v, _) => v("click")),
+        SinkDef("purchase_ids", (v, _) => v("purchase").select(col("event_id")))))
+    (0 until 2).foreach { i =>
+      val part = ev.filter(pmod(col("event_id"), lit(2)) === i)
+      val rows = part.count()
+      scanned.reset()
+      StreamingPipeline.processSet(Map.empty, work, set,
+        part.withColumn("event_id", counted(col("event_id"))), i.toLong)
+      assert(scanned.value == rows, s"trigger $i: source rows scanned ${scanned.value}, batch rows $rows")
+      assert(ChangelogSink.read(spark, sinkPath(work, "purchases")).count() +
+        ChangelogSink.read(spark, sinkPath(work, "clicks")).count() ==
+        ev.filter(pmod(col("event_id"), lit(2)) <= i &&
+          col("event_type").isin("purchase", "click")).count())
     }
   }
 
