@@ -158,8 +158,7 @@ final case class CompiledPipeline(
     tables.foreach { t =>
       val base = spark.sql(t.selectSql)
       val df = t.stage match {
-        case "XREF" if t.props.get("changelog.mode").map(_.toLowerCase).contains("upsert")
-            && t.pk.nonEmpty =>
+        case "XREF" if t.isUpsertLike =>
           val cleaned = t.deleteCleaned(base)
           if (t.upsertOrder.nonEmpty) SttmOps.latestByKey(cleaned, t.pk, t.upsertOrder)
           else cleaned
@@ -186,9 +185,7 @@ object PipelineCompiler {
     // Engine-level rule: an upsert XREF with a PK but no ranking columns
     // would silently skip latest-by-key in run() — surface it loudly.
     val upsertIssues = tables.collect {
-      case t if t.stage == "XREF" && t.pk.nonEmpty &&
-          t.props.get("changelog.mode").map(_.toLowerCase).contains("upsert") &&
-          !t.props.get("graft.upsert.order").exists(_.trim.nonEmpty) =>
+      case t if t.isUpsertLike && t.upsertOrder.isEmpty =>
         SttmValidation.Issue(SttmValidation.Warn,
           s"[${t.name}] changelog.mode=upsert but no 'graft.upsert.order' matrix key: " +
             "snapshot will contain ALL rows per key, not the latest (set it to the " +

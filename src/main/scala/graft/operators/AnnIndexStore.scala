@@ -180,8 +180,8 @@ object AnnIndexStore {
   /** Code an accepted batch with the STORED codebooks and append it to
     * cells/codes/vectors as one atomic SEGMENT — the incremental-index
     * contract: new ids must be disjoint from the stored corpus; codebooks
-    * are never retrained. With `batchId` set (the streaming gate), a
-    * retried micro-batch whose append already committed is skipped. */
+    * are never retrained. With `batchId` set (a streaming micro-batch id),
+    * a retried micro-batch whose append already committed is skipped. */
   def append(batch: DataFrame, idCol: String, vecCol: String, dir: String,
              batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
@@ -205,15 +205,6 @@ object AnnIndexStore {
     }
     ()
   }
-
-  /** Whether a batchId-keyed [[append]] has committed (replay detection). */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    GenStore.batchApplied(dir, batchId)
-
-  /** The vector ids a batchId-keyed append committed
-    * ([[GenStore.batchIds]]). */
-  def batchVecIds(spark: SparkSession, dir: String, batchId: Long): DataFrame =
-    GenStore.batchIds(spark, dir, "AnnIndexStore", batchId, "cells", "id")
 
   def exists(dir: String): Boolean =
     GenStore.read(dir).exists { st =>
@@ -411,8 +402,7 @@ object AnnIndexStore {
     * (nProbe cells ADC-scored, top-`refine` exactly re-ranked), so the
     * per-batch cost tracks probed cells, never the corpus; recall of the
     * verdict inherits the probe/pool knobs exactly like [[query]].
-    * [[graft.streaming.StreamingAnn.gateAndMaintainVectors]] is the
-    * ingest-loop composition (gate + append survivors).
+    * q_ann_gate runs it against the stored slice's index.
     *
     * DEFAULTS sized for recall, and measured (the q_ann_gate_recall
     * audit): at a radius set to the

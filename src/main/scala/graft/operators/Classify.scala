@@ -121,12 +121,12 @@ object Classify {
 
   /** Persist a trained weight table as a maintained model artifact: the
     * standard deployment trains once offline on the curated seed and
-    * every scorer — the batch sweep and the streaming ingest gate
-    * ([[graft.streaming.StreamingClassify]]) — loads this table. The
-    * table is <= vocabSize rows, so it lands as one file and always
-    * broadcasts on the scoring side. Overwrite is the refresh path:
-    * retraining on a grown seed replaces the artifact in place and the
-    * next micro-batch/scoring run picks it up (per-file parquet commit +
+    * every scorer ([[scoreLinear]] over [[loadWeights]], as
+    * q_quality_classifier_stored does) loads this table. The table is
+    * <= vocabSize rows, so it lands as one file and always broadcasts on
+    * the scoring side. Overwrite is the refresh path: retraining on a
+    * grown seed replaces the artifact in place and the next scoring run
+    * picks it up (per-file parquet commit +
     * `_SUCCESS` marker — the same contract every fixture cache here
     * relies on). */
   def saveWeights(weights: DataFrame, dir: String): Unit =

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod}
   * stored-side scans are cut to the touched fraction of the index (the
   * round-7 gap was exactly the verify-side shingles table still being a
   * full corpus scan per batch). The verify-side cut tracks the CANDIDATE
-  * set: a single-doc probe (the streaming gate) with a small dup family
+  * set: a single-doc probe with a small dup family
   * reads ~1 partition; a batch whose probes hit a corpus-dominating hot
   * bucket legitimately reads most partitions, because those rows are the
   * candidates being verified (ids hash uniformly, so K candidate ids
@@ -117,9 +117,9 @@ object DedupIndex {
 
   /** Extend the index with an accepted batch — one signature pass over the
     * batch only, written as one SEGMENT and committed atomically. Ids must
-    * be new (disjoint from the stored corpus). With `batchId` set (the
-    * streaming gate), a retried micro-batch whose append already committed
-    * is skipped — the idempotent-replay discipline. */
+    * be new (disjoint from the stored corpus). With `batchId` set (a
+    * streaming micro-batch id), a retried micro-batch whose append already
+    * committed is skipped — the idempotent-replay discipline. */
   def append(docs: DataFrame, idCol: String, textCol: String, dir: String,
              oracleParity: Boolean = true,
              batchId: Option[Long] = None): Unit = {
@@ -130,16 +130,6 @@ object DedupIndex {
     }
     ()
   }
-
-  /** Whether a batchId-keyed [[append]] has committed (replay detection). */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    GenStore.batchApplied(dir, batchId)
-
-  /** The distinct doc ids a batchId-keyed append committed
-    * ([[GenStore.batchIds]]). */
-  def batchDocIds(spark: SparkSession, dir: String,
-                  batchId: Long, idCol: String): DataFrame =
-    GenStore.batchIds(spark, dir, "DedupIndex", batchId, "shingles", idCol)
 
   private def write(docs: DataFrame, idCol: String, textCol: String,
                     segDir: String, oracleParity: Boolean, nPfx: Int,
@@ -267,7 +257,7 @@ object DedupIndex {
     // superset-pfx variant C measured between the two and was not taken).
     // localCheckpoint, NOT Iterate.checkpoint: a serving call is
     // single-batch scratch, and the reliable flavor would accumulate one
-    // never-deleted checkpoint per micro-batch of a streaming gate unless
+    // never-deleted checkpoint per micro-batch of a streaming caller unless
     // spark.cleaner.referenceTracking.cleanCheckpoints is set (ADVICE r08).
     val beT = beT0.localCheckpoint()
     // Metadata-scale collect #2: the candidate existing ids' id-pfx values

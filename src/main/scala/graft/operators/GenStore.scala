@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared generation + segment manifest machinery for the maintained
   * stores ([[DedupIndex]], [[AnnIndexStore]], [[PairStore]]) — one copy of
@@ -230,26 +229,6 @@ private[graft] object GenStore {
       commitSeg(dir, st.gen, seg)
       true
     }
-  }
-
-  /** Whether the batchId-keyed segment of a streaming append has been
-    * committed — the replay-detection half of the idempotent gate loop. */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    read(dir).exists(_.segs.contains(batchSeg(batchId)))
-
-  /** The distinct `idCol` values a batchId-keyed append committed to
-    * `table` — the survivor set a retried, already-applied gate
-    * micro-batch must reproduce without re-matching (the store now
-    * CONTAINS the batch, so a re-match would self-suppress every
-    * survivor). A zero-survivor batch's segment has no data files and
-    * reads as an empty `(idCol: long)` frame. */
-  def batchIds(spark: SparkSession, dir: String, what: String, batchId: Long,
-               table: String, idCol: String): DataFrame = {
-    val t = s"${readOrFail(dir, what).genDir(dir)}/${batchSeg(batchId)}/$table"
-    if (!hasData(t))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField(idCol, LongType))))
-    else spark.read.parquet(t).select(col(idCol)).distinct()
   }
 
   /** Minor-fold commit: atomically replace the already-written `fold`

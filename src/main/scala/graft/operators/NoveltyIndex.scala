@@ -107,41 +107,6 @@ object NoveltyIndex {
     ()
   }
 
-  /** Whether a batchId-keyed segment has been committed (replay
-    * detection; valid until the next [[compact]] folds segments away —
-    * the same contract as the other stores: compaction is an offline
-    * maintenance op, not something to run under an active stream's
-    * retry window). */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    GenStore.batchApplied(dir, batchId)
-
-  /** Gate-form append: the survivors' grams PLUS their ids in one atomic
-    * segment, so a retried micro-batch can reproduce its committed
-    * survivor set ([[batchDocIds]]) instead of re-gating — a re-gate
-    * against a store that now contains the batch would score every
-    * survivor novelty 0 and permanently drop the batch. */
-  def appendGated(survivors: DataFrame, idCol: String, textCol: String,
-                  dir: String, batchId: Option[Long] = None): Unit = {
-    require(exists(dir), s"no complete NoveltyIndex at $dir")
-    val seg = batchId.map(GenStore.batchSeg).getOrElse(GenStore.freshSeg())
-    GenStore.appendSeg(dir, "NoveltyIndex", seg) { (st, segDir) =>
-      docGrams(survivors, idCol, textCol, st.props("n"),
-          st.props("parity") == 1)
-        .select("g").distinct()
-        .withColumn("pfx", gramPfx(st.props("nPfx")))
-        .write.mode("overwrite").partitionBy("pfx").parquet(s"$segDir/grams")
-      survivors.select(col(idCol)).distinct()
-        .write.mode("overwrite").parquet(s"$segDir/docs")
-    }
-    ()
-  }
-
-  /** The survivor ids a gated batchId append committed
-    * ([[GenStore.batchIds]]). */
-  def batchDocIds(spark: SparkSession, dir: String, batchId: Long,
-                  idCol: String): DataFrame =
-    GenStore.batchIds(spark, dir, "NoveltyIndex", batchId, "docs", idCol)
-
   /** Fold all segments into one duplicate-free base segment of the next
     * generation (serve-through-compact; readers of the pinned previous
     * generation keep working until the following compaction). */

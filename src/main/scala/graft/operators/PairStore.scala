@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, greatest, hash,
   * Appends are atomic segments; batchId-keyed appends are idempotent
   * under streaming retries; compaction serves through the swing and CAS-
   * fails rather than dropping a racing append — the shared [[GenStore]]
-  * contract. The embedded index commits SECOND on every append, so its
-  * batchId segment doubles as the "fully applied" marker the idempotent
-  * gate loop checks ([[graft.streaming.StreamingDedup.gateAndMaintainPairs]]).
+  * contract.
   *
   * INCREMENTAL DISCIPLINE: [[build]] writes the corpus self-join pairs
   * ([[TextDedup.nearDuplicatePairs]] — capped LSH + hot-bucket exact
@@ -55,12 +53,12 @@ object PairStore {
     * build-time `minJaccard`, so an append mining at a different floor
     * would silently hole the band in between (a 0.25-floor graph appended
     * at the 0.6 default loses every [0.25, 0.6) edge for that batch).
-    * [[build]] records both under `<dir>/_PARAMS`; [[append]]/
-    * [[appendGated]] use the recorded values, treating their own
-    * parameters as (a) the fallback for stores created before the marker
-    * existed and (b) a cross-check — an explicit value that matches
-    * neither the recorded one nor the signature default is a caller
-    * contradiction and throws rather than corrupting the band. */
+    * [[build]] records both under `<dir>/_PARAMS`; [[append]] uses the
+    * recorded values, treating its own parameters as (a) the fallback for
+    * stores created before the marker existed and (b) a cross-check — an
+    * explicit value that matches neither the recorded one nor the
+    * signature default is a caller contradiction and throws rather than
+    * corrupting the band. */
   private def writeParams(dir: String, minJaccard: Double,
                           maxBucket: Int): Unit =
     java.nio.file.Files.writeString(
@@ -92,18 +90,6 @@ object PairStore {
         (t, c)
     }
 
-  /** The store's gating threshold: the recorded mining floor when present
-    * (the caller's value cross-checked exactly as in [[append]]), else the
-    * caller's own. The ingest gate MUST match at this floor — gating at a
-    * higher threshold against a lower-floor store (e.g. the default 0.6
-    * against a 0.25 contrastive-mining store) would pass docs whose
-    * [floor, threshold) cross edges [[appendGated]] then assumes empty,
-    * permanently holing the stored band the _PARAMS marker exists to
-    * protect (ADVICE r08). */
-  def gateThreshold(dir: String, minJaccard: Double = 0.6,
-                    maxBucket: Int = 4096): Double =
-    effectiveParams(dir, minJaccard, maxBucket)._1
-
   /** The live pairs generation directory (exposed for specs/tools). */
   def currentGenDir(dir: String): String =
     GenStore.readOrFail(dir, "PairStore").genDir(dir)
@@ -119,7 +105,7 @@ object PairStore {
       .write.mode("overwrite").partitionBy("pfx").parquet(path)
 
   // scan-pruning evidence for PairStoreSpec (files selected by the last
-  // ungated append's old-endpoint labels resolve read); flag-gated — the
+  // append's old-endpoint labels resolve read); flag-gated — the
   // capture builds an extra physical plan, a per-batch driver cost
   // production never pays
   @volatile private[graft] var scanDiagnostics = false
@@ -218,9 +204,8 @@ object PairStore {
     *              over {batch ids, old labels} is the true cluster min.
     * The old-endpoint resolve read is PRUNED to the touched old ids'
     * id-pfx partitions (one metadata-scale collect over the batch-bounded
-    * edge endpoints — the DedupIndex discipline; without it every ungated
-    * append paid a stored-labels corpus scan); gated appends
-    * ([[appendGated]]) have no cross edges and skip `cur` entirely. */
+    * edge endpoints — the DedupIndex discipline; without it every append
+    * paid a stored-labels corpus scan). */
   private def writeLabelDelta(batch: DataFrame, idCol: String, dir: String,
                               st: GenStore.State, segDir: String,
                               pairSchema: org.apache.spark.sql.types.StructType)
@@ -272,7 +257,7 @@ object PairStore {
   /** Resolved cluster labels pinned to `st`: the stored per-segment label
     * rows with the remap closure applied. The closure input is the
     * merges-since-compact table — tiny, and absent entirely for
-    * build-only or gated-append stores, where this is ONE table read.
+    * build-only stores, where this is ONE table read.
     * `pfxIn` prunes the read to the given id-pfx partitions (the append's
     * touched-old-ids cut; files of untouched pfx are statically skipped —
     * a strict superset of the resolve equi-join, so results per touched
@@ -312,58 +297,11 @@ object PairStore {
     * stored edge, lbl = min id of its near-dup cluster; docs absent here
     * are singletons (their own cluster). Equal by construction to
     * `TextDedup.ccLabels(pairs(dir))` — [[graft.PairStoreSpec]] asserts
-    * the bit-identity through build/append/gated-append/compact — but
+    * the bit-identity through build/append/compact — but
     * read from the maintained artifact instead of re-running the CC
     * fixpoint per consumer session. */
   def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     labelsFor(spark, dir, GenStore.readOrFail(dir, "PairStore"))
-
-  /** [[append]] for a GATED batch — one whose ids are already known to
-    * have no stored match at or above `minJaccard` (the near-dup ingest
-    * gate's survivors: [[graft.streaming.StreamingDedup.gateAndMaintainPairs]]
-    * derives them from the very matchBatchPairs result whose emptiness
-    * this method banks on). The cross-edge pass is provably a no-op for
-    * such a batch — every cross pair the incremental discipline would
-    * find was found by the gate and disqualified its doc — so only the
-    * batch's internal self-join edges are appended and the index
-    * extended, saving the second per-batch signature pass. Feeding an
-    * UNGATED batch here loses its cross edges; use [[append]]. */
-  def appendGated(batch: DataFrame, idCol: String, textCol: String,
-                  dir: String, minJaccard: Double = 0.6,
-                  maxBucket: Int = 4096,
-                  oracleParity: Boolean = true,
-                  batchId: Option[Long] = None): Unit = {
-    require(exists(dir), s"no complete PairStore at $dir")
-    val (thr, cap) = effectiveParams(dir, minJaccard, maxBucket)
-    val seg = batchId.map(GenStore.batchSeg).getOrElse(GenStore.freshSeg())
-    GenStore.appendSeg(dir, "PairStore", seg) { (st, segDir) =>
-      val p = TextDedup.nearDuplicatePairs(batch, idCol, textCol, thr,
-        cap, oracleParity)
-      p.write.mode("overwrite").parquet(s"$segDir/pairs")
-      // label delta, gated form: a gated batch has NO cross edges (the
-      // gate disqualified any doc with a stored match), so its clusters
-      // are purely internal — batch-scale CC, no stored-labels scan, no
-      // remaps, and min-id semantics hold globally because no component
-      // touches a stored one.
-      val stored = batch.sparkSession.read.schema(p.schema)
-        .parquet(s"$segDir/pairs")
-      writeLabels(TextDedup.ccLabels(stored.select(col("id1"), col("id2"))),
-        s"$segDir/labels", st.props("nPfx"))
-    }
-    DedupIndex.append(batch, idCol, textCol, s"$dir/index", oracleParity,
-      batchId)
-  }
-
-  /** Whether a batchId-keyed append is FULLY applied: the embedded index
-    * commits last, so its segment presence covers the pairs segment too. */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    DedupIndex.batchApplied(s"$dir/index", batchId)
-
-  /** The surviving doc ids of an already-applied gate batch (see
-    * [[DedupIndex.batchDocIds]]). */
-  def batchDocIds(spark: SparkSession, dir: String, batchId: Long,
-                  idCol: String): DataFrame =
-    DedupIndex.batchDocIds(spark, s"$dir/index", batchId, idCol)
 
   /** Compact the store: consolidate the pairs segments into the NEXT
     * generation's single base segment (~`pairFiles` files) and compact

@@ -357,7 +357,7 @@ object TextDedup {
     * bands of 2, same coefficients as [[minHashSignature]]. Default k=16 —
     * the SAME banding [[nearDuplicatePairs]] upgraded to in round 5
     * (band-collision probability 0.97 vs 0.83 at jac 0.6); until round 9
-    * the stored-index path stayed on k=8, so the streaming gates and
+    * the stored-index path stayed on k=8, so index-backed matches and
     * PairStore appends silently ran ~14 pp BELOW the batch pipeline's
     * measured recall. The store records its k (`bandK` prop) because band
     * rows are on-disk artifacts: [[DedupIndex.matchBatch]] bands each

@@ -723,9 +723,9 @@ private[graft] object TextQueries extends QueryLayer("text") {
 
     // The trained filter served from the STORED weight artifact — the
     // build/serve split the production deployment uses (train once
-    // offline, every scorer and the streaming ingest gate load the
-    // table). Training is deterministic, so scoring through the parquet
-    // round-trip is bit-identical to the inline chain (same oracle).
+    // offline, every scorer loads the table). Training is deterministic,
+    // so scoring through the parquet round-trip is bit-identical to the
+    // inline chain (same oracle).
     query("q_quality_classifier_stored")(qualityClassifierSql)((s, dir) =>
       operators.Classify.scoreLinear(
           Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0),

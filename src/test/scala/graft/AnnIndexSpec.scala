@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{AnnIndexStore, Clustering}
+import graft.operators.{AnnIndexStore, Clustering, GenStore}
 
 /** Persistent IVF-PQ index store: build/serve parity with the inline
   * trainer, and the incremental append contract (code with stored
@@ -118,6 +118,37 @@ class AnnIndexSpec extends AnyFunSuite {
       .orderBy("rank").collect()
     assert(top.head.getLong(2) == 100L && top.head.getLong(3) == 0L,
       s"appended duplicate not rank-1/dist-0: ${top.mkString(", ")}")
+  }
+
+  test("batchId append: a replayed batch is skipped; store and answers unchanged") {
+    // the store half of the streaming retry contract, pinned for the
+    // other stores by IncrIndexSpec and NoveltySpec
+    val base = df(corpusRows)
+    val dir = Files.createTempDirectory("annidx_bid").toString
+    AnnIndexStore.build(base, "vec_id", "embedding", dir, dim = 8,
+      nCells = 4, m = 4, k = 8)
+    val batch = df(Seq((100L, corpusRows(3)._2),
+      (101L, corpusRows(5)._2.map(_ + 0.5f))))
+    AnnIndexStore.append(batch, "vec_id", "embedding", dir, batchId = Some(5L))
+    val segs = GenStore.read(dir).get.segs
+    assert(segs == Vector(GenStore.BaseSeg, GenStore.batchSeg(5L)))
+    val seg = s"${AnnIndexStore.currentGenDir(dir)}/${GenStore.batchSeg(5L)}"
+    assert(spark.read.parquet(s"$seg/cells").select("id").distinct().count() == 2)
+    def segFiles: Long = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(java.nio.file.Paths.get(seg))
+      try s.iterator().asScala.count(_.toString.endsWith(".parquet")).toLong
+      finally s.close()
+    }
+    def answers = AnnIndexStore.query(base, "vec_id", "embedding", dir,
+        kNN = 3, nProbe = 2, refine = 10)
+      .collect().map(_.toSeq).toSet
+    val (files, before) = (segFiles, answers)
+
+    AnnIndexStore.append(batch, "vec_id", "embedding", dir, batchId = Some(5L))
+    assert(GenStore.read(dir).get.segs == segs, "a replay added a segment")
+    assert(segFiles == files, "a replay re-wrote its segment")
+    assert(answers == before, "a replay changed served answers")
   }
 
   test("compact consolidates appended small files; served answers bit-identical") {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -123,5 +124,26 @@ class ClassifySpec extends AnyFunSuite {
         (BigDecimal(r.getDecimal(2)), r.getBoolean(3))).toMap
     assert(out(1L) == ((BigDecimal(0), false)), s"oov doc: ${out(1L)}")
     assert(out(2L)._1 > 0 && out(2L)._2, s"pos doc: ${out(2L)}")
+  }
+
+  test("stored weights round-trip: load == trained table, scores identical") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val w = Classify.trainLinear(docs.filter(col("doc_id") % 5 === 0),
+      col("lang") === "en", "text")
+    val dir = Files.createTempDirectory("graft_clsw").toString
+    Classify.saveWeights(w, dir)
+    assert(Classify.weightsExist(dir))
+    val loaded = Classify.loadWeights(spark, dir)
+    val a = w.collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
+    val b = loaded.collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
+    assert(a == b, "weight artifact round-trip changed the model")
+    // serving through the artifact == serving the in-memory table
+    val rest = docs.filter(col("doc_id") % 5 =!= 0)
+    val inline = Classify.scoreLinear(rest, "doc_id", "text", w)
+      .collect().map(_.toSeq).toSet
+    val stored = Classify.scoreLinear(rest, "doc_id", "text", loaded)
+      .collect().map(_.toSeq).toSet
+    assert(inline == stored, "stored-weights scoring diverged from inline")
   }
 }

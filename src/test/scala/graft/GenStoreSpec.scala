@@ -27,8 +27,10 @@ class GenStoreSpec extends AnyFunSuite {
     assert(st.gen == 0 && st.segs == Vector("base") &&
       st.props == Map("nPfx" -> 4))
     GenStore.commitSeg(dir, 0, "b7")
-    assert(GenStore.read(dir).get.segs == Vector("base", "b7"))
-    assert(GenStore.batchApplied(dir, 7) && !GenStore.batchApplied(dir, 8))
+    val segs = GenStore.read(dir).get.segs
+    assert(segs == Vector("base", "b7"))
+    assert(segs.contains(GenStore.batchSeg(7)) &&
+      !segs.contains(GenStore.batchSeg(8)))
     // pre-v3 manifests read as absent (layout bump -> rebuild, never half-read)
     Files.writeString(Paths.get(s"$dir/_META"), "v2 nPfx=4 gen=0")
     assert(GenStore.read(dir).isEmpty)
@@ -143,7 +145,7 @@ class GenStoreSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(s"$dir/g0/b13/table"))
     assert(GenStore.read(dir).get.segs == Vector("base"),
       "manifest must not pick up uncommitted directories")
-    assert(!GenStore.batchApplied(dir, 13))
+    assert(!GenStore.read(dir).get.segs.contains(GenStore.batchSeg(13)))
   }
 
   test("readTableCached is bounded: newSession-per-call serving cannot pin sessions") {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{DedupIndex, TextDedup}
+import graft.operators.{DedupIndex, GenStore, TextDedup}
 
 /** Persistent incremental-dedup index: stored-index matches equal the
   * recompute path exactly, appends extend the corpus without re-reading
@@ -68,12 +68,15 @@ class IncrIndexSpec extends AnyFunSuite {
     val b1 = docs.filter(col("doc_id") % 5 === 0)
     val dir = Files.createTempDirectory("graft_didx_seq").toString
     DedupIndex.build(seed, "doc_id", "text", dir)
+    // the batch rows with no stored near-duplicate
+    def gate(batch: DataFrame): DataFrame = batch.join(
+      DedupIndex.matchBatch(batch, "doc_id", "text", dir)
+        .filter(!col("is_dup")).select(col("new_id").as("doc_id")),
+      Seq("doc_id"), "left_semi")
 
     // batch 1: gate against the seed corpus, then APPEND its survivors —
-    // the maintenance discipline the production gate runs per batch
-    val s1 = graft.streaming.StreamingDedup
-      .nearDupGate(dir, b1, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
+    // the maintenance discipline an ingest gate runs per batch
+    val s1 = gate(b1).collect().map(r => (r.getLong(0), r.getString(1)))
     assert(s1.nonEmpty)
     DedupIndex.append(s1.toSeq.toDF("doc_id", "text"), "doc_id", "text", dir)
 
@@ -82,9 +85,7 @@ class IncrIndexSpec extends AnyFunSuite {
     // -> same verdict); against the appended index every copy must drop.
     val b2 = s1.map { case (id, text) => (id + 1000000L, text) }
       .toSeq.toDF("doc_id", "text")
-    val s2 = graft.streaming.StreamingDedup
-      .nearDupGate(dir, b2, "doc_id", "text")
-      .collect()
+    val s2 = gate(b2).collect()
     assert(s2.isEmpty,
       s"${s2.length} copies of already-accepted docs slipped past the " +
         "appended index")
@@ -310,20 +311,23 @@ class IncrIndexSpec extends AnyFunSuite {
       .get(s"${DedupIndex.currentGenDir(dir)}/b42/shingles")
     java.nio.file.Files.createDirectories(stale)
     java.nio.file.Files.writeString(stale.resolve("part-junk.parquet"), "junk")
-    assert(!DedupIndex.batchApplied(dir, 42L))
+    def committed: Boolean =
+      GenStore.read(dir).get.segs.contains(GenStore.batchSeg(42L))
+    assert(!committed)
     assert(canon(DedupIndex.matchBatch(probe, "doc_id", "text", dir))
       .sameElements(beforeAppend), "uncommitted segment debris affected reads")
 
     // the retry overwrites the debris and commits once
     DedupIndex.append(batch, "doc_id", "text", dir, batchId = Some(42L))
-    assert(DedupIndex.batchApplied(dir, 42L))
+    assert(committed)
     val applied = canon(DedupIndex.matchBatch(probe, "doc_id", "text", dir))
     val rebuilt = canon(TextDedup.incrementalDedup(
       corpus.unionByName(batch), probe, "doc_id", "text"))
     assert(applied.sameElements(rebuilt),
       "batchId-keyed append diverged from a full rebuild")
-    assert(DedupIndex
-      .batchDocIds(spark, dir, 42L, "doc_id").count() == batch.count())
+    assert(spark.read
+      .parquet(s"${DedupIndex.currentGenDir(dir)}/${GenStore.batchSeg(42L)}/shingles")
+      .select("doc_id").distinct().count() == batch.count())
 
     // a second retry after full commit is a no-op (no duplicate rows)
     val files = parquetFiles(DedupIndex.currentGenDir(dir), "shingles")

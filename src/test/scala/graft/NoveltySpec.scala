@@ -97,30 +97,4 @@ class NoveltySpec extends AnyFunSuite {
     assert(NoveltyIndex.storedGrams(spark, dir).count() == distinct)
     assert(novelty() == 0L, "results unchanged across compaction")
   }
-
-  test("noveltyGateAndMaintain: sequential micro-batches screen against earlier survivors; batchId replay reproduces the survivor set") {
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    import graft.streaming.StreamingDedup
-    val dir = tmp()
-    NoveltyIndex.build(Seq((1L, "a b c d e")).toDF("doc_id", "text"),
-      "doc_id", "text", dir, n = 3)
-    def gate(rows: Seq[(Long, String)], b: Long): Set[Long] =
-      StreamingDedup.noveltyGateAndMaintain(dir,
-          rows.toDF("doc_id", "text"), "doc_id", "text",
-          minNoveltyBp = 5000L, batchId = Some(b))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    // batch 1: d10 verbatim of stored corpus (novelty 0 -> dropped),
-    // d11 fresh (kept -> its grams enter the store)
-    assert(gate(Seq((10L, "a b c d e"), (11L, "p q r s t")), 1L) == Set(11L))
-    // batch 2: d12 verbatim of batch-1 SURVIVOR d11 -> now dropped too;
-    // d13 fresh -> kept
-    assert(gate(Seq((12L, "p q r s t"), (13L, "x y z w v")), 2L) == Set(13L))
-    // simulated micro-batch retry: same batchId reproduces the committed
-    // survivor set instead of re-gating it to zero against the grown store
-    assert(gate(Seq((12L, "p q r s t"), (13L, "x y z w v")), 2L) == Set(13L))
-    // zero-survivor batch: replay of it stays empty
-    assert(gate(Seq((14L, "a b c d e")), 3L) == Set.empty[Long])
-    assert(gate(Seq((14L, "a b c d e")), 3L) == Set.empty[Long])
-  }
 }

@@ -109,153 +109,13 @@ class PairStoreSpec extends AnyFunSuite {
       "duplicate edges in the stored graph")
   }
 
-  test("gate-and-maintain over micro-batches == batch-mode gate-then-full-append") {
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").localCheckpoint()
-    val seed = docs.filter(col("doc_id") % 5 =!= 0)
-    val incoming = docs.filter(col("doc_id") % 5 === 0)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-
-    // reference: per batch, gate via the best-match verdict and run the
-    // FULL append (cross pass included) on the survivors
-    val refDir = Files.createTempDirectory("graft_pairs_ref").toString
-    PairStore.build(seed, "doc_id", "text", refDir)
-    val refSurvivors = scala.collection.mutable.ArrayBuffer.empty[Long]
-    incoming.grouped((incoming.size + 2) / 3).foreach { slice =>
-      val batch = slice.toDF("doc_id", "text")
-      val kept = graft.streaming.StreamingDedup.nearDupGate(
-          s"$refDir/index", batch, "doc_id", "text")
-        .localCheckpoint()
-      refSurvivors ++= kept.select("doc_id").collect().map(_.getLong(0))
-      PairStore.append(kept, "doc_id", "text", refDir)
-    }
-
-    // gated path: one match per batch, survivors appended via appendGated
-    // (cross pass skipped — provably empty for gated survivors)
-    val gatDir = Files.createTempDirectory("graft_pairs_gat").toString
-    PairStore.build(seed, "doc_id", "text", gatDir)
-    val gatSurvivors = scala.collection.mutable.ArrayBuffer.empty[Long]
-    incoming.grouped((incoming.size + 2) / 3).foreach { slice =>
-      val kept = graft.streaming.StreamingDedup.gateAndMaintainPairs(
-        gatDir, slice.toDF("doc_id", "text"), "doc_id", "text")
-      gatSurvivors ++= kept.select("doc_id").collect().map(_.getLong(0))
-    }
-
-    assert(gatSurvivors.toSet == refSurvivors.toSet,
-      "gate-and-maintain accepted a different survivor set")
-    assert(refSurvivors.size < incoming.size,
-      "fixture should drop at least one incoming doc")
-    val refPairs = canon(PairStore.pairs(spark, refDir))
-    val gatPairs = canon(PairStore.pairs(spark, gatDir))
-    assert(refPairs == gatPairs,
-      s"stored graphs diverged: ref=${refPairs.length} gated=${gatPairs.length}")
-    // and later batches must be gated against EARLIER survivors too: a
-    // verbatim copy of a batch-1 survivor under a fresh id must drop
-    val copied = gatSurvivors.headOption.map { id =>
-      val txt = docs.filter(col("doc_id") === id).select("text")
-        .collect().head.getString(0)
-      graft.streaming.StreamingDedup.gateAndMaintainPairs(
-          gatDir, Seq((id + 1000000L, txt)).toDF("doc_id", "text"),
-          "doc_id", "text")
-        .count()
-    }
-    assert(copied.contains(0L), "a copy of an accepted doc slipped the gate")
-  }
-
-  test("gate on a floor-threshold store gates at the RECORDED floor (no band hole)") {
-    // ADVICE r08: gateAndMaintainPairs(default 0.6) against a 0.25-floor
-    // store used to match at 0.6 while appendGated banked on "no stored
-    // match at or above the floor" — every cross edge in [0.25, 0.6) was
-    // permanently lost. The gate must resolve the store's recorded floor.
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").localCheckpoint()
-    val seed = docs.filter(col("doc_id") % 5 =!= 0)
-    val batch = docs.filter(col("doc_id") % 5 === 0).localCheckpoint()
-
-    // reference: gate AND full-append explicitly at the store's floor
-    val refDir = Files.createTempDirectory("graft_pairs_fref").toString
-    PairStore.build(seed, "doc_id", "text", refDir, minJaccard = 0.25)
-    val refKept = batch.join(
-        graft.operators.DedupIndex.matchBatchPairs(
-            batch, "doc_id", "text", s"$refDir/index", 0.25)
-          .select(col("new_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // fixture check input (pre-append: the index must not contain the batch)
-    val kept06 = batch.join(
-        graft.operators.DedupIndex.matchBatchPairs(
-            batch, "doc_id", "text", s"$refDir/index", 0.6)
-          .select(col("new_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .count()
-    PairStore.append(refKept, "doc_id", "text", refDir)
-    val refIds = refKept.select("doc_id").collect().map(_.getLong(0)).toSet
-
-    // gate under test: DEFAULT minJaccard argument at the call site
-    val dir = Files.createTempDirectory("graft_pairs_floorgate").toString
-    PairStore.build(seed, "doc_id", "text", dir, minJaccard = 0.25)
-    val kept = graft.streaming.StreamingDedup.gateAndMaintainPairs(
-        dir, batch, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    assert(kept == refIds,
-      s"gate ignored the recorded floor: extra=${kept -- refIds} " +
-        s"missing=${refIds -- kept}")
-    // non-vacuous only if some doc sits in the [0.25, 0.6) band against
-    // the seed — i.e. the 0.25 gate drops MORE than a 0.6 gate would
-    assert(kept.size < kept06,
-      "vacuous fixture: no batch doc in the [0.25, 0.6) cross band")
-    assert(canon(PairStore.pairs(spark, dir)) == canon(PairStore.pairs(spark, refDir)),
-      "stored graphs diverged between gated and explicit-floor paths")
-    // an explicitly contradictory gate threshold throws, never holes
-    val ex = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingDedup.gateAndMaintainPairs(
-        dir, batch, "doc_id", "text", minJaccard = 0.5)
-    }
-    assert(ex.getMessage.contains("recorded mining floor"))
-  }
-
-  test("gate retry (same batchId) reproduces survivors; graph gains no edges") {
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").localCheckpoint()
-    val dir = Files.createTempDirectory("graft_pairs_retry").toString
-    PairStore.build(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", dir)
-    val batch = docs.filter(col("doc_id") % 5 === 0).localCheckpoint()
-
-    val kept = graft.streaming.StreamingDedup.gateAndMaintainPairs(
-        dir, batch, "doc_id", "text", batchId = Some(3L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept.nonEmpty && PairStore.batchApplied(dir, 3L))
-    val graph = canon(PairStore.pairs(spark, dir))
-
-    // the retry-after-crash shape: the engine re-runs the same batchId
-    // AFTER both appends committed. Without replay detection every
-    // survivor would now match its own stored copy and be gated out,
-    // silently dropping the batch from the caller's sink; with it the
-    // committed survivor set is reproduced and the graph is unchanged.
-    val retried = graft.streaming.StreamingDedup.gateAndMaintainPairs(
-        dir, batch, "doc_id", "text", batchId = Some(3L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(retried == kept,
-      s"retry diverged: missing=${kept -- retried} extra=${retried -- kept}")
-    assert(canon(PairStore.pairs(spark, dir)) == graph,
-      "retry added edges to the stored graph")
-  }
-
-  test("stored cluster labels == recomputed CC through build/append/gated/compact") {
+  test("stored cluster labels == recomputed CC through build/append/compact") {
     // VERDICT r08 #8: the labels are part of the maintained artifact, so
     // consumers (q_dedup_clusters / q_cluster_sizes / keep-best) read
     // them instead of re-running the CC fixpoint per session. Exercises
     // every delta path: build labels, a MERGE of two stored clusters via
     // an appended bridge doc (the remap path), an old SINGLETON gaining
-    // its first edge, a gated append (internal-only labels), and the
-    // compact fold (remaps materialized away).
+    // its first edge, and the compact fold (remaps materialized away).
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val aTxt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -314,14 +174,6 @@ class PairStoreSpec extends AnyFunSuite {
       afterMerge(40L) == 10L, s"merge not reflected: $afterMerge")
     assert(afterMerge(30L) == 30L && afterMerge(41L) == 30L,
       s"old singleton's first edge mislabeled: $afterMerge")
-
-    // gated append: internal-only clusters (no cross edges by contract)
-    graft.streaming.StreamingDedup.gateAndMaintainPairs(dir,
-      Seq((50L, "fresh pair one two three four five six seven eight nine"),
-          (51L, "fresh pair one two three four five six seven eight nine"))
-        .toDF("doc_id", "text"), "doc_id", "text")
-    assert(labelsNow == recomputed)
-    assert(labelsNow(51L) == 50L)
 
     // compact folds the remaps into the labels; values unchanged
     val before = labelsNow

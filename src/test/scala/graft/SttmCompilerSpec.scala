@@ -53,6 +53,22 @@ class SttmCompilerSpec extends AnyFunSuite {
     assert(issues.exists(_.message.contains("must set changelog.mode=upsert")))
   }
 
+  test("upsert XREF whose graft.upsert.order lists no column is a Warn") {
+    // "," names no ranking column, so run() skips latest-by-key exactly as
+    // it does when the key is absent; the compile must say so
+    def upsertWarns(order: String): Boolean = PipelineCompiler.compile(
+        SttmSpec(DemoSpecs.deleteFlagPipeline.rows, SttmParser.matrixFromCsv(
+          "Key,EVENTS_ALL_VW,XREF_USER_DF\n" +
+            "changelog.mode,,upsert\n" +
+            s"\"graft.upsert.order\",,\"$order\"\n" +
+            "value.format,json,avro-registry\n")))
+      .issues.exists(i => i.level == SttmValidation.Warn &&
+        i.message.contains("no 'graft.upsert.order'"))
+    assert(upsertWarns(","), "an order of empty items must warn")
+    assert(upsertWarns(""), "an empty order must warn")
+    assert(!upsertWarns("TS,EVENT_ID"), "a real order must not warn")
+  }
+
   test("validation: JSON key starting with $ is an error") {
     val rows = SttmParser.mappingFromCsv(
       SttmRowCsv.header + "View,V1,C1,STRING,N,,JSON,$.bad,src,t,,,,,,,,,\n")
